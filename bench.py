@@ -11,7 +11,7 @@ Prints ONE JSON line:
 value = sum(cold query secs) + pipeline wall.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
      CLP_BENCH_PAGES (override pipeline fixture row count).
 """
 
@@ -29,7 +29,9 @@ import pyspark.sql.functions as F
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
 
     from clp_spark.session import get_spark
 

@@ -2,13 +2,13 @@
 
 Mirrors the knobs of the reference's compression/search jobs
 (/root/reference/components/job-orchestration/job_orchestration/scheduler/job_config.py)
-but expressed for a Spark job: sink fan-out width, skew salting, checkpoint
-location, shuffle sizing.
+but expressed for a Spark job: sink fan-out width, segmenting, checkpoint
+buckets, shuffle sizing, dictionary placement.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 # Placeholder bytes — same values as the reference so logtypes are
@@ -41,11 +41,6 @@ class PipelineConfig:
     # seg_id).
     num_segments: int = 4
     segment_window_days: float = 7.0
-
-    # skew: logtypes whose row share exceeds this fraction get salted
-    hot_logtype_threshold: float = 0.05
-    # salt fan-out for hot logtypes (pre-shuffle sub-splitting)
-    num_salt_buckets: int = 16
 
     # resume granularity: input rows are split into this many url-hash
     # buckets; each bucket commits atomically and is skipped on resume
@@ -85,5 +80,3 @@ class PipelineConfig:
     # ride with the encoded row; decode regenerates the original text
     # byte-exactly, and ts-range search pushes down on the ts_ms column.
     parse_timestamps: bool = False
-
-    extra_spark_conf: dict = field(default_factory=dict)

@@ -91,8 +91,7 @@ def build_logtype_dict(parsed: DataFrame, num_partitions: int = 8) -> DataFrame:
     """(logtype_id, logtype, num_vars, n_rows) — distinct templates with
     stable IDs. One groupBy yields the distinct set AND per-template row
     counts (num_vars is a function of the template, so min() is exact);
-    the counts make hot-template detection for skew salting free —
-    no second scan over the encoded table."""
+    the counts ride into the dictionary table at no extra scan."""
     # materialize the aggregate ONCE: both assign_stable_ids and the
     # join below consume it, and without the checkpoint the join side
     # re-runs the whole input scan + groupBy a second time
@@ -128,8 +127,8 @@ def build_dicts_small_pandas(
     """Fast path: both dictionaries collected, sorted, and ID'd on the
     driver (CLP's own model — dictionaries fit in memory:
     DictionaryReader.hpp loads them wholesale). Returns
-    (logtype_pdf, var_pdf, logtype_map, var_map), or None when a
-    dictionary exceeds sample_cap (caller falls back to the fully
+    (logtype_pdf, var_pdf, logtype_map, var_map, route_counts), or None
+    when a dictionary exceeds sample_cap (caller falls back to the fully
     distributed rank assignment). IDs are value-sorted ranks either way,
     so the two paths produce identical dictionaries.
 
@@ -137,11 +136,11 @@ def build_dicts_small_pandas(
     keys (lang + the segment window). When given, the logtype aggregate
     groups by (logtype, *extras) and is rolled up to the plain logtype
     dictionary driver-side, and the per-(logtype, *extras) counts come
-    back as a FIFTH tuple element — exact inputs for the analytic route
+    back as route_counts — exact inputs for the analytic route
     boundaries (route/fanout._route_with_bounds) at ZERO extra scans.
-    The 5th element is None (with the dictionary still built, via a
-    second agg over the same cache) if the grouped cardinality exceeds
-    the cap — the caller then falls back to the sampler route.
+    route_counts is None without extras, or (with the dictionary still
+    built, via a second agg) if the grouped cardinality exceeds the cap
+    — route_to_sinks then counts its cells itself.
 
     Scaling shape: the distinct aggregate is computed ONCE and cached;
     the cardinality guard is a count over the cache, and the value sort
@@ -169,8 +168,6 @@ def build_dicts_small_pandas(
         *[c.alias(n) for n, c in (route_count_cols or [])],
     )
 
-    from clp_spark.util import step_timer
-
     def _lt_plain(src) -> pd.DataFrame | None:
         lt_agg = (
             src.groupBy("logtype")
@@ -178,11 +175,9 @@ def build_dicts_small_pandas(
             .persist()
         )
         try:
-            with step_timer("dicts.lt_count"):
-                if lt_agg.count() > sample_cap:
-                    return None
-            with step_timer("dicts.lt_collect"):
-                return lt_agg.orderBy("logtype").toPandas()
+            if lt_agg.count() > sample_cap:
+                return None
+            return lt_agg.orderBy("logtype").toPandas()
         finally:
             lt_agg.unpersist()
 
@@ -195,14 +190,12 @@ def build_dicts_small_pandas(
             .persist()
         )
         try:
-            with step_timer("dicts.lt_count"):
-                grouped_n = g.count()
+            grouped_n = g.count()
             if grouped_n > sample_cap:
                 # grouped cardinality blew past the cap: rebuild the plain
                 # logtype dictionary over the same cache; no route counts
                 return _lt_plain(slim), None
-            with step_timer("dicts.lt_collect"):
-                counts_pdf = g.orderBy("logtype", *extra_names).toPandas()
+            counts_pdf = g.orderBy("logtype", *extra_names).toPandas()
         finally:
             g.unpersist()
         # len(lt_pdf) ≤ grouped_n ≤ sample_cap by construction (the
@@ -225,11 +218,9 @@ def build_dicts_small_pandas(
             .persist()
         )
         try:
-            with step_timer("dicts.v_count"):
-                if v_distinct.count() > sample_cap:
-                    return None
-            with step_timer("dicts.v_collect"):
-                return v_distinct.orderBy("value").toPandas()
+            if v_distinct.count() > sample_cap:
+                return None
+            return v_distinct.orderBy("value").toPandas()
         finally:
             v_distinct.unpersist()
 
@@ -241,14 +232,11 @@ def build_dicts_small_pandas(
         (lt_pdf, counts_pdf), v_pdf = f_lt.result(), f_v.result()
     if lt_pdf is None or v_pdf is None:
         return None
-    with step_timer("dicts.map_build"):
-        lt_pdf.insert(0, "logtype_id", range(len(lt_pdf)))
-        lt_map = dict(zip(lt_pdf["logtype"], lt_pdf["logtype_id"]))
-        v_pdf.insert(0, "var_id", range(len(v_pdf)))
-        v_map = dict(zip(v_pdf["value"], v_pdf["var_id"]))
-    if route_count_cols is not None:
-        return lt_pdf, v_pdf, lt_map, v_map, counts_pdf
-    return lt_pdf, v_pdf, lt_map, v_map
+    lt_pdf.insert(0, "logtype_id", range(len(lt_pdf)))
+    lt_map = dict(zip(lt_pdf["logtype"], lt_pdf["logtype_id"]))
+    v_pdf.insert(0, "var_id", range(len(v_pdf)))
+    v_map = dict(zip(v_pdf["value"], v_pdf["var_id"]))
+    return lt_pdf, v_pdf, lt_map, v_map, counts_pdf
 
 
 LOGTYPE_DICT_ARROW_SCHEMA = [
@@ -293,7 +281,7 @@ def build_dicts_small(
     r = build_dicts_small_pandas(parsed, sample_cap)
     if r is None:
         return None
-    lt_pdf, v_pdf, lt_map, v_map = r
+    lt_pdf, v_pdf, lt_map, v_map, _ = r
     spark = parsed.sparkSession
     lt_df = spark.createDataFrame(
         lt_pdf, "logtype_id long, logtype string, num_vars int, n_rows long"
@@ -400,12 +388,9 @@ def encode_with_maps(
     """Enrich with logtype_id + var IDs in one Arrow pass using broadcast
     maps — no joins, no extra jobs (pairs with build_dicts_small).
     Vectorized: see _encode_batches_arrow."""
-    from clp_spark.util import step_timer
-
     spark = parsed.sparkSession
-    with step_timer("encode.broadcast_maps"):
-        b_lt = spark.sparkContext.broadcast(logtype_map)
-        b_v = spark.sparkContext.broadcast(var_map)
+    b_lt = spark.sparkContext.broadcast(logtype_map)
+    b_v = spark.sparkContext.broadcast(var_map)
 
     drop = ("logtype", "var_strs", "var_types", "enc_prelim")
     keep = [c for c in parsed.columns if c not in drop]

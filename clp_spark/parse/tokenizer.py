@@ -1,4 +1,4 @@
-"""Distributed CLP-style tokenizer/encoder: Arrow-batched mapInPandas.
+"""Distributed CLP-style tokenizer/encoder: Arrow-batched mapInArrow.
 
 Independent (vectorized) implementation of the semantics in
 clp_spark.oracle.tokenizer — the pytest suite asserts exact agreement
@@ -9,16 +9,13 @@ between the two. Rules from the reference:
   - logtype escaping:         clp/ir/parsing.inc
 
 Design notes (scale):
-  - TWO engines, byte-identical output (fuzz-asserted vs the oracle):
-    `python` (mapInPandas, Arrow-batched, one compiled C-regex pass that
-    only visits variable tokens) and `sql` (pure JVM expressions:
-    regexp_extract_all + split + transform).
-  - MEASURED (500k docs, local[8], warm): python 3.4s vs sql 4.8s.
-    The SQL path loses because Spark higher-order-function lambdas are
-    evaluated interpreted (no whole-stage codegen) and the classifier
-    regexes re-run per token per derived column, while the Python path
-    is one C-regex scan per message touching only variable tokens.
-    Default is therefore `python`; switch via CLP_SPARK_TOKENIZER=sql.
+  - ONE engine: the byte-level numpy scan (parse/npscan.py) over
+    mapInArrow — the whole Arrow batch is one uint8 array and the output
+    list columns are assembled from offset/value buffers, with no
+    per-row or per-token Python (the per-row loop, not the Arrow
+    transfer, is what a Python UDF costs). Batches whose text holds the
+    control bytes 0x00-0x03 fall back to `parse_one`, the scalar
+    C-regex tokenizer below.
   - encoded int/float values are computed here; dictionary-variable IDs
     are enriched later (clp_spark.dicts) so this stage needs no global
     state and is embarrassingly parallel at any cluster size.
@@ -26,12 +23,7 @@ Design notes (scale):
 
 from __future__ import annotations
 
-import os
 import re
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import functions as F
 
 from clp_spark.config import (
     PLACEHOLDER_DICT,
@@ -171,293 +163,22 @@ def parse_one(msg: str):
     return "".join(lt), vs, vt, ev
 
 
-def _parse_batch_vec(texts: pd.Series) -> pd.DataFrame:
-    """Whole-batch vectorized twin of _parse_batch: ZERO per-token Python.
+def tokenize_df(
+    df,
+    text_col: str = "text",
+    passthrough: list[str] | None = None,
+):
+    """pages → parsed messages. Narrow map, no shuffle.
 
-    One pandas str.split per message runs the same classifying C-regex
-    as parse_one (pandas mirrors re.split, so the five alternation
-    groups arrive as aligned stride-6 slots); everything after — token
-    classification, int64-range and 16-digit demotions, float
-    bit-packing, placeholder substitution, logtype reassembly — is
-    numpy column algebra over the flattened slot arrays. The only
-    remaining per-row Python is one C-level ''.join for the logtype.
-    Messages containing placeholder/escape bytes (vanishingly rare)
-    are recomputed with parse_one for the exact translate semantics.
-    Fuzz-asserted byte-identical to the oracle (test_tokenizer_fuzz).
-    """
-    import numpy as np
-
-    n_rows = len(texts)
-    empty = pd.DataFrame(
-        {
-            "logtype": pd.Series([], dtype=object),
-            "var_strs": pd.Series([], dtype=object),
-            "var_types": pd.Series([], dtype=object),
-            "enc_prelim": pd.Series([], dtype=object),
-            "n_vars": pd.Series([], dtype="int32"),
-            "raw_bytes": pd.Series([], dtype="int64"),
-        }
-    )
-    if n_rows == 0:
-        return empty
-    msgs = texts.fillna("").astype(str).reset_index(drop=True)
-    nb = msgs.str.encode("utf-8").str.len().to_numpy(dtype=np.int64)
-
-    splits = msgs.str.split(_VAR_RE, regex=True)
-    lens = splits.str.len().to_numpy(dtype=np.int64)
-    flat = np.concatenate(splits.to_numpy())
-    starts = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(lens, out=starts[1:])
-    idx_in_row = np.arange(starts[-1], dtype=np.int64) - np.repeat(
-        starts[:-1], lens
-    )
-    mod = idx_in_row % 6
-
-    s1 = flat[mod == 1]  # group i (int syntax)
-    s2 = flat[mod == 2]  # group f (float syntax)
-    i_cand = pd.notna(s1)
-    f_cand = pd.notna(s2)
-    tok = s1.copy()
-    tok[f_cand] = s2[f_cand]
-    rest = ~(i_cand | f_cand)
-    for k in (3, 4, 5):  # d / e / h → dictionary var
-        sk = flat[mod == k]
-        m = rest & pd.notna(sk)
-        tok[m] = sk[m]
-        rest &= ~m
-
-    total_toks = len(tok)
-    vt = np.full(total_toks, VT_DICT, dtype=np.int32)
-    ev = np.zeros(total_toks, dtype=np.int64)
-    ph = np.full(total_toks, PLACEHOLDER_DICT, dtype=object)
-
-    # ---- int vars: parse + int64-range demotion ----
-    if i_cand.any():
-        ti = pd.Series(tok[i_cand], dtype=object)
-        ndig = ti.str.len().to_numpy(np.int64) - ti.str.startswith(
-            "-"
-        ).to_numpy(bool)
-        safe = ndig <= 18  # ≤18 digits always fits int64
-        vals = np.zeros(len(ti), dtype=np.int64)
-        ok = np.ones(len(ti), dtype=bool)
-        if safe.any():
-            vals[safe] = pd.to_numeric(ti[safe]).to_numpy(np.int64)
-        for j in np.flatnonzero(~safe):  # 19/20-digit: exact check
-            v = int(ti.iloc[j])
-            if _INT64_MIN <= v <= _INT64_MAX:
-                vals[j] = v
-            else:
-                ok[j] = False  # out-of-range integer text → dict var
-        i_pos = np.flatnonzero(i_cand)[ok]
-        vt[i_pos] = VT_INT
-        ev[i_pos] = vals[ok]
-        ph[i_pos] = PLACEHOLDER_INT
-
-    # ---- float vars: 54-bit packing + >16-digit demotion ----
-    if f_cand.any():
-        tf = pd.Series(tok[f_cand], dtype=object)
-        neg = tf.str.startswith("-").to_numpy(bool)
-        body = tf.str.lstrip("-")  # float syntax has one optional lead -
-        digits = body.str.replace(".", "", regex=False)
-        ndig = digits.str.len().to_numpy(np.int64)
-        ok = ndig <= 16
-        dot = body.str.find(".").to_numpy(np.int64)
-        dec_pos = body.str.len().to_numpy(np.int64) - 1 - dot
-        dg = np.zeros(len(tf), dtype=np.uint64)
-        if ok.any():
-            dg[ok] = (
-                pd.to_numeric(digits[ok]).to_numpy(np.int64).astype(np.uint64)
-            )
-        e = np.where(neg, np.uint64(1 << 55), np.uint64(0))
-        e = e | (dg & np.uint64((1 << 54) - 1))
-        e = (e << np.uint64(4)) | (
-            (ndig - 1).astype(np.uint64) & np.uint64(0x0F)
-        )
-        e = (e << np.uint64(4)) | (
-            (dec_pos - 1).astype(np.uint64) & np.uint64(0x0F)
-        )
-        f_pos = np.flatnonzero(f_cand)[ok]
-        vt[f_pos] = VT_FLOAT
-        ev[f_pos] = e.view(np.int64)[ok]  # view wraps like the 2^64 fold
-        ph[f_pos] = PLACEHOLDER_FLOAT
-
-    # ---- logtype: statics interleaved with placeholders, one join/row ----
-    statics = flat[mod == 0]
-    n_toks = (lens - 1) // 6
-    out_lens = 2 * n_toks + 1
-    out_starts = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(out_lens, out=out_starts[1:])
-    out_flat = np.empty(out_starts[-1], dtype=object)
-    out_idx = np.arange(out_starts[-1], dtype=np.int64) - np.repeat(
-        out_starts[:-1], out_lens
-    )
-    even = (out_idx & 1) == 0
-    out_flat[even] = statics
-    out_flat[~even] = ph
-    logtypes = [
-        "".join(a) for a in np.split(out_flat, out_starts[1:-1])
-    ]
-
-    tok_bounds = np.cumsum(n_toks)[:-1]
-    var_strs = [list(a) for a in np.split(tok, tok_bounds)]
-    var_types = [a.tolist() for a in np.split(vt, tok_bounds)]
-    enc = [a.tolist() for a in np.split(ev, tok_bounds)]
-
-    out = pd.DataFrame(
-        {
-            "logtype": logtypes,
-            "var_strs": var_strs,
-            "var_types": var_types,
-            "enc_prelim": enc,
-            "n_vars": n_toks.astype(np.int32),
-            "raw_bytes": nb,
-        }
-    )
-
-    # escape-needing rows: exact scalar semantics (rare — gated on one
-    # C-level scan of the whole batch)
-    esc = msgs.str.contains("[\\\\\x11\x12\x13]", regex=True).to_numpy(bool)
-    for pos in np.flatnonzero(esc):
-        l, s, t, e2 = parse_one(msgs.iloc[pos])
-        out.iat[pos, 0] = l
-        out.iat[pos, 1] = s
-        out.iat[pos, 2] = t
-        out.iat[pos, 3] = e2
-    return out
-
-
-def _parse_batch(texts: pd.Series) -> pd.DataFrame:
-    logtypes = []
-    var_strs = []
-    var_types = []
-    enc = []
-    nv = []
-    nb = []
-    for msg in texts:
-        l, s, t, e = parse_one(msg if msg is not None else "")
-        logtypes.append(l)
-        var_strs.append(s)
-        var_types.append(t)
-        enc.append(e)
-        nv.append(len(s))
-        nb.append(len(msg.encode("utf-8")) if msg is not None else 0)
-    return pd.DataFrame(
-        {
-            "logtype": logtypes,
-            "var_strs": var_strs,
-            "var_types": var_types,
-            "enc_prelim": enc,
-            "n_vars": nv,
-            "raw_bytes": nb,
-        }
-    )
-
-
-# ---------------------------------------------------------------------------
-# JVM-expression engine: the same tokenizer semantics as parse_one, built
-# entirely from Spark SQL expressions so the parse stage is whole-stage
-# codegen (no Python workers, no Arrow transfer). Lookarounds pin matches
-# to maximal token-char runs exactly like _VAR_RE; int/float classification
-# is done per matched token with rlike + try_cast, mirroring the i/f
-# alternation order (an int64-range or 16-digit check failure demotes the
-# token to a dictionary var, identical to the Python branches above).
-_VAR_PATTERN_J = (
-    rf"(?<![{_TC}])"
-    rf"(?:[{_TC}]*[0-9][{_TC}]*"
-    rf"|(?<==)[{_TC}]*[A-Za-z][{_TC}]*"
-    rf"|[0-9a-fA-F]{{2,}})"
-    rf"(?![{_TC}])"
-)
-_INT_RE_J = r"^(0|-?[1-9][0-9]*)$"
-_FLOAT_RE_J = r"^-?[0-9]*\.[0-9]+$"
-
-
-def _esc_expr(col):
-    # same semantics as str.translate(_ESC_TRANS): escape backslash first,
-    # then placeholders (sequential == simultaneous here because the
-    # escape prefix is escaped before placeholders are touched and
-    # placeholder bytes are never produced by earlier replacements)
-    c = F.replace(col, F.lit(PLACEHOLDER_ESCAPE), F.lit(PLACEHOLDER_ESCAPE * 2))
-    for ph in (PLACEHOLDER_INT, PLACEHOLDER_DICT, PLACEHOLDER_FLOAT):
-        c = F.replace(c, F.lit(ph), F.lit(PLACEHOLDER_ESCAPE + ph))
-    return c
-
-
-def tokenize_exprs(text_col: str = "text") -> dict:
-    """Column expressions computing the PARSED_FIELDS from `text_col`."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    toks = F.regexp_extract_all(t, F.lit(_VAR_PATTERN_J), 0)
-    statics = F.split(t, _VAR_PATTERN_J, -1)
-
-    def is_int(x):
-        return x.rlike(_INT_RE_J) & x.try_cast("long").isNotNull()
-
-    def is_float(x):
-        return x.rlike(_FLOAT_RE_J) & (
-            F.length(F.replace(F.replace(x, F.lit(".")), F.lit("-"))) <= 16
-        )
-
-    def f_enc(x):
-        # 54-bit float packing (EncodedVariableInterpreter.cpp:113-140);
-        # Java long arithmetic wraps exactly like the Python 2^64 fold
-        neg = x.startswith("-")
-        body = F.when(neg, F.substr(x, F.lit(2))).otherwise(x)
-        dot = F.instr(body, ".")
-        digits = F.replace(body, F.lit("."))
-        num_digits = F.length(digits)
-        decimal_pos = F.length(body) - dot
-        enc = F.when(neg, F.lit(1 << 55).cast("long")).otherwise(F.lit(0).cast("long"))
-        enc = enc.bitwiseOR(digits.cast("long"))
-        enc = F.shiftleft(enc, 4).bitwiseOR(
-            (num_digits - 1).bitwiseAND(F.lit(15)).cast("long")
-        )
-        enc = F.shiftleft(enc, 4).bitwiseOR(
-            (decimal_pos - 1).bitwiseAND(F.lit(15)).cast("long")
-        )
-        return enc
-
-    vt = F.transform(
-        toks,
-        lambda x: F.when(is_int(x), F.lit(VT_INT))
-        .when(is_float(x), F.lit(VT_FLOAT))
-        .otherwise(F.lit(VT_DICT))
-        .cast("int"),
-    )
-    ev = F.transform(
-        toks,
-        lambda x: F.when(is_int(x), x.try_cast("long"))
-        .when(is_float(x), f_enc(x))
-        .otherwise(F.lit(0).cast("long")),
-    )
-    ph = F.transform(
-        toks,
-        lambda x: F.when(is_int(x), F.lit(PLACEHOLDER_INT))
-        .when(is_float(x), F.lit(PLACEHOLDER_FLOAT))
-        .otherwise(F.lit(PLACEHOLDER_DICT)),
-    )
-    esc_statics = F.transform(statics, _esc_expr)
-    n = F.size(toks)
-    # logtype = statics[0]+ph[0]+statics[1]+...+statics[n]
-    head = F.array_join(
-        F.zip_with(F.slice(esc_statics, 1, n), ph, lambda s, p: F.concat(s, p)), ""
-    )
-    return {
-        "logtype": F.concat(head, F.element_at(esc_statics, -1)),
-        "var_strs": toks,
-        "var_types": vt,
-        "enc_prelim": ev,
-        "n_vars": n.cast("int"),
-        "raw_bytes": F.octet_length(t).cast("long"),
-    }
-
-
-def _tokenize_df_arrow(df, text_col: str, passthrough: list[str]):
-    """numpy-engine tokenize: mapInArrow over the byte-level vectorized
-    scan (clp_spark.parse.npscan). The whole batch is one uint8 array;
-    output list columns are built straight from Arrow offset/value
-    buffers — no pandas, no per-row or per-token Python. Batches whose
-    text contains control bytes 0x00-0x03 fall back to the scalar
-    engine (never present in real corpora; fuzz covers them)."""
+    Keeps `passthrough` columns (default: url, warc_ts, lang) and appends
+    the parsed fields. mapInArrow over the byte-level vectorized scan
+    (clp_spark.parse.npscan): the whole batch is one uint8 array; output
+    list columns are built straight from Arrow offset/value buffers — no
+    pandas, no per-row or per-token Python. Batches whose text contains
+    control bytes 0x00-0x03 fall back to `parse_one` (never present in
+    real corpora; fuzz covers them)."""
+    if passthrough is None:
+        passthrough = [c for c in ("url", "warc_ts", "lang") if c in df.columns]
     src = df.select(*passthrough, text_col)
     head = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
@@ -554,50 +275,3 @@ def _tokenize_df_arrow(df, text_col: str, passthrough: list[str]):
             yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
     return src.mapInArrow(run, schema=out_schema)
-
-
-def tokenize_df(
-    df,
-    text_col: str = "text",
-    passthrough: list[str] | None = None,
-    engine: str | None = None,
-):
-    """pages → parsed messages. Narrow map, no shuffle.
-
-    Keeps `passthrough` columns (default: url, warc_ts, lang) and appends
-    the parsed fields. `engine`:
-      "numpy"  (default) — byte-level vectorized scan (npscan.py) over
-               mapInArrow; measured 2.6× the scalar engine single-core
-               and zero per-token Python;
-      "python" — scalar-regex mapInPandas (the previous default);
-      "sql"    — pure JVM expressions (whole-stage codegen, but HOF
-               lambdas are interpreted — measured slower, kept for A/B).
-    All engines produce byte-identical output (fuzz-asserted); override
-    via the CLP_SPARK_TOKENIZER env var.
-    """
-    if passthrough is None:
-        passthrough = [c for c in ("url", "warc_ts", "lang") if c in df.columns]
-    engine = engine or os.environ.get("CLP_SPARK_TOKENIZER", "numpy")
-    if engine == "sql":
-        exprs = tokenize_exprs(text_col)
-        return df.select(
-            *passthrough, *[c.alias(name) for name, c in exprs.items()]
-        )
-    if engine == "numpy":
-        return _tokenize_df_arrow(df, text_col, passthrough)
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema if f.name in passthrough
-    )
-    out_schema = out_schema + ", " + PARSED_FIELDS
-
-    cols = passthrough + [text_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = _parse_batch(pdf[text_col])
-            yield pd.concat(
-                [pdf[passthrough].reset_index(drop=True), parsed], axis=1
-            )
-
-    return df.select(*cols).mapInPandas(run, schema=out_schema)

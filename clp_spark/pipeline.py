@@ -1,11 +1,11 @@
 """End-to-end compress job: pages → parse → dicts → encode → route → metrics.
 
 Spark shape (SURVEY.md §3.1): one logical job —
-  read pages → mapInPandas(tokenize+encode)            [narrow, no shuffle]
+  read pages → mapInArrow(tokenize)                     [narrow, no shuffle]
   → build logtype/var dicts (2 distinct aggs + stable-ID rank)
-  → enrich (broadcast dict join / broadcast-map patch)  [no shuffle]
-  → fan-out to per-sink parquet partitions (1 salted shuffle)
-  → per-sink aggregates → metrics table
+  → encode (broadcast-map Arrow pass / dictionary join)  [no shuffle]
+  → fan-out to per-sink parquet partitions (1 analytic range shuffle)
+  → per-segment summary → manifests + metrics table (driver-written)
 
 Checkpointing: the parse phase commits per url-hash bucket; dict/encode/
 route phases commit as whole phases (their inputs are the committed
@@ -25,7 +25,6 @@ from clp_spark.config import PipelineConfig
 from clp_spark.dicts.build import (
     LOGTYPE_DICT_ARROW_SCHEMA,
     VAR_DICT_ARROW_SCHEMA,
-    build_dicts_small,
     build_dicts_small_pandas,
     build_logtype_dict,
     build_var_dict,
@@ -34,20 +33,19 @@ from clp_spark.dicts.build import (
     write_dict_parquet,
 )
 from clp_spark.parse.tokenizer import tokenize_df
-from clp_spark.util import spread, step_timer
+from clp_spark.util import spread
 from clp_spark.route.fanout import (
     add_seg_id,
     add_sink_id,
+    bounds_from_cells,
     route_to_sinks,
     segment_expr,
     segment_summary,
-    sink_metrics,
-    sink_var_cardinality,
 )
 
 # above this many (logtype, lang, window) cells the driver-side bounds
-# construction (a Python xxhash64 per cell) stops being free; fall back
-# to the sampler route rather than serialize seconds on the driver
+# construction (a Python xxhash64 per cell) stops being free; route_to_sinks
+# then counts the (sink, seg, logtype) cells itself with one aggregation
 _MAX_BOUNDS_CELLS = 100_000
 
 
@@ -65,7 +63,7 @@ def _route_bounds(counts_pdf, lt_map: dict, num_sinks: int):
     rows get in add_sink_id)."""
     from clp_spark.oracle.xxhash import pmod, spark_xxhash64
 
-    if counts_pdf is None or len(counts_pdf) == 0 or len(counts_pdf) > _MAX_BOUNDS_CELLS:
+    if counts_pdf is None or len(counts_pdf) > _MAX_BOUNDS_CELLS:
         return None
     import pandas as pd
 
@@ -85,17 +83,7 @@ def _route_bounds(counts_pdf, lt_map: dict, num_sinks: int):
             "n": counts_pdf["n_rows"].astype("int64"),
         }
     )
-    cells = (
-        cells.groupby(["sink_id", "seg_id", "logtype_id"], sort=True)["n"]
-        .sum()
-        .reset_index()
-    )
-    total = int(cells["n"].sum())
-    cells["_cum_before"] = (
-        cells["n"].cumsum().shift(1, fill_value=0).astype("float64")
-    )
-    cells["_cell_rows"] = cells["n"].astype("float64")
-    return cells.drop(columns=["n"]), total
+    return bounds_from_cells(cells)
 
 
 def _pa_type(dt):
@@ -147,7 +135,7 @@ def _write_driver_parquet(dirpath: str, cols: dict, types: dict) -> None:
 
 
 def _write_summary_derived(
-    summary_pdf, summary_fields, seg_cols, out_dir: str, cfg: PipelineConfig
+    summary_pdf, summary_fields, seg_cols, out_dir: str
 ) -> None:
     """Logtype manifest + ts zone map, derived driver-side from the
     collected segment summary (a (sink, seg)-grouped frame — CLP-small
@@ -184,12 +172,11 @@ def _write_summary_derived(
 
 
 def _write_metrics_driver(
-    summary_pdf, vcard_pdf, summary_fields, ts_cols, metrics_dir: str,
-    cfg: PipelineConfig,
+    summary_pdf, vcard_pdf, summary_fields, ts_cols, metrics_dir: str
 ) -> None:
-    """Per-sink metrics aggregated driver-side from the segment summary
-    (rows/cardinality/byte sums over a tiny frame) + the var-cardinality
-    counts from the one remaining distributed bookkeeping aggregation."""
+    """The one per-sink metrics writer: aggregated driver-side from the
+    segment summary (rows/cardinality/byte sums over a tiny frame) + the
+    var-cardinality counts from the distinct (sink, var) aggregation."""
     import pandas as pd
     import pyarrow as pa
 
@@ -222,10 +209,8 @@ def _write_metrics_driver(
     types = {
         "sink_id": pa.int64(),
         "rows": pa.int64(),
-        # countDistinct in the Spark fallback (sink_metrics) emits
-        # LongType — the two writers must produce one schema, or a
-        # resume through phase 4 yields a metrics table strict readers
-        # can't union with a clean run's
+        # LongType, as Spark's countDistinct would emit: strict readers
+        # union metrics tables across runs and across gc refreshes
         "logtype_cardinality": pa.int64(),
         "n_encoded_vars": pa.int64(),
         "encoded_bytes": pa.int64(),
@@ -281,6 +266,73 @@ def _parse_phase(
     )
 
 
+def _build_dicts(
+    parsed: DataFrame,
+    cfg: PipelineConfig,
+    dicts_dir: str | None = None,
+    route_count_cols: list | None = None,
+) -> tuple:
+    """The one dictionary choice: driver maps when both dictionaries fit
+    `cfg.driver_dict_cap` (one aggregation each, value-sorted on the
+    driver), else the fully distributed range-ranked build. Both give
+    the same value-sorted-rank IDs.
+
+    Returns (logtype_dict, var_dict, logtype_map, var_map, route_counts).
+    The maps and the route counts (see build_dicts_small_pandas) are None
+    on the distributed path. With `dicts_dir` the dictionaries are
+    written there and the frames returned are the read-back tables."""
+    spark = parsed.sparkSession
+    small = build_dicts_small_pandas(
+        parsed, cfg.driver_dict_cap, route_count_cols=route_count_cols
+    )
+    if small is not None:
+        lt_pdf, v_pdf, lt_map, v_map, route_counts = small
+        if dicts_dir is None:
+            lt_dict = spark.createDataFrame(
+                lt_pdf, "logtype_id long, logtype string, num_vars int, n_rows long"
+            )
+            v_dict = spark.createDataFrame(v_pdf, "var_id long, value string")
+        else:
+            write_dict_parquet(
+                lt_pdf,
+                os.path.join(dicts_dir, "logtype"),
+                LOGTYPE_DICT_ARROW_SCHEMA,
+                cfg.compression_codec,
+            )
+            write_dict_parquet(
+                v_pdf,
+                os.path.join(dicts_dir, "var"),
+                VAR_DICT_ARROW_SCHEMA,
+                cfg.compression_codec,
+            )
+    else:
+        lt_map = v_map = route_counts = None
+        lt_dict = build_logtype_dict(parsed, cfg.dict_id_partitions)
+        v_dict = build_var_dict(parsed, cfg.dict_id_partitions)
+        if dicts_dir is not None:
+            lt_dict.write.mode("overwrite").parquet(os.path.join(dicts_dir, "logtype"))
+            v_dict.write.mode("overwrite").parquet(os.path.join(dicts_dir, "var"))
+    if dicts_dir is not None:
+        lt_dict = spark.read.parquet(os.path.join(dicts_dir, "logtype"))
+        v_dict = spark.read.parquet(os.path.join(dicts_dir, "var"))
+    return lt_dict, v_dict, lt_map, v_map, route_counts
+
+
+def _encode(
+    parsed: DataFrame,
+    lt_dict: DataFrame,
+    v_dict: DataFrame,
+    lt_map: dict | None,
+    v_map: dict | None,
+    cfg: PipelineConfig,
+) -> DataFrame:
+    """Broadcast-map Arrow encode when the driver maps exist, else the
+    dictionary-join encode."""
+    if lt_map is not None:
+        return encode_with_maps(parsed, lt_map, v_map)
+    return encode_with_dicts(parsed, lt_dict, v_dict, cfg.driver_dict_cap)
+
+
 def compress_df(
     pages: DataFrame,
     cfg: PipelineConfig | None = None,
@@ -296,14 +348,8 @@ def compress_df(
     """
     cfg = cfg or PipelineConfig()
     parsed = _parse_phase(pages, cfg, text_col, passthrough).persist()
-    small = build_dicts_small(parsed, cfg.driver_dict_cap)
-    if small is not None:
-        lt_dict, v_dict, lt_map, v_map = small
-        encoded = encode_with_maps(parsed, lt_map, v_map)
-    else:
-        lt_dict = build_logtype_dict(parsed, cfg.dict_id_partitions)
-        v_dict = build_var_dict(parsed, cfg.dict_id_partitions)
-        encoded = encode_with_dicts(parsed, lt_dict, v_dict, cfg.driver_dict_cap)
+    lt_dict, v_dict, lt_map, v_map, _ = _build_dicts(parsed, cfg)
+    encoded = _encode(parsed, lt_dict, v_dict, lt_map, v_map, cfg)
     sink_cols = tuple(c for c in sink_cols if c in encoded.columns)
     encoded = add_sink_id(encoded, cfg.num_sinks, cols=sink_cols)
     return encoded, lt_dict, v_dict
@@ -379,15 +425,12 @@ def compress(
     parsed_all = spark.read.schema(parsed_schema).parquet(parsed_dir)
 
     # ---- phase 2: dictionaries (deterministic IDs at any parallelism) ----
-    # Fast path: dictionaries are CLP-small → one collect per dict,
-    # driver-side value-sort. Fallback: fully distributed range-ranked
-    # IDs. Both produce the same value-sorted-rank dictionaries.
-    lt_map = v_map = lt_pdf = route_counts = None
+    # the routing counts (exact per-(logtype, lang, window) rows for the
+    # analytic route boundaries) ride along with the logtype aggregation
+    # — same scan, slightly wider group key
+    lt_map = v_map = route_counts = None
     if "dicts" not in manifest.committed("dicts"):
         t0 = time.time()
-        # the routing counts (exact per-(logtype, lang, window) rows for
-        # the analytic route boundaries) ride along with the logtype
-        # aggregation — same scan, slightly wider group key
         extras = []
         if "lang" in parsed_all.columns:
             extras.append(("lang", F.col("lang")))
@@ -395,206 +438,49 @@ def compress(
             parsed_all, cfg.num_segments, cfg.segment_window_days
         )
         extras.append(("_seg", seg_col))
-        small = build_dicts_small_pandas(
-            parsed_all, cfg.driver_dict_cap, route_count_cols=extras
+        lt_dict, v_dict, lt_map, v_map, route_counts = _build_dicts(
+            parsed_all, cfg, dicts_dir, route_count_cols=extras
         )
-        if small is not None:
-            lt_pdf, v_pdf, lt_map, v_map, route_counts = small
-            with step_timer("dicts.write_parquet"):
-                write_dict_parquet(
-                    lt_pdf,
-                    os.path.join(dicts_dir, "logtype"),
-                    LOGTYPE_DICT_ARROW_SCHEMA,
-                    cfg.compression_codec,
-                )
-                write_dict_parquet(
-                    v_pdf,
-                    os.path.join(dicts_dir, "var"),
-                    VAR_DICT_ARROW_SCHEMA,
-                    cfg.compression_codec,
-                )
-            lt_card, v_card = len(lt_map), len(v_map)
-        else:
-            build_logtype_dict(parsed_all, cfg.dict_id_partitions).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(dicts_dir, "logtype"))
-            build_var_dict(parsed_all, cfg.dict_id_partitions).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(dicts_dir, "var"))
-            lt_card = spark.read.parquet(os.path.join(dicts_dir, "logtype")).count()
-            v_card = spark.read.parquet(os.path.join(dicts_dir, "var")).count()
         manifest.commit(
             "dicts",
             "dicts",
             run_id,
-            logtype_cardinality=lt_card,
-            var_cardinality=v_card,
+            logtype_cardinality=len(lt_map) if lt_map is not None else lt_dict.count(),
+            var_cardinality=len(v_map) if v_map is not None else v_dict.count(),
             wall_ms=int(1000 * (time.time() - t0)),
         )
-    lt_dict = spark.read.parquet(os.path.join(dicts_dir, "logtype"))
-    v_dict = spark.read.parquet(os.path.join(dicts_dir, "var"))
+    else:
+        lt_dict = spark.read.parquet(os.path.join(dicts_dir, "logtype"))
+        v_dict = spark.read.parquet(os.path.join(dicts_dir, "var"))
 
-    # ---- phase 3: encode + route (salted fan-out, atomic overwrite) ----
-    encoded_schema = None
-    if "route" not in manifest.committed("route"):
-        t0 = time.time()
-        if lt_map is None:
+    # ---- phase 3: encode + route (one analytic range shuffle) ----
+    need_route = "route" not in manifest.committed("route")
+    t0 = time.time()
+    if need_route:
+        if lt_map is None and (
             # resume path: reload dictionaries as driver maps only when
             # BOTH fit (a large logtype dict must not be collected just
             # because the var dict happens to be small)
-            if (
-                v_dict.count() <= cfg.driver_dict_cap
-                and lt_dict.count() <= cfg.driver_dict_cap
-            ):
-                lt_map = {
-                    r["logtype"]: r["logtype_id"] for r in lt_dict.collect()
-                }
-                v_map = {r["value"]: r["var_id"] for r in v_dict.collect()}
-        if lt_map is not None:
-            encoded = encode_with_maps(parsed_all, lt_map, v_map)
-        else:
-            encoded = encode_with_dicts(
-                parsed_all, lt_dict, v_dict, cfg.driver_dict_cap
-            )
+            v_dict.count() <= cfg.driver_dict_cap
+            and lt_dict.count() <= cfg.driver_dict_cap
+        ):
+            lt_map = {r["logtype"]: r["logtype_id"] for r in lt_dict.collect()}
+            v_map = {r["value"]: r["var_id"] for r in v_dict.collect()}
         enc_sinked = add_seg_id(
-            add_sink_id(encoded, cfg.num_sinks),
+            add_sink_id(
+                _encode(parsed_all, lt_dict, v_dict, lt_map, v_map, cfg),
+                cfg.num_sinks,
+            ),
             cfg.num_segments,
             window_days=cfg.segment_window_days,
         )
         encoded_schema = enc_sinked.schema
-        bounds = (
-            _route_bounds(route_counts, lt_map, cfg.num_sinks)
-            if (
-                route_counts is not None
-                and lt_map is not None
-                and os.environ.get("CLP_ROUTE_BOUNDS", "1") != "0"
-            )
-            else None
-        )
-        from concurrent.futures import ThreadPoolExecutor
-
-        need_metrics = "metrics" not in manifest.committed("metrics")
-        t_m = time.time()
-        if bounds is not None and bounds[1] > 0:
-            # Analytic single-pass route: encode flows straight into the
-            # boundary shuffle (no RangePartitioner sample pass, no
-            # full-width persist). Bookkeeping then re-reads the WRITTEN
-            # sinks with column pruning — a narrow scan of the compact
-            # columnar output (no url/text decode) instead of keeping
-            # the whole encoded frame cached.
-            with step_timer("route.write"):
-                route_to_sinks(
-                    enc_sinked, sinks_dir, cfg, presinked=True, bounds=bounds
-                )
-            book_src = spark.read.schema(encoded_schema).parquet(sinks_dir)
-            f_route_done = True
-        else:
-            # Sampler route (no timestamp column, resume without counts,
-            # or above-cap dictionaries): persist the sinked rows so the
-            # sample pass, the write, and the bookkeeping aggregations
-            # compute the encode once, and run the route write
-            # CONCURRENTLY with the bookkeeping from driver threads.
-            enc_sinked = enc_sinked.persist()
-            book_src = enc_sinked
-            f_route_done = False
-        # Only TWO distributed aggregations remain: the segment summary
-        # (one (sink, seg)-grouped pass — CLP-small by design, like the
-        # dictionaries) and the var-dict manifest distinct. Everything
-        # the summary derives — logtype manifest, ts zone map, per-sink
-        # metrics — is written DRIVER-SIDE with pyarrow: each of those
-        # used to be its own multi-stage Spark write job, and those
-        # fixed scheduling seconds are charged to every cluster size
-        # (they were the dominant term in the N→4N efficiency loss once
-        # the vectorized tokenizer shrank the parallel fraction).
-        summary = segment_summary(book_src)
-        ts_cols = [c for c in ("ts_min", "ts_max") if c in summary.columns]
-        seg_cols = ts_cols + (["ts_src"] if "ts_src" in summary.columns else [])
-        summary_fields = {f.name: f.dataType for f in summary.schema.fields}
-        # TimestampType bounds are collected as epoch MICROS, not as
-        # datetimes: toPandas renders timestamps in the session's
-        # spark.sql.session.timeZone as naive wall times, and the
-        # pyarrow writer's timestamp("us", tz="UTC") would re-read
-        # those wall times as UTC — shifting the zone map by the UTC
-        # offset on any non-UTC session and mis-pruning range queries.
-        # Integer micros are timezone-free; pa.array interprets them
-        # as epoch values under the declared tz=UTC type, which is
-        # exactly the instant Spark stores internally.
-        from pyspark.sql import types as _T
-
-        _micros_cols = [
-            c for c in ts_cols
-            if isinstance(summary_fields[c], _T.TimestampType)
-        ]
-        for c in _micros_cols:
-            summary = summary.withColumn(c, F.unix_micros(F.col(c)))
-
-        def _w_route():
-            with step_timer("route.write"):
-                route_to_sinks(enc_sinked, sinks_dir, cfg, presinked=True)
-
-        var_man = (
-            book_src.select(
-                "sink_id", "seg_id", F.explode("dict_var_ids").alias("var_id")
-            )
-            .distinct()
-            .persist()
-        )
-
-        def _w_var():
-            write_var_manifest(var_man, os.path.join(out_dir, "manifest", "var"))
-
-        def _w_varcard():
-            return (
-                var_man.select("sink_id", "var_id")
-                .distinct()
-                .groupBy("sink_id")
-                .agg(F.count("*").alias("var_cardinality"))
-                .toPandas()
-            )
-
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            f_route = None if f_route_done else pool.submit(_w_route)
-            f_sum = pool.submit(summary.toPandas)
-            f_var = pool.submit(_w_var)
-            f_vcard = pool.submit(_w_varcard) if need_metrics else None
-            with step_timer("route.summary_collect"):
-                summary_pdf = f_sum.result()
-            for c in _micros_cols:
-                # nullable Int64: an all-null-ts segment must round-trip
-                # as parquet null, not poison the column to float64
-                summary_pdf[c] = summary_pdf[c].astype("Int64")
-            with step_timer("route.summary_derived_write"):
-                _write_summary_derived(
-                    summary_pdf, summary_fields, seg_cols, out_dir, cfg
-                )
-            if f_route is not None:
-                with step_timer("route.write_wait"):
-                    f_route.result()
-            with step_timer("route.var_manifest_wait"):
-                f_var.result()
-            manifest.commit(
-                "route", "route", run_id, wall_ms=int(1000 * (time.time() - t0))
-            )
-            if f_vcard is not None:
-                with step_timer("route.vcard_wait_and_metrics_write"):
-                    _write_metrics_driver(
-                        summary_pdf,
-                        f_vcard.result(),
-                        summary_fields,
-                        ts_cols,
-                        metrics_dir,
-                        cfg,
-                    )
-                manifest.commit(
-                    "metrics",
-                    "metrics",
-                    run_id,
-                    wall_ms=int(1000 * (time.time() - t_m)),
-                )
-        var_man.unpersist()
-        if not f_route_done:
-            enc_sinked.unpersist()
-    if encoded_schema is None:
+        # the dict-phase ride-along counts give the route its cells; on
+        # resume after `dicts`, above the cap, or past _MAX_BOUNDS_CELLS
+        # route_to_sinks counts them from the sinked frame instead
+        bounds = _route_bounds(route_counts, lt_map, cfg.num_sinks)
+        route_to_sinks(enc_sinked, sinks_dir, cfg, presinked=True, bounds=bounds)
+    else:
         encoded_schema = add_seg_id(
             add_sink_id(
                 encode_with_dicts(
@@ -607,31 +493,12 @@ def compress(
 
     encoded_sinks = spark.read.schema(encoded_schema).parquet(sinks_dir)
 
-    # ---- phase 4: per-sink aggregates (the aggregate contract) ----
-    if "metrics" not in manifest.committed("metrics"):
-        t0 = time.time()
-        m = sink_metrics(encoded_sinks).join(
-            sink_var_cardinality(encoded_sinks), "sink_id", "left"
-        ).na.fill({"var_cardinality": 0})
-        # same per-sink ts bounds (and column order) the driver path
-        # writes — a resume through this phase must not produce a
-        # metrics table missing ts_min/ts_max
-        for c in ("warc_ts", "ts_ms"):
-            if c in encoded_sinks.columns:
-                m = m.join(
-                    encoded_sinks.groupBy("sink_id").agg(
-                        F.min(c).alias("ts_min"), F.max(c).alias("ts_max")
-                    ),
-                    "sink_id",
-                    "left",
-                ).select(
-                    "sink_id", "rows", "logtype_cardinality",
-                    "n_encoded_vars", "encoded_bytes", "raw_bytes",
-                    "ts_min", "ts_max", "var_cardinality",
-                )
-                break
-        m.write.mode("overwrite").parquet(metrics_dir)
-        manifest.commit("metrics", "metrics", run_id, wall_ms=int(1000 * (time.time() - t0)))
+    # ---- bookkeeping: manifests (route phase) + metrics ----
+    need_metrics = "metrics" not in manifest.committed("metrics")
+    if need_route or need_metrics:
+        _write_bookkeeping(
+            encoded_sinks, out_dir, manifest, run_id, t0, need_route, need_metrics
+        )
 
     return {
         "run_id": run_id,
@@ -642,3 +509,96 @@ def compress(
         "sink_manifest": os.path.join(out_dir, "manifest"),
         "manifest": manifest.path,
     }
+
+
+def _write_bookkeeping(
+    sinks: DataFrame,
+    out_dir: str,
+    manifest: RunManifest,
+    run_id: str,
+    t0: float,
+    need_route: bool,
+    need_metrics: bool,
+) -> None:
+    """Manifests (commits `route`) and/or the metrics table (commits
+    `metrics`) from a column-pruned read of the WRITTEN sinks; both
+    commits record their wall time from `t0`, the start of phase 3.
+
+    Only TWO distributed aggregations run: the segment summary (one
+    (sink, seg)-grouped pass — CLP-small by design, like the
+    dictionaries) and the distinct (sink, seg, var) pairs. Everything
+    the summary derives — logtype manifest, ts zone map, per-sink
+    metrics — is written DRIVER-SIDE with pyarrow: each of those used to
+    be its own multi-stage Spark write job, and those fixed scheduling
+    seconds are charged to every cluster size."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import types as T
+
+    summary = segment_summary(sinks)
+    ts_cols = [c for c in ("ts_min", "ts_max") if c in summary.columns]
+    seg_cols = ts_cols + (["ts_src"] if "ts_src" in summary.columns else [])
+    summary_fields = {f.name: f.dataType for f in summary.schema.fields}
+    # TimestampType bounds are collected as epoch MICROS, not as
+    # datetimes: toPandas renders timestamps in the session's
+    # spark.sql.session.timeZone as naive wall times, and the
+    # pyarrow writer's timestamp("us", tz="UTC") would re-read
+    # those wall times as UTC — shifting the zone map by the UTC
+    # offset on any non-UTC session and mis-pruning range queries.
+    # Integer micros are timezone-free; pa.array interprets them
+    # as epoch values under the declared tz=UTC type, which is
+    # exactly the instant Spark stores internally.
+    micros_cols = [
+        c for c in ts_cols if isinstance(summary_fields[c], T.TimestampType)
+    ]
+    for c in micros_cols:
+        summary = summary.withColumn(c, F.unix_micros(F.col(c)))
+
+    var_pairs = sinks.select(
+        "sink_id", "seg_id", F.explode("dict_var_ids").alias("var_id")
+    )
+    var_man = var_pairs.distinct().persist() if need_route else var_pairs
+
+    def _w_varcard():
+        return (
+            var_man.select("sink_id", "var_id")
+            .distinct()
+            .groupBy("sink_id")
+            .agg(F.count("*").alias("var_cardinality"))
+            .toPandas()
+        )
+
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        f_sum = pool.submit(summary.toPandas)
+        f_var = (
+            pool.submit(
+                write_var_manifest, var_man, os.path.join(out_dir, "manifest", "var")
+            )
+            if need_route
+            else None
+        )
+        f_vcard = pool.submit(_w_varcard) if need_metrics else None
+        summary_pdf = f_sum.result()
+        for c in micros_cols:
+            # nullable Int64: an all-null-ts segment must round-trip
+            # as parquet null, not poison the column to float64
+            summary_pdf[c] = summary_pdf[c].astype("Int64")
+        if need_route:
+            _write_summary_derived(summary_pdf, summary_fields, seg_cols, out_dir)
+            f_var.result()
+            manifest.commit(
+                "route", "route", run_id, wall_ms=int(1000 * (time.time() - t0))
+            )
+        if need_metrics:
+            _write_metrics_driver(
+                summary_pdf,
+                f_vcard.result(),
+                summary_fields,
+                ts_cols,
+                os.path.join(out_dir, "metrics"),
+            )
+            manifest.commit(
+                "metrics", "metrics", run_id, wall_ms=int(1000 * (time.time() - t0))
+            )
+    if need_route:
+        var_man.unpersist()

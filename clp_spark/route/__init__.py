@@ -1,6 +1,5 @@
 from clp_spark.route.fanout import (
     add_sink_id,
-    detect_hot_logtypes,
     route_to_sinks,
     sink_metrics,
 )

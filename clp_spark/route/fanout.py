@@ -9,10 +9,10 @@ single job via partitionBy.
 
 Skew (north_rule requires explicit handling): template frequencies are
 Zipf-like, so a plain repartition("sink_id") would send the hot
-logtype's sink to one task. We detect hot logtypes with a cheap count
-aggregate and salt the shuffle key for those rows only, so the hot
-sink's data spreads over `num_salt_buckets` tasks while cold sinks stay
-un-salted (no extra files). AQE skew-join/coalesce stays on as backstop.
+logtype's sink to one task. The route shuffle is instead an analytic
+range partition over exact per-(sink, seg, logtype) row counts: every
+task gets an equal share of ROWS, and a hot cell is split across
+contiguous tasks by a row hash (_route_with_bounds).
 
 Per-sink aggregates (FIXTURES.md §3 sink_metrics) are the pipeline's
 aggregate contract: rows, logtype/var cardinalities, encoded byte sizes —
@@ -118,32 +118,6 @@ def segment_summary(encoded_with_seg: DataFrame) -> DataFrame:
     return out
 
 
-def detect_hot_logtypes(encoded: DataFrame, threshold_fraction: float) -> list[int]:
-    """Logtype IDs whose row share exceeds the threshold (driver-side list).
-
-    One cheap pre-aggregated count pass; the result is tiny (it is at most
-    1/threshold entries) so collecting it is safe at any scale.
-    """
-    counts = encoded.groupBy("logtype_id").count()
-    total = encoded.count()
-    hot = counts.filter(F.col("count") >= threshold_fraction * total)
-    return [r["logtype_id"] for r in hot.collect()]
-
-
-def hot_logtypes_from_dict(
-    logtype_dict: DataFrame, threshold_fraction: float
-) -> list[int]:
-    """Hot-template IDs straight from the dictionary's n_rows column —
-    zero extra scans of the data (build_logtype_dict counts ride along
-    with the distinct aggregation)."""
-    agg = logtype_dict.agg(F.sum("n_rows").alias("total")).collect()[0]
-    total = agg["total"] or 0
-    hot = logtype_dict.filter(
-        F.col("n_rows") >= F.lit(threshold_fraction * total)
-    )
-    return [r["logtype_id"] for r in hot.select("logtype_id").collect()]
-
-
 def murmur3_long(value: int, seed: int = 42) -> int:
     """Spark's Murmur3Hash (Murmur3_x86_32.hashLong, public MurmurHash3
     spec) of a LongType value — the hash behind `repartition(n, col)`
@@ -196,8 +170,8 @@ def _route_with_bounds(
     total: int,
 ) -> None:
     """Analytic range route: partition boundaries computed from EXACT
-    per-(sink, seg, logtype) row counts that ride along with the
-    dictionary aggregation — zero extra scans.
+    per-(sink, seg, logtype) row counts (see route_to_sinks for where
+    they come from).
 
     Why not repartitionByRange: its RangePartitioner runs a SAMPLE job
     that recomputes the mapInArrow encode of every input partition just
@@ -221,7 +195,11 @@ def _route_with_bounds(
     spark = df.sparkSession
     p_n = int(cfg.shuffle_partitions)
     rpp = max(1, -(-total // p_n))
-    b_sdf = spark.createDataFrame(bounds_pdf)
+    b_sdf = spark.createDataFrame(
+        bounds_pdf,
+        "sink_id long, seg_id long, logtype_id long, "
+        "_cum_before double, _cell_rows double",
+    )
     magic = magic_partition_keys(p_n)
     u01 = (tiebreak.cast("double") / F.lit(float(2**64))) + F.lit(0.5)
     joined = df.join(
@@ -253,32 +231,53 @@ def _route_with_bounds(
     writer.parquet(out_path)
 
 
+def bounds_from_cells(cells) -> tuple:
+    """(bounds_pdf, total_rows) from per-(sink_id, seg_id, logtype_id)
+    row counts `n` (duplicate cells are summed): each cell's cumulative
+    start position in the (sink, seg, logtype)-sorted global row order —
+    what RangePartitioner would derive from a sample, but exact."""
+    cells = (
+        cells.groupby(["sink_id", "seg_id", "logtype_id"], sort=True)["n"]
+        .sum()
+        .reset_index()
+    )
+    total = int(cells["n"].sum())
+    cells["_cum_before"] = (
+        cells["n"].cumsum().shift(1, fill_value=0).astype("float64")
+    )
+    cells["_cell_rows"] = cells["n"].astype("float64")
+    return cells.drop(columns=["n"]), total
+
+
 def route_to_sinks(
     encoded: DataFrame,
     out_path: str,
     cfg: PipelineConfig,
-    hot_logtypes: list[int] | None = None,
     presinked: bool = False,
     bounds: tuple | None = None,
 ) -> None:
-    """Write encoded rows into per-sink parquet partitions, skew-salted.
+    """Write encoded rows into per-sink parquet partitions through the
+    analytic range route (_route_with_bounds).
 
-    presinked=True: `encoded` already carries sink_id (caller persisted
-    it to also derive metrics without a sink read-back).
+    presinked=True: `encoded` already carries sink_id and seg_id.
 
-    bounds=(bounds_pdf, total_rows): exact per-(sink, seg, logtype) row
-    counts from the dictionary phase — takes the analytic single-pass
-    route (_route_with_bounds, no sampler job, no persist needed). When
-    None (no timestamp column, resume without counts, above-cap dicts)
-    the sampler-based range shuffle below stands.
+    bounds=(bounds_pdf, total_rows) from bounds_from_cells: the caller's
+    exact per-(sink, seg, logtype) counts (compress derives them from
+    the dictionary aggregation at zero extra scans). When None — resume
+    after the dictionaries committed, above-cap dictionaries, direct
+    callers — the cells come from one groupBy(...).count() over the
+    sinked frame."""
+    df = (
+        encoded
+        if presinked
+        else add_seg_id(
+            add_sink_id(encoded, cfg.num_sinks),
+            cfg.num_segments,
+            window_days=cfg.segment_window_days,
+        )
+    )
 
-    hot_logtypes is accepted for API compatibility but unused: the range
-    partitioner below handles hot-template skew natively (rows equal on
-    every range key are split across partitions by the hash tiebreaker),
-    so no explicit salting pass is needed."""
-    df = encoded if presinked else add_sink_id(encoded, cfg.num_sinks)
-
-    part_cols = ["sink_id"] + (["seg_id"] if "seg_id" in df.columns else [])
+    part_cols = ["sink_id", "seg_id"]
     # GLT layout: cluster rows by logtype (then ts) WITHIN each task so
     # parquet row-group min/max stats + the logtype bloom actually bite —
     # the reference's group-by-logtype tables get 7.8× search speedup
@@ -291,94 +290,28 @@ def route_to_sinks(
         if ts in df.columns:
             sort_cols.append(ts)
             break
-    # Range-partition the shuffle on the sort keys + a row-hash
-    # tiebreaker. Hashing on the raw (sink_id, seg_id, salt) tuple was a
+    # Range-partition the shuffle on the cell order + a row-hash
+    # tiebreaker. Hashing on the raw (sink_id, seg_id) tuple was a
     # balls-in-bins skew trap: with ~num_sinks × num_segments distinct
     # keys into shuffle_partitions buckets, some tasks drew 3 key-groups
     # and others none — invisible at low parallelism (stragglers hide
-    # behind the queue) but the wall-setter at high parallelism, which
-    # tanked N→4N route scaling to ~2.4×. The range sampler instead
-    # equalizes ROWS per task; heavy (sink, seg) groups and hot
-    # logtypes split across contiguous partitions via the tiebreaker,
-    # directory layout still comes from partitionBy, and each output
-    # file now covers a NARROW logtype range — strictly better row-group
-    # min/max pruning than per-task-global sorting.
+    # behind the queue) but the wall-setter at high parallelism. Equal
+    # ROWS per task instead: heavy (sink, seg) groups and hot logtypes
+    # split across contiguous partitions via the tiebreaker, directory
+    # layout still comes from partitionBy, and each output file covers a
+    # NARROW logtype range — strictly better row-group min/max pruning
+    # than per-task-global sorting.
     tiebreak = F.xxhash64(
         *[c for c in ("url", "doc_id", "event_id") if c in df.columns][:1]
         or ["logtype_id"]
     )
-    if bounds is not None and bounds[1] > 0:
-        bounds_pdf, total = bounds
-        _route_with_bounds(
-            df, out_path, cfg, part_cols, sort_cols, tiebreak, bounds_pdf, total
-        )
-        return
-    writer = (
-        df.repartitionByRange(
-            cfg.shuffle_partitions, *[F.col(c) for c in sort_cols], tiebreak
-        )
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .option("compression", cfg.compression_codec)
-        # parquet bloom filter on logtype_id: the row-group analog of the
-        # reference's var-dict bloom (BloomFilter.hpp:18-29, SURVEY §2.3)
-        # — logtype isin prefilters skip row groups without the IDs
-        .option("parquet.bloom.filter.enabled#logtype_id", "true")
+    if bounds is None:
+        cells = df.groupBy("sink_id", "seg_id", "logtype_id").count().toPandas()
+        bounds = bounds_from_cells(cells.rename(columns={"count": "n"}))
+    bounds_pdf, total = bounds
+    _route_with_bounds(
+        df, out_path, cfg, part_cols, sort_cols, tiebreak, bounds_pdf, total
     )
-    if cfg.parquet_block_size is not None:
-        writer = writer.option("parquet.block.size", str(cfg.parquet_block_size))
-    writer.parquet(out_path)
-
-
-def sink_manifests(
-    encoded_with_sink: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """Per-sink inverted indexes — the Spark analog of CLP's segment
-    indexes (reference: DictionaryWriter.hpp:72 per-dict segment ID sets;
-    Query.hpp:103-121 calculate_ids_of_matching_segments consumes them).
-
-    Returns (logtype_manifest, var_manifest):
-      logtype_manifest(sink_id, logtype_id) — distinct pairs
-      var_manifest(sink_id, var_id)         — distinct dict-var pairs
-    Both are plain tables (not array columns) so they scale to any
-    dictionary size; search semi-joins them to skip whole sinks."""
-    lt = encoded_with_sink.select("sink_id", "logtype_id").distinct()
-    var = (
-        encoded_with_sink.select(
-            "sink_id", F.explode("dict_var_ids").alias("var_id")
-        )
-        .distinct()
-    )
-    return lt, var
-
-
-def sink_summary(encoded_with_sink: DataFrame) -> DataFrame:
-    """ONE pass over the routed rows fusing the per-sink metric
-    aggregates with the logtype inverted index (round 2 ran them as two
-    separate scans of the persisted frame, plus a third for var
-    cardinality — the serial small jobs that eroded N→4N scaling and
-    the local[32] pipeline wall).
-
-    Output: sink_id, rows, n_encoded_vars, encoded_bytes, raw_bytes,
-    lt_set (sorted distinct logtype ids — safe as an array: the logtype
-    dictionary is CLP-small by design, unlike the var dict, which keeps
-    its pair-table manifest). Derive:
-      metrics  = select(..., size(lt_set) AS logtype_cardinality)
-      manifest = select(sink_id, explode(lt_set))
-    Optional min/max of `ts_col` ride along when present — the sink-level
-    timestamp zone map used for archive-style time pruning."""
-    aggs = [
-        F.count("*").alias("rows"),
-        F.sum(F.size("encoded_vars")).alias("n_encoded_vars"),
-        F.sum(F.expr("8 + 8 + 8 * size(encoded_vars)")).alias("encoded_bytes"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sort_array(F.collect_set("logtype_id")).alias("lt_set"),
-    ]
-    for c in ("warc_ts",):
-        if c in encoded_with_sink.columns:
-            aggs += [F.min(c).alias("ts_min"), F.max(c).alias("ts_max")]
-    return encoded_with_sink.groupBy("sink_id").agg(*aggs)
 
 
 def sink_metrics(encoded_with_sink: DataFrame) -> DataFrame:

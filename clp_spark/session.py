@@ -12,6 +12,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical RAM, capped at 48g: a driver heap sized past
+    what the host can commit gets the JVM killed at start-up."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_mb = next(
+                int(line.split()[1]) // 1024
+                for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return "48g"
+    return f"{min(48 * 1024, max(512, total_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "clp_spark",
     cores: int | None = None,
@@ -39,7 +54,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # commit algorithm v2: task outputs move straight to the final

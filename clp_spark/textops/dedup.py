@@ -622,6 +622,7 @@ def connected_components(
         # halving this needs a component of diameter ~2^max_iters —
         # if it ever fires, something is wrong; fail loud, never wrong.
         edges.unpersist()
+        labels.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} "
             "rounds; raise max_iters"
@@ -671,9 +672,13 @@ def embedding_near_dup_pairs(
     ]
     if num_planes is not None:
         if dim is None:
-            first = emb.select(vec_col).first()
-            if first is None or first[0] is None:
-                # empty input (or null leading embedding): an upstream
+            # the first NON-null embedding: a null leading row must not
+            # turn the whole dedup into a silent no-op
+            first = (
+                emb.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
+            )
+            if first is None:
+                # empty input (or no embedding at all): an upstream
                 # filter may legitimately drain the frame — a dedup
                 # stage must then be a no-op, not a crash
                 from pyspark.sql import types as _T

@@ -11,36 +11,9 @@ shuffle to a job that is already parallel.
 
 from __future__ import annotations
 
-import os
-import sys
-import time
 from collections import OrderedDict
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
-
-_TIMING = os.environ.get("CLP_TIMING", "") not in ("", "0")
-
-
-@contextmanager
-def step_timer(label: str):
-    """Env-gated (CLP_TIMING=1) wall-clock probe around a driver-side
-    step. Prints to stderr so the paired scaling runs capture it in
-    their per-run stderr files; no-op (and no overhead) when unset.
-    Used to attribute the serial residue that Amdahl charges to every
-    cluster size — the N→4N efficiency killer."""
-    if not _TIMING:
-        yield
-        return
-    t0 = time.time()
-    try:
-        yield
-    finally:
-        print(
-            f"[clp-timing] {label}: {time.time() - t0:.2f}s",
-            file=sys.stderr,
-            flush=True,
-        )
 
 
 class LruCache(OrderedDict):

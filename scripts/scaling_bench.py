@@ -526,23 +526,6 @@ excluding it can only lower the reported number).
   per sink — the routed-row equality contract; dictionary IDs are
   value-sorted ranks, so they are identical at any parallelism)
 
-Per-step serial attribution (env `CLP_TIMING=1`, 1.5M docs, pinned 2
-vs 8 cores, sequential): dictionary count+agg jobs 6.2s → 2.5s (was
-9.0s → 4.1s before dropping the dict-phase input cache — the logtype
-and var aggregations read DISJOINT column sets of the parquet-backed
-parse checkpoint, so two column-pruned scans beat caching the union);
-dict collects 2.5s → 1.1s (driver Arrow collect, overlapped across two
-driver threads); route shuffle+write 19.3s → 6.7s (the analytic-bounds
-route: exact per-(sink, seg, logtype) counts ride along with the
-dictionary aggregation and the driver derives range boundaries — no
-RangePartitioner sample job, no full-width persist, rows flow straight
-from the encode pass into the shuffle, and file split points are
-deterministic at any parallelism); post-route bookkeeping reads back
-the WRITTEN sinks column-pruned (segment summary + var manifest,
-~2-3s, concurrent driver threads). Fixed driver seconds per job
-amortize out at production scale (hours-long jobs on 10^12 docs),
-where the stage-weighted efficiency approaches the parse/encode bound.
-
 Generated by `python scripts/scaling_bench.py`; re-run to reproduce
 (env: CLP_SCALE_PAGES, CLP_SCALE_N, CLP_SCALE_REPEATS).
 """

@@ -124,3 +124,22 @@ def test_distributed_nonconvergence_raises_not_underdedups(spark):
     ids = spark.createDataFrame([(i,) for i in range(n)], "id long")
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, ids, driver_edge_cap=0, max_iters=2)
+
+
+def test_distributed_nonconvergence_releases_cached_frames(spark):
+    """Failing loud must not leak: every frame the loop persisted
+    (edges and the last labels) is released before the raise."""
+    import pytest as _pytest
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    n = 30
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+    )
+    ids = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    before = persisted()
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(pairs, ids, driver_edge_cap=0, max_iters=2)
+    assert persisted() - before == set()

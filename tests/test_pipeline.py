@@ -288,3 +288,52 @@ def test_metrics_fallback_schema_matches_driver_path(spark, pages_pdf, tmp_path_
         for r in fb.collect()
     }
     assert fb_rows == driver_rows
+
+
+def test_compress_zero_rows_commits_empty_metrics(spark, pages_df, tmp_path_factory):
+    """A drained input still runs every phase to its commit: empty
+    sinks, an empty metrics table with the usual columns."""
+    out = str(tmp_path_factory.mktemp("zero_rows_out"))
+    res = compress(spark, pages_df.limit(0), out, CFG)
+    from clp_spark.checkpoint import RunManifest
+
+    phases = {r["phase"] for r in RunManifest(out).records()}
+    assert {"parse", "dicts", "route", "metrics"} <= phases
+    met = spark.read.parquet(res["metrics"])
+    assert met.count() == 0
+    assert {"sink_id", "rows", "var_cardinality"} <= set(met.columns)
+
+
+def test_resume_after_dicts_matches_clean_run(spark, pages_df, tmp_path_factory):
+    """A crash after `parse` and `dicts` committed but before `route`:
+    the resume has no ride-along route counts, so route_to_sinks counts
+    its own cells — the sinks, manifests and metrics must equal a clean
+    run's."""
+    import json as _json
+
+    cfg = PipelineConfig(num_sinks=8, num_checkpoint_buckets=2, shuffle_partitions=8)
+    clean = str(tmp_path_factory.mktemp("clean_out"))
+    compress(spark, pages_df, clean, cfg)
+
+    out = str(tmp_path_factory.mktemp("resume_route_out"))
+    compress(spark, pages_df, out, cfg)
+    for sub in ("sinks", "manifest", "metrics"):
+        shutil.rmtree(os.path.join(out, sub))
+    man_path = os.path.join(out, "_manifest.jsonl")
+    with open(man_path) as f:
+        recs = [_json.loads(line) for line in f]
+    with open(man_path, "w") as f:
+        for r in recs:
+            if r["phase"] in ("parse", "dicts"):
+                f.write(_json.dumps(r) + "\n")
+
+    compress(spark, pages_df, out, cfg)
+
+    def rows(base, sub):
+        df = spark.read.parquet(os.path.join(base, sub))
+        return sorted(
+            tuple(str(x) for x in r) for r in df.select(*sorted(df.columns)).collect()
+        )
+
+    for sub in ("sinks", "metrics", "manifest/logtype", "manifest/segments", "manifest/var"):
+        assert rows(out, sub) == rows(clean, sub), sub

@@ -1,10 +1,11 @@
 """Analytic route boundaries (route/fanout._route_with_bounds).
 
-The sampler-free route must (a) place rows in the exact partition the
-driver computed (murmur3 magic-key parity with Spark's HashPartitioning),
-(b) produce byte-identical archives/metrics to the sampler path, and
-(c) balance rows across shuffle partitions under the Zipf-skewed
-template distribution.
+The route must (a) place rows in the exact partition the driver
+computed (murmur3 magic-key parity with Spark's HashPartitioning),
+(b) produce identical archives/metrics whether its cells come from the
+dictionary-phase ride-along counts or from route_to_sinks' own counted
+cells, and (c) balance rows across shuffle partitions under the
+Zipf-skewed template distribution.
 """
 
 from __future__ import annotations
@@ -42,16 +43,16 @@ def test_magic_keys_land_in_exact_partitions(spark, p):
 
 
 @pytest.fixture(scope="module")
-def two_path_outputs(spark, pages_df, tmp_path_factory):
-    """Same compress run via the analytic-bounds route and (forced) the
-    sampler route."""
+def ride_along_and_counted_outputs(spark, pages_df, tmp_path_factory):
+    """Same compress run with the dict-phase ride-along cell counts and
+    (forced) with the counted cells route_to_sinks aggregates itself."""
     import clp_spark.pipeline as pl
 
     cfg = PipelineConfig(num_sinks=8, num_checkpoint_buckets=1, shuffle_partitions=8)
     out_a = str(tmp_path_factory.mktemp("route_bounds"))
     compress(spark, pages_df, out_a, cfg)
 
-    out_b = str(tmp_path_factory.mktemp("route_sampler"))
+    out_b = str(tmp_path_factory.mktemp("route_counted_cells"))
     saved = pl._MAX_BOUNDS_CELLS
     pl._MAX_BOUNDS_CELLS = 0  # driver-side constant: forces bounds=None
     try:
@@ -69,25 +70,24 @@ def _collect_sorted(spark, path):
     )
 
 
-def test_bounds_path_matches_sampler_path(spark, two_path_outputs):
-    out_a, out_b = two_path_outputs
+def test_ride_along_cells_match_counted_cells(spark, ride_along_and_counted_outputs):
+    out_a, out_b = ride_along_and_counted_outputs
     for sub in ("sinks", "metrics", "manifest/logtype", "manifest/segments", "manifest/var"):
         a = _collect_sorted(spark, os.path.join(out_a, sub))
         b = _collect_sorted(spark, os.path.join(out_b, sub))
-        assert a == b, f"{sub} differs between bounds and sampler routes"
+        assert a == b, f"{sub} differs between ride-along and counted cells"
 
 
-def test_bounds_path_has_no_helper_columns(spark, two_path_outputs):
-    out_a, _ = two_path_outputs
+def test_bounds_path_has_no_helper_columns(spark, ride_along_and_counted_outputs):
+    out_a, _ = ride_along_and_counted_outputs
     cols = spark.read.parquet(os.path.join(out_a, "sinks")).columns
     assert not [c for c in cols if c.startswith("_")], cols
 
 
 def test_bounds_partitions_balanced(spark, pages_df):
     """Zipf-hot templates must spread: no shuffle partition may exceed
-    2x the mean row count (the sampler route guaranteed this via the
-    range sample; the analytic route must via exact counts + hash
-    splitting of hot cells)."""
+    2x the mean row count (the analytic route guarantees this via exact
+    counts + hash splitting of hot cells)."""
     from clp_spark.dicts.build import build_dicts_small_pandas, encode_with_maps
     from clp_spark.pipeline import _route_bounds
     from clp_spark.route.fanout import (

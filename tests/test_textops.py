@@ -481,6 +481,19 @@ def test_embedding_near_dup_empty_input_is_noop(spark):
     assert out.columns == ["doc_a", "doc_b"]
 
 
+def test_embedding_near_dup_null_leading_embedding(spark):
+    """The LSH dimension comes from the first NON-null embedding: a
+    leading row without an embedding must not empty the pair set."""
+    from clp_spark.textops.dedup import embedding_near_dup_pairs
+
+    emb = spark.createDataFrame(
+        [(1, None), (2, [1.0, 0.0, 0.5]), (3, [1.0, 0.0, 0.5])],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1)
+    got = {(r["doc_a"], r["doc_b"]) for r in embedding_near_dup_pairs(emb).collect()}
+    assert got == {(2, 3)}
+
+
 def test_minhash_rejects_uneven_bands(spark):
     """bands must divide num_hashes: remainder hashes would silently
     change recall, and bands > num_hashes degenerates every band to one

@@ -143,66 +143,3 @@ class TestTokenizer:
             s = parse_one(msg)
             assert (s[0], s[1], s[2]) == (o[0], o[1], o[2])
             assert decode_message(o[0], o[1]) == msg
-
-
-class TestSqlEngine:
-    """The opt-in JVM-expression engine (CLP_SPARK_TOKENIZER=sql,
-    measured slower than the default Python engine) agrees exactly with
-    the default engine and the oracle (tokenizer.py `tokenize_exprs`)."""
-
-    def _check_corpus(self, spark, texts):
-        import pandas as pd
-
-        from clp_spark.parse.tokenizer import tokenize_df
-
-        df = spark.createDataFrame(pd.DataFrame({"text": list(texts)}))
-        rows = (
-            tokenize_df(df, passthrough=["text"], engine="sql")
-            .orderBy("text")
-            .collect()
-        )
-        assert len(rows) == len(texts)
-        for r in rows:
-            o_lt, o_vs, o_vt, o_enc = tokenize_message(r["text"])
-            assert r["logtype"] == o_lt
-            assert list(r["var_strs"]) == list(o_vs)
-            assert list(r["var_types"]) == list(o_vt)
-            assert list(r["enc_prelim"]) == [0 if e is None else e for e in o_enc]
-            assert r["n_vars"] == len(o_vs)
-            assert r["raw_bytes"] == len(r["text"].encode("utf-8"))
-
-    def test_edge_cases(self, spark):
-        self._check_corpus(
-            spark,
-            [
-                "plain static text only",
-                "took 123 ms from 10.0.0.1 port 8080",
-                "v=1.2.3 build abc123 hash deadbeef x=ab =ab",
-                "neg -17 zero 0 pad 007 big 99999999999999999999 -0",
-                "f .5 -.5 1. 1.5 -2.75 12345678901234567.8 0.000001",
-                "esc \x11 \x12 \x13 \\ combo\\1",
-                "=value key=val2 a=b =x",
-                "hex ff AB 0a f xyz abc",
-                "",
-                "tail 42",
-                "42 head",
-                "unicode héllo 99 ünïts",
-                "dots 1.2.3.4 and a-b-1 and _x_9_",
-                "-9223372036854775808 9223372036854775807"
-                " 9223372036854775808 -9223372036854775809",
-            ],
-        )
-
-    def test_fuzz_vs_oracle(self, spark):
-        import random
-
-        alphabet = list("abcdef ghXYZ=0123456789.-+_\\/:[](){}*?!\n\t\x11\x12\x13é•")
-        rng = random.Random(1234)
-        cases = {
-            "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 120)))
-            for _ in range(1500)
-        }
-        self._check_corpus(spark, sorted(cases))
-
-    def test_fixture_corpus(self, spark, pages_pdf):
-        self._check_corpus(spark, pages_pdf["text"].head(500).tolist())
