@@ -42,6 +42,8 @@ from __future__ import annotations
 
 import json
 import struct as _struct
+import uuid
+from functools import cached_property
 from typing import Iterator
 
 import pandas as pd
@@ -334,6 +336,10 @@ def _parse_records(
     )
 
 
+# written by JsonArchive.save as its last step: a fresh id per save
+SAVE_ID_FILE = "_save_id"
+
+
 class JsonArchive:
     """Encoded JSON table + its dictionaries (the clp_s archive analog:
     archive_constants.hpp:12-25 — schema tree, schema map, var/log
@@ -356,13 +362,28 @@ class JsonArchive:
         self.range_index = range_index    # list[{"fields", "idx_min", "idx_max"}] | None
         self.range_index_idx_col = range_index_idx_col
 
+    @cached_property
+    def dict_index(self):
+        """Candidate-ID index over this archive's dictionaries, built on
+        first use and kept for the archive's lifetime."""
+        from clp_spark.search.executor import _load_index
+
+        return _load_index(self.logtype_dict, self.var_dict)
+
     def save(self, out_dir: str) -> None:
         """Persist the archive (ArchiveWriter analog: schema_tree,
         schema_ids map, dicts, encoded tables — archive_constants.hpp:
         12-25). Encoded rows partition by schema_id — the per-schema
-        table layout, so schema pruning becomes partition pruning."""
+        table layout, so schema pruning becomes partition pruning.
+
+        A fresh save id (SAVE_ID_FILE) is removed first and written as
+        the last step: loaders cache on it, so a directory that is being
+        or has been re-saved is never served from a stale load."""
         import os
 
+        save_id = os.path.join(out_dir, SAVE_ID_FILE)
+        if os.path.exists(save_id):
+            os.remove(save_id)
         (
             self.encoded.write.mode("overwrite")
             .partitionBy("schema_id")
@@ -393,6 +414,8 @@ class JsonArchive:
                     },
                     f,
                 )
+        with open(save_id, "w") as f:
+            f.write(uuid.uuid4().hex)
 
     @classmethod
     def load(

@@ -26,6 +26,7 @@ import os
 from clp_spark.clps.encoder import (
     NODE_ARRAY,
     NODE_ARRSTART,
+    SAVE_ID_FILE,
     _MARKER_TAGS,
     JsonArchive,
 )
@@ -317,21 +318,19 @@ def archive_may_match(index, req: frozenset) -> bool:
     return True
 
 
-def _archive_token(archive_dir: str) -> int:
-    """Freshness token for a saved archive: max mtime_ns across its
-    top-level entries (every JsonArchive.save rewrites them). Keys the
-    load cache so a re-saved archive is reloaded, never served stale."""
-    tok = 0
+def _archive_token(archive_dir: str) -> tuple | None:
+    """Freshness token for a saved archive: the save id every
+    JsonArchive.save writes as its last step, plus the newest mtime of
+    its top-level entries (an archive touched after its save reloads
+    too). None while a save is in flight or for an archive saved without
+    an id — such archives load fresh on every call."""
     try:
+        with open(os.path.join(archive_dir, SAVE_ID_FILE)) as f:
+            save_id = f.read()
         with os.scandir(archive_dir) as it:
-            for e in it:
-                try:
-                    tok = max(tok, e.stat().st_mtime_ns)
-                except OSError:
-                    continue
+            return save_id, max(e.stat().st_mtime_ns for e in it)
     except OSError:
-        pass
-    return tok
+        return None
 
 
 def load_surviving_archives(
@@ -349,10 +348,10 @@ def load_surviving_archives(
     KQL federation (below), the SQL view, and the tool server so the
     prune rule and load overlap live in exactly one place.
 
-    `cache`: optional {dir: (token, JsonArchive)} memo for long-lived
-    callers (the tool server) — entries are keyed on an mtime freshness
-    token, so immutable on-disk archives load once per server lifetime
-    while a re-saved archive reloads.
+    `cache`: optional {dir: (save id, JsonArchive)} memo for long-lived
+    callers (the tool server) — entries are keyed on the save id every
+    JsonArchive.save writes last, so immutable on-disk archives load
+    once per server lifetime while a re-saved archive reloads.
 
     Returns (searched_dirs, archives), parallel lists."""
     from concurrent.futures import ThreadPoolExecutor
@@ -369,10 +368,13 @@ def load_surviving_archives(
             return JsonArchive.load(spark, d, driver_dict_cap=driver_dict_cap)
         tok = _archive_token(d)
         hit = cache.get(d)
-        if hit is not None and hit[0] == tok:
+        if tok is not None and hit is not None and hit[0] == tok:
             return hit[1]
         arch = JsonArchive.load(spark, d, driver_dict_cap=driver_dict_cap)
-        cache[d] = (tok, arch)
+        # a save that ran during the load may have mixed old and new
+        # files: cache only a load that began and ended on one save id
+        if tok is not None and _archive_token(d) == tok:
+            cache[d] = (tok, arch)
         return arch
 
     with ThreadPoolExecutor(max_workers=min(8, len(searched))) as pool:

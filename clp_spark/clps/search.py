@@ -546,14 +546,13 @@ def _clpstr_wildcard_pred(
     from clp_spark.clps.encoder import _collect_map
     from clp_spark.search.compiler import compile_query
     from clp_spark.search.decode import _fill_template, parse_template
-    from clp_spark.search.executor import _load_index
     from clp_spark.search.wildcard import wildcard_match
 
     cq = compile_query(pattern, ignore_case, substring=False)
     if cq.match_all:
         return _exists_pred(cnodes, None)
 
-    idx = _load_index(archive.logtype_dict, archive.var_dict)
+    idx = archive.dict_index
     elem_conds: list[str] = []
     for tp in cq.tokens:
         c = _clps_token_cond(tp, idx, ignore_case)

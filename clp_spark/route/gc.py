@@ -15,16 +15,20 @@ Spark-first shape: the zone map is CLP-small (one row per segment), so
 expiry is a driver-side scan of the manifest followed by directory
 deletes — zero data rows are read to decide. The token manifests
 (logtype, var) and the zone map itself are rewritten filtered to
-surviving segments; the search layer's mtime freshness token
-(search/sinks.py:58) then invalidates its collected-manifest caches
-automatically, so a session that GCs and re-queries sees the shrunken
-archive without restarts.
+surviving segments. A `gc_begin` commit record is appended to the
+archive's `_manifest.jsonl` before the first delete and a `gc` record
+after the manifest swap. Each changes the commit token the search layer
+keys its opened archive handles on (search/sinks.py open_archive), so a
+session that GCs and re-queries sees the shrunken archive without
+restarts, even when the GC run died between its deletes and its swap.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+
+from clp_spark.checkpoint import RunManifest
 
 __all__ = ["expire_segments"]
 
@@ -246,6 +250,11 @@ def expire_segments(
                     break
             if empty_schema is not None:
                 break
+    run_id = RunManifest.new_run_id()
+    if not dry_run:
+        # committed before the first delete, so a handle opened earlier
+        # is re-opened (and re-lists sinks/) even if GC dies mid-sweep
+        RunManifest(out_dir).commit("gc_begin", "gc", run_id)
     freed = 0
     for sid, gid in pairs:
         d = os.path.join(sinks_dir, f"sink_id={sid}", f"seg_id={gid}")
@@ -294,6 +303,7 @@ def expire_segments(
             _rewrite_filtered_spark(spark, man, dead)
         else:
             _rewrite_filtered(man, _keep)
+    RunManifest(out_dir).commit("gc", "gc", run_id, segments_deleted=len(pairs))
 
     if spark is not None:
         _refresh_metrics(spark, out_dir)

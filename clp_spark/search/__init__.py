@@ -11,7 +11,7 @@ from clp_spark.search.schema_search import (
     schema_compress_df,
     schema_search,
 )
-from clp_spark.search.sinks import search_archives, search_sinks
+from clp_spark.search.sinks import open_archive, search_archives, search_sinks
 from clp_spark.search.wildcard import wildcard_match, wildcard_to_regex
 
 __all__ = [
@@ -21,6 +21,7 @@ __all__ = [
     "compile_query",
     "compile_schema_query",
     "decode_messages",
+    "open_archive",
     "schema_compress_df",
     "schema_search",
     "search",

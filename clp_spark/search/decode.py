@@ -7,7 +7,10 @@ walk the logtype template; placeholder 0x11 → int64 as decimal text,
 dictionary lookup, '\\' → escaped literal.
 
 Spark shape: dictionaries ship as broadcast variables (CLP itself keeps
-both dicts in memory per archive); decoding is an Arrow-batched
+both dicts in memory per archive). `prepare_decode` collects and
+broadcasts them; an opened Archive handle (search/sinks.py) keeps the
+result for its lifetime, while decode_messages over bare frames
+prepares them per call. Decoding is an Arrow-batched
 mapInPandas over only the rows that need text (search survivors or a
 full extract). Dictionaries too large to
 broadcast take the explode → shuffle-join → regroup path instead, so
@@ -80,16 +83,32 @@ def _fill_template(parts, kinds, encoded_vars, var_map) -> str:
 # decode switches to the explode → join → regroup path
 _MAX_DRIVER_DICT_ROWS = 2_000_000
 
-# (df_cache_key(lt), df_cache_key(v), cap) → (lt_df, v_df, b_lt, b_v) —
-# one collect + broadcast per corpus per session, not per decode call.
-# File-backed dicts key on their input-file lists (stable across
-# re-reads, invalidated when a recompress rewrites them); in-memory
-# dicts key on id(), pinned by the cached DataFrame refs. Bounded LRU:
-# evicted broadcasts are reclaimed by Spark's ContextCleaner once the
-# handle (and capturing plans) are GC'd.
-from clp_spark.util import LruCache, df_cache_key
 
-_BROADCAST_CACHE: LruCache = LruCache(maxsize=8)
+def prepare_decode(
+    logtype_dict: DataFrame,
+    var_dict: DataFrame,
+    driver_dict_cap: int = _MAX_DRIVER_DICT_ROWS,
+) -> tuple:
+    """(b_lt, b_v, lt_small): both dictionaries collected and broadcast
+    as driver maps, or (None, None, lt_small) when either is above the
+    cap — decode then takes the join path, broadcasting the logtype
+    dict only if it is small. One collect per call: an Archive handle
+    prepares once and reuses the result for every query."""
+    lt_rows = logtype_dict.select("logtype_id", "logtype").limit(
+        driver_dict_cap + 1
+    ).collect()
+    lt_small = len(lt_rows) <= driver_dict_cap
+    if not lt_small:
+        return None, None, False
+    v_rows = var_dict.select("var_id", "value").limit(driver_dict_cap + 1).collect()
+    if len(v_rows) > driver_dict_cap:
+        return None, None, True
+    sc = logtype_dict.sparkSession.sparkContext
+    return (
+        sc.broadcast({r["logtype_id"]: r["logtype"] for r in lt_rows}),
+        sc.broadcast({r["var_id"]: r["value"] for r in v_rows}),
+        True,
+    )
 
 
 def decode_messages(
@@ -109,38 +128,24 @@ def decode_messages(
     logtype_id — so nothing ever requires a dictionary to fit on the
     driver. Both paths produce byte-identical text.
     """
-    spark = encoded.sparkSession
-    cache_key = (df_cache_key(logtype_dict), df_cache_key(var_dict), driver_dict_cap)
-    hit = _BROADCAST_CACHE.get(cache_key)
-    if hit is not None:
-        b_lt, b_v = hit[2], hit[3]
-        if b_lt is None:
-            return _decode_messages_joined(
-                encoded, logtype_dict, var_dict, out_col, hit[4]
-            )
-    else:
-        lt_rows = logtype_dict.select("logtype_id", "logtype").limit(
-            driver_dict_cap + 1
-        ).collect()
-        lt_small = len(lt_rows) <= driver_dict_cap
-        v_rows = (
-            var_dict.select("var_id", "value").limit(driver_dict_cap + 1).collect()
-            if lt_small
-            else []
+    prepared = prepare_decode(logtype_dict, var_dict, driver_dict_cap)
+    return decode_prepared(encoded, logtype_dict, var_dict, prepared, out_col)
+
+
+def decode_prepared(
+    encoded: DataFrame,
+    logtype_dict: DataFrame,
+    var_dict: DataFrame,
+    prepared: tuple,
+    out_col: str = "text",
+) -> DataFrame:
+    """decode_messages with the dictionaries already prepared by
+    prepare_decode."""
+    b_lt, b_v, lt_small = prepared
+    if b_lt is None:
+        return _decode_messages_joined(
+            encoded, logtype_dict, var_dict, out_col, lt_small
         )
-        v_small = lt_small and len(v_rows) <= driver_dict_cap
-        if not (lt_small and v_small):
-            _BROADCAST_CACHE.put(
-                cache_key, (logtype_dict, var_dict, None, None, lt_small)
-            )
-            return _decode_messages_joined(
-                encoded, logtype_dict, var_dict, out_col, lt_small
-            )
-        lt_map = {r["logtype_id"]: r["logtype"] for r in lt_rows}
-        v_map = {r["var_id"]: r["value"] for r in v_rows}
-        b_lt = spark.sparkContext.broadcast(lt_map)
-        b_v = spark.sparkContext.broadcast(v_map)
-        _BROADCAST_CACHE.put(cache_key, (logtype_dict, var_dict, b_lt, b_v, True))
 
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in encoded.schema

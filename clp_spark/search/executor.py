@@ -19,16 +19,23 @@ dictionaries in memory too — DictionaryReader.hpp:241-290). Any ID set
 larger than `_MAX_ISIN_IDS`, or a dictionary larger than
 `_MAX_DRIVER_DICT_ROWS`, degrades that branch to *unconstrained* (never
 truncated) so pruning weakens gracefully while staying a superset.
+
+The collected index and the decode broadcasts live on an `ArchiveDicts`:
+search_sinks passes the one its opened Archive handle keeps across
+queries, while search() over bare frames prepares a fresh one per call.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import cached_property, reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from clp_spark.config import PLACEHOLDER_FLOAT, PLACEHOLDER_INT
 from clp_spark.search.compiler import CompiledQuery, TokenPred, compile_query
-from clp_spark.search.decode import decode_messages
+from clp_spark.search.decode import decode_prepared, prepare_decode
 from clp_spark.search.wildcard import wildcard_to_java_regex, wildcard_to_regex
 
 # above this many candidate IDs a branch stops constraining (supersets
@@ -154,43 +161,49 @@ class _SparkDictIndex:
         )
 
 
-# df_cache_key(dict frames) → (lt_df, v_df, _DictIndex | None); file-
-# backed dicts key on their input-file lists (stable across re-reads,
-# invalidated by rewrites); in-memory dicts key on id(), pinned by the
-# cached DataFrame refs. One collect per corpus per session, not per
-# query; bounded LRU so old corpora aren't pinned forever.
-from clp_spark.util import LruCache, df_cache_key
-
-_INDEX_CACHE: LruCache = LruCache(maxsize=8)
-
-
 def _load_index(logtype_dict: DataFrame, var_dict: DataFrame):
-    """Driver-side _DictIndex under _MAX_DRIVER_DICT_ROWS (one collect
-    per corpus per session, memoized matching); above it, a
-    _SparkDictIndex that answers the same candidate-set queries with
-    distributed dict-frame filters — dictionary pushdown never silently
-    turns off."""
-    key = (df_cache_key(logtype_dict), df_cache_key(var_dict))
-    hit = _INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit[2]
+    """Driver-side _DictIndex under _MAX_DRIVER_DICT_ROWS (one collect,
+    memoized matching); above it, a _SparkDictIndex that answers the
+    same candidate-set queries with distributed dict-frame filters —
+    dictionary pushdown never silently turns off."""
     cap = _MAX_DRIVER_DICT_ROWS
     lt_rows = [
         (r["logtype_id"], r["logtype"])
         for r in logtype_dict.select("logtype_id", "logtype").limit(cap + 1).collect()
     ]
-    idx = None
     if len(lt_rows) <= cap:
         v_rows = [
             (r["var_id"], r["value"])
             for r in var_dict.select("var_id", "value").limit(cap + 1).collect()
         ]
         if len(v_rows) <= cap:
-            idx = _DictIndex(lt_rows, v_rows)
-    if idx is None:
-        idx = _SparkDictIndex(logtype_dict, var_dict)
-    _INDEX_CACHE.put(key, (logtype_dict, var_dict, idx))
-    return idx
+            return _DictIndex(lt_rows, v_rows)
+    return _SparkDictIndex(logtype_dict, var_dict)
+
+
+class ArchiveDicts:
+    """An archive's two dictionary frames plus what search derives from
+    them, each built on first use: the candidate-ID index (stages 2-3)
+    and the decode broadcasts (stage 4). An opened Archive handle
+    (search/sinks.py) keeps one for its lifetime; search() over bare
+    frames builds a fresh one per call."""
+
+    def __init__(self, logtype_dict: DataFrame, var_dict: DataFrame):
+        self.logtype_dict = logtype_dict
+        self.var_dict = var_dict
+
+    @cached_property
+    def index(self):
+        return _load_index(self.logtype_dict, self.var_dict)
+
+    @cached_property
+    def decoder(self) -> tuple:
+        return prepare_decode(self.logtype_dict, self.var_dict)
+
+    def decode(self, df: DataFrame, out_col: str) -> DataFrame:
+        return decode_prepared(
+            df, self.logtype_dict, self.var_dict, self.decoder, out_col
+        )
 
 
 def _has_meta(pattern: str) -> bool:
@@ -220,6 +233,27 @@ def _id_set_pred(col: str, ids, overlap: bool) -> Column:
     return F.expr(f"{col} IN ({body})")
 
 
+def _branch_ids(br, idx: _DictIndex, ignore_case: bool) -> tuple[str, set] | None:
+    """(ID column, candidate IDs) of a dictionary-indexable branch —
+    ("logtype_id", templates) for logtype / enc_int / enc_float,
+    ("var_id", values) for dictvar; None when the branch is not
+    indexable or its ID set is over the cap (unconstrained)."""
+    k = br.kind
+    if k == "logtype":
+        return _ids_or_none("logtype_id", idx.logtype_ids(br.pattern, ignore_case))
+    if k in ("enc_int", "enc_float"):
+        ph = PLACEHOLDER_INT if k == "enc_int" else PLACEHOLDER_FLOAT
+        return _ids_or_none("logtype_id", idx.lt_with_placeholder(ph))
+    if k == "dictvar":
+        match = idx.var_ids if _has_meta(br.pattern) else idx.var_ids_exact
+        return _ids_or_none("var_id", match(br.pattern, ignore_case))
+    return None
+
+
+def _ids_or_none(col: str, ids) -> tuple[str, set] | None:
+    return None if ids is None else (col, ids)
+
+
 def _token_pred(tp: TokenPred, idx: _DictIndex, ignore_case: bool):
     """One token's OR-of-branches → Column | None (unconstrained) |
     False (infeasible ⇒ whole query is empty)."""
@@ -229,29 +263,8 @@ def _token_pred(tp: TokenPred, idx: _DictIndex, ignore_case: bool):
         k = br.kind
         if k == "any":
             return None
-        if k == "logtype":
-            ids = idx.logtype_ids(br.pattern, ignore_case)
-            if ids is None:
-                return None
-            lt_ids |= ids
-        elif k in ("enc_int", "enc_float"):
-            ids = idx.lt_with_placeholder(
-                PLACEHOLDER_INT if k == "enc_int" else PLACEHOLDER_FLOAT
-            )
-            if ids is None:  # _SparkDictIndex over the ID cap
-                return None
-            lt_ids |= ids
-        elif k == "enc":
+        if k == "enc":
             conds.append(F.array_contains("encoded_vars", F.lit(int(br.value))))
-        elif k == "dictvar":
-            if _has_meta(br.pattern):
-                ids = idx.var_ids(br.pattern, ignore_case)
-            else:
-                ids = idx.var_ids_exact(br.pattern, ignore_case)
-            if ids is None:
-                return None
-            if ids:
-                conds.append(_id_set_pred("dict_var_ids", ids, overlap=True))
         elif k == "split":
             sub: list[Column] = []
             dead = False
@@ -266,20 +279,22 @@ def _token_pred(tp: TokenPred, idx: _DictIndex, ignore_case: bool):
                 continue  # this split interpretation is impossible
             if not sub:
                 return None  # split interpretation is unconstrained
-            c = sub[0]
-            for s in sub[1:]:
-                c = c & s
-            conds.append(c)
+            conds.append(reduce(operator.and_, sub))
+        else:
+            r = _branch_ids(br, idx, ignore_case)
+            if r is None:
+                return None
+            if r[0] == "logtype_id":
+                lt_ids |= r[1]
+            elif r[1]:
+                conds.append(_id_set_pred("dict_var_ids", r[1], overlap=True))
     if lt_ids:
         if len(lt_ids) > _MAX_ISIN_IDS:
             return None
         conds.append(_id_set_pred("logtype_id", lt_ids, overlap=False))
     if not conds:
         return False
-    out = conds[0]
-    for c in conds[1:]:
-        out = out | c
-    return out
+    return reduce(operator.or_, conds)
 
 
 def search(
@@ -303,10 +318,32 @@ def search(
     gets the superset prefilter — useful for count-only pipelines that
     still confirm later). `precompiled` lets an alternate front-end (the
     schema/DFA compiler, schema_search.py) supply the CompiledQuery
-    while the staged execution stays shared."""
+    while the staged execution stays shared. The dictionaries are
+    prepared per call; search_sinks reuses an opened archive's."""
     cq = precompiled or compile_query(
         query, ignore_case=ignore_case, substring=substring
     )
+    return run_search(
+        encoded, ArchiveDicts(logtype_dict, var_dict), cq,
+        ts_range=ts_range, ts_col=ts_col, path_filter=path_filter,
+        path_col=path_col, decode=decode, text_col=text_col,
+        require_var_order=require_var_order,
+    )
+
+
+def run_search(
+    encoded: DataFrame,
+    dicts: ArchiveDicts,
+    cq: CompiledQuery,
+    ts_range: tuple | None = None,
+    ts_col: str = "warc_ts",
+    path_filter: str | None = None,
+    path_col: str = "url",
+    decode: bool = True,
+    text_col: str = "text",
+    require_var_order: bool = False,
+) -> DataFrame:
+    """The staged search of `search`, over prepared dictionaries."""
     df = encoded
 
     # (1) timestamp range — inclusive bounds, pushed to the scan
@@ -320,33 +357,34 @@ def search(
         df = df.filter(F.col(path_col) == path_filter)
 
     if cq.match_all:
-        return decode_messages(df, logtype_dict, var_dict, text_col) if decode else df
+        return dicts.decode(df, text_col) if decode else df
 
-    # (2+3) dictionary pushdown: one Catalyst predicate per token
-    idx = _load_index(logtype_dict, var_dict)
-    if idx is not None:
-        for tp in cq.tokens:
-            p = _token_pred(tp, idx, cq.ignore_case)
-            if p is False:
-                return _empty_like(df, logtype_dict, var_dict, decode, text_col)
-            if p is not None:
-                df = df.filter(p)
+    # (2+3) dictionary pushdown: one Catalyst predicate per token, ANDed
+    # into one filter (one plan analysis per query, not one per token)
+    idx = dicts.index
+    preds: list[Column] = []
+    for tp in cq.tokens:
+        p = _token_pred(tp, idx, cq.ignore_case)
+        if p is False:
+            return _empty_like(df, dicts, decode, text_col)
+        if p is not None:
+            preds.append(p)
+    if preds:
+        df = df.filter(reduce(operator.and_, preds))
 
-        # (3b) optional refinement: query vars must appear IN ORDER as a
-        # subsequence of the message's encoded vars (Query.hpp:245-270).
-        # Pure pruning — the confirm stage stays exact either way.
-        if require_var_order and cq.ordered_vars:
-            df = _filter_var_subsequence(df, cq, idx)
-            if df is None:
-                return _empty_like(
-                    encoded.limit(0), logtype_dict, var_dict, decode, text_col
-                )
+    # (3b) optional refinement: query vars must appear IN ORDER as a
+    # subsequence of the message's encoded vars (Query.hpp:245-270).
+    # Pure pruning — the confirm stage stays exact either way.
+    if require_var_order and cq.ordered_vars:
+        df = _filter_var_subsequence(df, cq, idx)
+        if df is None:
+            return _empty_like(encoded.limit(0), dicts, decode, text_col)
 
     if not decode:
         return df
 
     # (4) decode + confirm only survivors
-    decoded = decode_messages(df, logtype_dict, var_dict, text_col)
+    decoded = dicts.decode(df, text_col)
     jrx = wildcard_to_java_regex(cq.confirm_pattern, cq.ignore_case)
     return decoded.filter(F.col(text_col).rlike("\\A(?:" + jrx + ")\\z"))
 
@@ -395,11 +433,9 @@ def _filter_var_subsequence(df, cq: CompiledQuery, idx: _DictIndex):
     return df.mapInPandas(run, schema=out_schema)
 
 
-def _empty_like(df, logtype_dict, var_dict, decode, text_col):
+def _empty_like(df, dicts: ArchiveDicts, decode, text_col):
     empty = df.limit(0)
-    if decode:
-        return decode_messages(empty, logtype_dict, var_dict, text_col)
-    return empty
+    return dicts.decode(empty, text_col) if decode else empty
 
 
 # ---- output modes (reference: clo/OutputHandler.hpp) ----

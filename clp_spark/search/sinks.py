@@ -21,16 +21,39 @@ a single data row is read. Pruning is a superset (never drops a
 matching segment); the row-level prefilter + decode-confirm stages
 then run as usual. Manifests from older archives without seg_id
 degrade gracefully to sink-level pruning.
+
+An archive is opened once (`open_archive`), as CLP loads an archive's
+dictionaries and segment indexes once and answers every later query
+from memory (DictionaryReader.hpp:241-290, Query.hpp:103-121). The
+`Archive` handle holds the sinks and dictionary frames with their file
+listings resolved, the dictionary index and decode broadcasts, the
+collected manifest pair maps and the ts zone map, each built on first
+use. Handles live in one LRU keyed by directory and checked against a
+freshness token read from the archive's append-only commit logs
+(`_manifest.jsonl` from compress and segment GC, `_stream_epochs` from
+streaming ingest): every writer appends a record after it mutates the
+archive, so the next open sees a new token and re-reads. An archive
+with no commit log is opened fresh on every call.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from clp_spark.config import PLACEHOLDER_FLOAT, PLACEHOLDER_INT
 from clp_spark.search.compiler import CompiledQuery, TokenPred, compile_query
-from clp_spark.search.executor import _DictIndex, _has_meta, _load_index, search
+from clp_spark.search.executor import (
+    ArchiveDicts,
+    _branch_ids,
+    _DictIndex,
+    _has_meta,
+    run_search,
+)
+from clp_spark.util import LruCache
 
 # manifests above this many pairs are not collected; pruning switches to
 # the DISTRIBUTED path: surviving (sink, seg) units are computed as a
@@ -44,60 +67,152 @@ _MAX_DRIVER_MANIFEST_PAIRS = 4_000_000
 # survivor sets stay as a semi-join against the sinks scan
 _MAX_UNIT_LITERALS = 10_000
 
-# collected manifest maps, keyed by (manifest DIRECTORY, freshness
-# token) — stable across queries, unlike DataFrame ids, and invalidated
-# when compress() rewrites the same out_dir (the parquet overwrite bumps
-# the files' mtimes). CLP likewise keeps segment indexes in memory
-# across queries; bounded LRU so old archives drop out.
-from clp_spark.util import LruCache
+# opened archives, keyed by directory → (commit token, Archive). Sized
+# to the largest measured traffic, perfbench's search_needle federated
+# search over nine archives. Evicting a handle drops its broadcasts to
+# Spark's ContextCleaner.
+_HANDLES: LruCache = LruCache(maxsize=9)
 
-_MANIFEST_CACHE: LruCache = LruCache(maxsize=8)
-
-
-def _dir_token(path: str) -> int:
-    """Freshness token for a manifest directory: max mtime_ns across its
-    entries and one level of subdirectory entries. One scandir pass —
-    cheap relative to a query — and any parquet overwrite rewrites the
-    part files, bumping it."""
-    tok = 0
-    try:
-        with os.scandir(path) as it:
-            for e in it:
-                try:
-                    tok = max(tok, e.stat().st_mtime_ns)
-                    if e.is_dir():
-                        with os.scandir(e.path) as it2:
-                            for e2 in it2:
-                                tok = max(tok, e2.stat().st_mtime_ns)
-                except OSError:
-                    continue
-    except OSError:
-        pass
-    return tok
+# the append-only commit logs every archive writer appends to
+_COMMIT_LOGS = ("_manifest.jsonl", "_stream_epochs")
 
 
-def _manifest_cached(spark: SparkSession, man_dir: str):
-    """(lt_pairs, var_pairs, unit_cols, lt_man_df, var_man_df) for an
-    archive's token manifests; the collected pair maps are None above
-    the driver cap (the DataFrames then drive the distributed path)."""
+def _commit_token(out_dir: str) -> tuple | None:
+    """(byte length, last record) of each commit log present; None when
+    the archive has none. Every record carries a timestamp, so a
+    rewrite into the same directory changes the token even when every
+    file keeps its mtime and the logs their lengths."""
+    tok = []
+    for name in _COMMIT_LOGS:
+        try:
+            with open(os.path.join(out_dir, name), "rb") as f:
+                size = f.seek(0, os.SEEK_END)
+                f.seek(max(0, size - 4096))
+                last = f.read().rstrip(b"\n").rsplit(b"\n", 1)[-1]
+        except FileNotFoundError:
+            continue
+        tok.append((name, size, last))
+    return tuple(tok) or None
+
+
+def open_archive(spark: SparkSession, out_dir: str) -> "Archive":
+    """The search handle of a compress() output directory: reused while
+    its commit token is unchanged, re-opened after any commit. A crashed
+    GC swap is healed first, on every open."""
     from clp_spark.route.gc import _heal_dir
 
-    _heal_dir(os.path.join(man_dir, "logtype"))
-    _heal_dir(os.path.join(man_dir, "var"))
-    key = (man_dir, _dir_token(man_dir))
-    cached = _MANIFEST_CACHE.get(key)
-    if cached is None:
-        lt_man = spark.read.parquet(os.path.join(man_dir, "logtype"))
-        var_man = spark.read.parquet(os.path.join(man_dir, "var"))
-        cached = (
+    for name in ("logtype", "var", "segments"):
+        _heal_dir(os.path.join(out_dir, "manifest", name))
+    token = _commit_token(out_dir)
+    if token is None:
+        return Archive(spark, out_dir)
+    key = os.path.abspath(out_dir)
+    hit = _HANDLES.get(key)
+    if hit is not None and hit[0] == token and hit[1].spark is spark:
+        return hit[1]
+    arch = Archive(spark, out_dir)
+    _HANDLES.put(key, (token, arch))
+    return arch
+
+
+class Archive:
+    """One opened compress() archive. Every part is read on first use
+    and kept: the parquet frames keep their resolved file listings, so
+    a later query plans without listing or footer reads."""
+
+    def __init__(self, spark: SparkSession, out_dir: str):
+        self.spark = spark
+        self.out_dir = out_dir
+        self.man_dir = os.path.join(out_dir, "manifest")
+
+    def _read(self, *parts: str) -> DataFrame:
+        return self.spark.read.parquet(os.path.join(self.out_dir, *parts))
+
+    @cached_property
+    def sinks(self) -> DataFrame:
+        return self._read("sinks")
+
+    @cached_property
+    def dicts(self) -> ArchiveDicts:
+        return ArchiveDicts(self._read("dicts", "logtype"), self._read("dicts", "var"))
+
+    @cached_property
+    def manifest(self) -> tuple:
+        """(lt_pairs, var_pairs, unit_cols, lt_man, var_man) of the token
+        manifests; the collected pair maps are None above the driver cap
+        (the DataFrames then drive the distributed path)."""
+        lt_man = self._read("manifest", "logtype")
+        var_man = self._read("manifest", "var")
+        return (
             _collect_pairs(lt_man, "logtype_id"),
             _collect_pairs(var_man, "var_id"),
             _unit_cols(lt_man),
             lt_man,
             var_man,
         )
-        _MANIFEST_CACHE.put(key, cached)
-    return cached
+
+    @cached_property
+    def zone_map(self) -> tuple | None:
+        """(rows, unit_cols, ts_src) of the segments manifest, rows being
+        (unit, ts_min, ts_max); None when it has no timestamp columns.
+        Manifests predating ts_src are warc_ts-sourced (the historical
+        default of segment_summary)."""
+        if not os.path.isdir(os.path.join(self.man_dir, "segments")):
+            return None
+        seg = self._read("manifest", "segments")
+        if "ts_min" not in seg.columns:
+            return None
+        unit_cols = _unit_cols(seg)
+        ts_src = "warc_ts"
+        if "ts_src" in seg.columns:
+            src_rows = seg.select("ts_src").limit(1).collect()
+            ts_src = src_rows[0]["ts_src"] if src_rows else None
+        rows = [
+            (tuple(r[c] for c in unit_cols), r["ts_min"], r["ts_max"])
+            for r in seg.select(*unit_cols, "ts_min", "ts_max").collect()
+        ]
+        return rows, unit_cols, ts_src
+
+    def ts_units(self, ts_range: tuple, ts_col: str) -> tuple[list, list[str]] | None:
+        """ts_surviving_units over the collected zone map (filtered
+        driver-side per query; the compares are trivial). The zone map
+        applies ONLY when it was built from the query's ts_col; a
+        warc_ts zone map must not prune a ts_ms query."""
+        zm = self.zone_map
+        if zm is None or zm[2] != ts_col:
+            return None
+        rows, unit_cols, _ = zm
+        lo, hi = ts_range
+
+        def _cmp_key(v):
+            # ts bounds may arrive as ISO strings (executor semantics allow
+            # string/timestamp comparison); normalize for the driver compare.
+            # Applied to BOTH sides — a string-typed warc_ts column yields
+            # string zone-map bounds, which must not str-vs-datetime crash.
+            if isinstance(v, str):
+                return datetime.datetime.fromisoformat(v)
+            return v
+
+        lo_k = _cmp_key(lo) if lo is not None else None
+        hi_k = _cmp_key(hi) if hi is not None else None
+
+        def _survives(tmin, tmax):
+            # NULL bounds (an all-null-ts segment) mean "unknown": the zone
+            # map cannot prove non-overlap, so the unit must SURVIVE — the
+            # sound degrade direction (same rule as Spark's null-safe
+            # filters in ts_surviving_units)
+            if tmin is None or tmax is None:
+                return True
+            try:
+                return (lo_k is None or _cmp_key(tmax) >= lo_k) and (
+                    hi_k is None or _cmp_key(tmin) <= hi_k
+                )
+            except TypeError:
+                # incomparable unit mix (e.g. int zone map vs datetime
+                # query): cannot prove non-overlap — survive, never prune
+                return True
+
+        return [u for u, tmin, tmax in rows if _survives(tmin, tmax)], unit_cols
 
 
 def _unit_cols(df: DataFrame) -> list[str]:
@@ -131,34 +246,7 @@ def _token_units(
     """Prune units where this token could match; None = all units."""
     out: set = set()
     for br in tp.branches:
-        k = br.kind
-        if k in ("any", "enc"):
-            return None  # encoded int/float values are not segment-indexed
-        if k in ("logtype", "enc_int", "enc_float"):
-            if k == "logtype":
-                ids = idx.logtype_ids(br.pattern, ignore_case)
-            else:
-                from clp_spark.config import PLACEHOLDER_FLOAT, PLACEHOLDER_INT
-
-                ids = idx.lt_with_placeholder(
-                    PLACEHOLDER_INT if k == "enc_int" else PLACEHOLDER_FLOAT
-                )
-            if ids is None:
-                return None
-            for i in ids:
-                out |= lt_units.get(i, set())
-        elif k == "dictvar":
-            if var_units is None:
-                return None
-            if _has_meta(br.pattern):
-                ids = idx.var_ids(br.pattern, ignore_case)
-            else:
-                ids = idx.var_ids_exact(br.pattern, ignore_case)
-            if ids is None:
-                return None
-            for i in ids:
-                out |= var_units.get(i, set())
-        elif k == "split":
+        if br.kind == "split":
             # split = AND of parts → intersection; part None ⇒ no info
             acc: set | None = None
             for part in br.parts:
@@ -169,6 +257,14 @@ def _token_units(
             if acc is None:
                 return None
             out |= acc
+            continue
+        # 'any' / 'enc': encoded int/float values are not segment-indexed
+        r = _branch_ids(br, idx, ignore_case)
+        units = lt_units if r and r[0] == "logtype_id" else var_units
+        if r is None or units is None:
+            return None
+        for i in r[1]:
+            out |= units.get(i, set())
     return out
 
 
@@ -199,8 +295,7 @@ def _ids_filter(df: DataFrame, col: str, ids) -> DataFrame:
     _MAX_ISIN_IDS by the dict index) candidate ID set — one SQL IN."""
     if not ids:
         return df.limit(0)
-    body = ",".join(str(int(i)) for i in sorted(ids))
-    return df.filter(F.expr(f"{col} IN ({body})"))
+    return df.filter(f"{col} IN ({_int_list(ids)})")
 
 
 def _token_units_df(
@@ -218,32 +313,7 @@ def _token_units_df(
     semi-joins, so the manifests never have to fit on the driver."""
     parts: list[DataFrame] = []
     for br in tp.branches:
-        k = br.kind
-        if k in ("any", "enc"):
-            return None
-        if k in ("logtype", "enc_int", "enc_float"):
-            if k == "logtype":
-                ids = idx.logtype_ids(br.pattern, ignore_case)
-            else:
-                from clp_spark.config import PLACEHOLDER_FLOAT, PLACEHOLDER_INT
-
-                ids = idx.lt_with_placeholder(
-                    PLACEHOLDER_INT if k == "enc_int" else PLACEHOLDER_FLOAT
-                )
-            if ids is None:
-                return None
-            parts.append(_ids_filter(lt_man, "logtype_id", ids).select(*unit_cols))
-        elif k == "dictvar":
-            if var_man is None:
-                return None
-            if _has_meta(br.pattern):
-                ids = idx.var_ids(br.pattern, ignore_case)
-            else:
-                ids = idx.var_ids_exact(br.pattern, ignore_case)
-            if ids is None:
-                return None
-            parts.append(_ids_filter(var_man, "var_id", ids).select(*unit_cols))
-        elif k == "split":
+        if br.kind == "split":
             acc: DataFrame | None = None
             for part in br.parts:
                 s = _token_units_df(part, idx, ignore_case, lt_man, var_man, unit_cols)
@@ -253,6 +323,12 @@ def _token_units_df(
             if acc is None:
                 return None
             parts.append(acc)
+            continue
+        r = _branch_ids(br, idx, ignore_case)
+        man = lt_man if r and r[0] == "logtype_id" else var_man
+        if r is None or man is None:
+            return None
+        parts.append(_ids_filter(man, r[0], r[1]).select(*unit_cols))
     if not parts:
         return lt_man.select(*unit_cols).limit(0)  # token infeasible
     out = parts[0]
@@ -313,24 +389,29 @@ def prune_sink_ids(
     return sorted({u[0] for u in units})
 
 
-def unit_filter(units: list, unit_cols: list[str]):
-    """Partition predicate selecting exactly these prune units.
+def unit_filter(units: list, unit_cols: list[str]) -> str:
+    """Partition predicate selecting exactly these prune units, as one
+    SQL expression string: one parse on the JVM instead of a Column tree
+    built literal by literal over py4j.
 
-    Grouped per sink — `sink_id == s AND seg_id IN (...)` OR'd across
+    Grouped per sink — `sink_id = s AND seg_id IN (...)` OR'd across
     sinks — so Catalyst folds it into PartitionFilters and the parquet
     scan lists only the surviving sink/segment directories."""
     if not units:
-        return F.lit(False)
+        return "false"
     if len(unit_cols) == 1:
-        return F.col("sink_id").isin([u[0] for u in units])
+        return f"sink_id IN ({_int_list(u[0] for u in units)})"
     by_sink: dict = {}
     for s, g in units:
         by_sink.setdefault(s, []).append(g)
-    pred = None
-    for s, segs in sorted(by_sink.items()):
-        p = (F.col("sink_id") == s) & F.col("seg_id").isin(sorted(segs))
-        pred = p if pred is None else (pred | p)
-    return pred
+    return " OR ".join(
+        f"(sink_id = {int(s)} AND seg_id IN ({_int_list(segs)}))"
+        for s, segs in sorted(by_sink.items())
+    )
+
+
+def _int_list(values) -> str:
+    return ",".join(str(int(v)) for v in sorted(values))
 
 
 def ts_surviving_units(
@@ -353,73 +434,52 @@ def ts_surviving_units(
     return [tuple(r[c] for c in unit_cols) for r in rows], unit_cols
 
 
-def _ts_units_cached(
-    spark: SparkSession, seg_dir: str, ts_range: tuple, ts_col: str
-):
-    """ts_surviving_units over a CACHED zone map: the segments table is
-    one row per (sink, seg) — collect it once per archive, filter the
-    driver-side copy per query (zone-map compares are trivial). The zone
-    map applies ONLY when it was built from the query's ts_col (the
-    manifest records its source in ts_src); a warc_ts zone map must not
-    prune a ts_ms query. Manifests predating ts_src are treated as
-    warc_ts-sourced (the historical default of segment_summary)."""
-    from clp_spark.route.gc import _heal_dir
-
-    _heal_dir(seg_dir)
-    cached = _MANIFEST_CACHE.get(("segments", seg_dir, _dir_token(seg_dir)))
-    if cached is None:
-        seg = spark.read.parquet(seg_dir)
-        if "ts_min" not in seg.columns:
-            cached = (None, _unit_cols(seg), None)
+def _surviving_units(
+    arch: Archive, cq: CompiledQuery, ts_range: tuple | None, ts_col: str
+) -> tuple:
+    """The one unit-pruning pass over an opened archive: token manifests
+    (collected maps, or the distributed semi-join above the driver cap),
+    then the ts zone map. Returns (units, units_df, unit_cols): `units`
+    the surviving prune-unit set (None = cannot prune); `units_df` set
+    instead when a distributed survivor set exceeds _MAX_UNIT_LITERALS
+    and must stay a semi-join."""
+    if not os.path.isdir(arch.man_dir):
+        return None, None, None
+    units: set | None = None
+    unit_cols: list[str] | None = None
+    units_df: DataFrame | None = None
+    if not cq.match_all:
+        idx = arch.dicts.index
+        lt_pairs, var_pairs, man_cols, lt_man, var_man = arch.manifest
+        if lt_pairs is not None:
+            r = _prune_from_pairs(cq, idx, lt_pairs, var_pairs, man_cols)
+            if r is not None:
+                units, unit_cols = set(r[0]), r[1]
         else:
-            unit_cols = _unit_cols(seg)
-            if "ts_src" in seg.columns:
-                src_rows = seg.select("ts_src").limit(1).collect()
-                ts_src = src_rows[0]["ts_src"] if src_rows else None
-            else:
-                ts_src = "warc_ts"
-            rows = [
-                (tuple(r[c] for c in unit_cols), r["ts_min"], r["ts_max"])
-                for r in seg.select(*unit_cols, "ts_min", "ts_max").collect()
-            ]
-            cached = (rows, unit_cols, ts_src)
-        _MANIFEST_CACHE.put(("segments", seg_dir, _dir_token(seg_dir)), cached)
-    rows, unit_cols, ts_src = cached
-    if rows is None or ts_src != ts_col:
-        return None
-    lo, hi = ts_range
-    import datetime
-
-    def _cmp_key(v):
-        # ts bounds may arrive as ISO strings (executor semantics allow
-        # string/timestamp comparison); normalize for the driver compare.
-        # Applied to BOTH sides — a string-typed warc_ts column yields
-        # string zone-map bounds, which must not str-vs-datetime crash.
-        if isinstance(v, str):
-            return datetime.datetime.fromisoformat(v)
-        return v
-
-    lo_k = _cmp_key(lo) if lo is not None else None
-    hi_k = _cmp_key(hi) if hi is not None else None
-
-    def _survives(tmin, tmax):
-        # NULL bounds (an all-null-ts segment) mean "unknown": the zone
-        # map cannot prove non-overlap, so the unit must SURVIVE — the
-        # sound degrade direction (same rule as Spark's null-safe
-        # filters in the DataFrame path this cache replaced)
-        if tmin is None or tmax is None:
-            return True
-        try:
-            return (lo_k is None or _cmp_key(tmax) >= lo_k) and (
-                hi_k is None or _cmp_key(tmin) <= hi_k
-            )
-        except TypeError:
-            # incomparable unit mix (e.g. int zone map vs datetime
-            # query): cannot prove non-overlap — survive, never prune
-            return True
-
-    out = [u for u, tmin, tmax in rows if _survives(tmin, tmax)]
-    return out, unit_cols
+            # manifests above the driver cap: distributed pruning
+            # (manifest filters + semi-joins; SURVEY §2.3's manifest
+            # semi-join shape)
+            units_df = _prune_units_distributed(cq, idx, lt_man, var_man, man_cols)
+            unit_cols = man_cols
+    if ts_range is not None:
+        r = arch.ts_units(ts_range, ts_col)
+        if r is not None:
+            ts_units, ts_cols = set(r[0]), r[1]
+            if units_df is not None:
+                if unit_cols == ts_cols:
+                    units_df = units_df.filter(unit_filter(sorted(ts_units), ts_cols))
+            elif units is None:
+                units, unit_cols = ts_units, ts_cols
+            elif unit_cols == ts_cols:
+                units &= ts_units
+    if units_df is not None:
+        # adaptive: a small survivor set collects into a literal
+        # partition predicate (whole sink/segment directories pruned at
+        # scan planning); a large one stays distributed
+        rows = units_df.limit(_MAX_UNIT_LITERALS + 1).collect()
+        if len(rows) <= _MAX_UNIT_LITERALS:
+            units, units_df = {tuple(r[c] for c in unit_cols) for r in rows}, None
+    return units, units_df, unit_cols
 
 
 def surviving_unit_filter(
@@ -431,55 +491,17 @@ def surviving_unit_filter(
     ts_range: tuple | None = None,
     ts_col: str = "warc_ts",
 ):
-    """(predicate | None, provably_empty) for one archive: the combined
-    token-manifest + ts-zone-map prune. predicate None = cannot prune;
+    """(SQL predicate | None, provably_empty) for one archive: the
+    combined token-manifest + ts-zone-map prune. predicate None = cannot
+    prune (also when the survivors are too many to list);
     provably_empty = the archive cannot contain matches at all."""
-    lt_dict = spark.read.parquet(os.path.join(out_dir, "dicts", "logtype"))
-    v_dict = spark.read.parquet(os.path.join(out_dir, "dicts", "var"))
     cq = compile_query(query, ignore_case=ignore_case, substring=substring)
-    man_dir = os.path.join(out_dir, "manifest")
-    if not os.path.isdir(man_dir):
-        return None, False
-    units: set | None = None
-    unit_cols: list[str] | None = None
-    if not cq.match_all:
-        idx = _load_index(lt_dict, v_dict)
-        if idx is not None:
-            lt_pairs, var_pairs, man_cols, lt_man, var_man = _manifest_cached(
-                spark, man_dir
-            )
-            if lt_pairs is not None:
-                r = _prune_from_pairs(cq, idx, lt_pairs, var_pairs, man_cols)
-                if r is not None:
-                    units, unit_cols = set(r[0]), r[1]
-            else:
-                # over-cap manifests: the archive-level verdict collects
-                # only up to the literal cap; past it, leave the real
-                # pruning to search_sinks' semi-join
-                units_df = _prune_units_distributed(
-                    cq, idx, lt_man, var_man, man_cols
-                )
-                if units_df is not None:
-                    rows = units_df.limit(_MAX_UNIT_LITERALS + 1).collect()
-                    if len(rows) <= _MAX_UNIT_LITERALS:
-                        units = {tuple(r[c] for c in man_cols) for r in rows}
-                        unit_cols = man_cols
-    from clp_spark.route.gc import _heal_dir
-
-    seg_dir = _heal_dir(os.path.join(man_dir, "segments"))
-    if ts_range is not None and os.path.isdir(seg_dir):
-        r = _ts_units_cached(spark, seg_dir, ts_range, ts_col)
-        if r is not None:
-            ts_units, ts_cols = set(r[0]), r[1]
-            if units is None:
-                units, unit_cols = ts_units, ts_cols
-            elif unit_cols == ts_cols:
-                units &= ts_units
+    units, _units_df, unit_cols = _surviving_units(
+        open_archive(spark, out_dir), cq, ts_range, ts_col
+    )
     if units is None:
         return None, False
-    if not units:
-        return F.lit(False), True
-    return unit_filter(sorted(units), unit_cols), False
+    return unit_filter(sorted(units), unit_cols), not units
 
 
 def _plan_probes(cq: CompiledQuery):
@@ -493,7 +515,6 @@ def _plan_probes(cq: CompiledQuery):
       ("lt"|"var", pid)   -> branch needs that probe to hit
       ("and", [trees])    -> split: every constrained part must hit
     """
-    from clp_spark.config import PLACEHOLDER_FLOAT, PLACEHOLDER_INT
     from clp_spark.search.wildcard import wildcard_to_java_regex
 
     lt_conds: list = []
@@ -751,69 +772,21 @@ def search_sinks(
     **kwargs,
 ) -> DataFrame:
     """Search a persisted compress() output directory: segment-manifest
-    pruning (stage 2) + the regular staged search. Accepts the same
-    keyword arguments as executor.search."""
-    sinks = spark.read.parquet(os.path.join(out_dir, "sinks"))
-    lt_dict = spark.read.parquet(os.path.join(out_dir, "dicts", "logtype"))
-    v_dict = spark.read.parquet(os.path.join(out_dir, "dicts", "var"))
-
-    cq = compile_query(
-        query,
-        ignore_case=kwargs.get("ignore_case", False),
-        substring=kwargs.get("substring", True),
+    pruning (stage 2) + the regular staged search, both over the opened
+    archive's cached state. Accepts the same keyword arguments as
+    executor.search."""
+    arch = open_archive(spark, out_dir)
+    ignore_case = kwargs.pop("ignore_case", False)
+    substring = kwargs.pop("substring", True)
+    cq = kwargs.pop("precompiled", None) or compile_query(
+        query, ignore_case=ignore_case, substring=substring
     )
-    man_dir = os.path.join(out_dir, "manifest")
-    if os.path.isdir(man_dir):
-        units: set | None = None
-        unit_cols: list[str] | None = None
-        units_df: DataFrame | None = None
-        if not cq.match_all:
-            idx = _load_index(lt_dict, v_dict)
-            if idx is not None:
-                lt_pairs, var_pairs, man_cols, lt_man, var_man = (
-                    _manifest_cached(spark, man_dir)
-                )
-                if lt_pairs is not None:
-                    r = _prune_from_pairs(cq, idx, lt_pairs, var_pairs, man_cols)
-                    if r is not None:
-                        units, unit_cols = set(r[0]), r[1]
-                else:
-                    # manifests above the driver cap: distributed pruning
-                    # (manifest filters + semi-joins; SURVEY §2.3's
-                    # manifest semi-join shape)
-                    units_df = _prune_units_distributed(
-                        cq, idx, lt_man, var_man, man_cols
-                    )
-                    unit_cols = man_cols
-        ts_range = kwargs.get("ts_range")
-        from clp_spark.route.gc import _heal_dir
-
-        seg_dir = _heal_dir(os.path.join(man_dir, "segments"))
-        if ts_range is not None and os.path.isdir(seg_dir):
-            r = _ts_units_cached(
-                spark, seg_dir, ts_range, kwargs.get("ts_col", "warc_ts")
-            )
-            if r is not None:
-                ts_units, ts_cols = set(r[0]), r[1]
-                if units_df is not None:
-                    if unit_cols == ts_cols:
-                        units_df = units_df.filter(
-                            unit_filter(sorted(ts_units), ts_cols)
-                        )
-                elif units is None:
-                    units, unit_cols = ts_units, ts_cols
-                elif unit_cols == ts_cols:
-                    units &= ts_units
-        if units_df is not None:
-            # adaptive: a small survivor set collects into a literal
-            # partition predicate (whole sink/segment directories pruned
-            # at scan planning); a large one stays distributed as a
-            # semi-join against the sinks scan
-            rows = units_df.limit(_MAX_UNIT_LITERALS + 1).collect()
-            if len(rows) <= _MAX_UNIT_LITERALS:
-                units = {tuple(r[c] for c in unit_cols) for r in rows}
-            else:
-                sinks = sinks.join(units_df, unit_cols, "left_semi")
-        if units is not None:
-            sinks = sinks.filter(unit_filter(sorted(units), unit_cols))
-    return search(sinks, lt_dict, v_dict, query, **kwargs)
+    units, units_df, unit_cols = _surviving_units(
+        arch, cq, kwargs.get("ts_range"), kwargs.get("ts_col", "warc_ts")
+    )
+    sinks = arch.sinks
+    if units_df is not None:
+        sinks = sinks.join(units_df, unit_cols, "left_semi")
+    elif units is not None:
+        sinks = sinks.filter(unit_filter(sorted(units), unit_cols))
+    return run_search(sinks, arch.dicts, cq, **kwargs)

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -55,7 +56,9 @@ def _epoch_done(out_dir: str, epoch_id: int) -> bool:
 def _mark_epoch(out_dir: str, epoch_id: int, **stats) -> None:
     marker = os.path.join(out_dir, "_stream_epochs")
     with open(marker, "a") as f:
-        f.write(json.dumps({"epoch": epoch_id, **stats}) + "\n")
+        # ts makes every record unique: epoch ids restart at 0 when the
+        # archive and its checkpoint are deleted and the input re-streamed
+        f.write(json.dumps({"epoch": epoch_id, "ts": time.time(), **stats}) + "\n")
         f.flush()
         os.fsync(f.fileno())
 

@@ -17,12 +17,11 @@ from pyspark.sql import DataFrame
 
 
 class LruCache(OrderedDict):
-    """Tiny bounded cache for per-session query-time state (collected
-    dictionaries, broadcast handles). Keys include id(DataFrame); the
-    cached tuple pins the DataFrame so the id stays valid. Eviction just
-    drops the reference — Spark's ContextCleaner reclaims any broadcast
-    once the driver-side handle (and the plans that captured it) are
-    GC'd, so nothing is pinned forever (round-2 leak fix)."""
+    """Tiny bounded cache for per-session query-time state (the opened
+    archive handles of search/sinks.py). Eviction just drops the
+    reference — Spark's ContextCleaner reclaims any broadcast once the
+    driver-side handle (and the plans that captured it) are GC'd, so
+    nothing is pinned forever."""
 
     def __init__(self, maxsize: int = 8):
         super().__init__()
@@ -39,24 +38,6 @@ class LruCache(OrderedDict):
         self.move_to_end(key)
         while len(self) > self.maxsize:
             self.popitem(last=False)
-
-
-def df_cache_key(df: DataFrame):
-    """Stable cache key for a dictionary DataFrame.
-
-    File-backed frames key on their resolved input-file list (stable
-    across re-reads of the same path AND changed when the files are
-    rewritten — a recompress into the same dir must not serve stale
-    broadcasts). In-memory frames fall back to id(df); that is safe
-    ONLY because every cache stores the DataFrame in its value, pinning
-    the object so its id cannot be reused while the entry lives."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if files:
-        return ("files", hash(tuple(sorted(files))))
-    return ("id", id(df))
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -39,11 +39,11 @@ def corpus(spark, pages_pdf, pages_df):
 
 @pytest.fixture()
 def tiny_dict_cap(monkeypatch):
-    from clp_spark.search import executor
+    from clp_spark.search import executor, sinks
 
     monkeypatch.setattr(executor, "_MAX_DRIVER_DICT_ROWS", 3)
-    # fresh cache: the same dict frames must re-resolve under the cap
-    monkeypatch.setattr(executor, "_INDEX_CACHE", executor.LruCache(maxsize=8))
+    # fresh handles: archives opened under the tiny cap stay in this test
+    monkeypatch.setattr(sinks, "_HANDLES", sinks.LruCache(maxsize=sinks._HANDLES.maxsize))
 
 
 def _oracle_urls(pages_pdf, query, ignore_case=False):
@@ -62,10 +62,7 @@ def test_load_index_returns_spark_index_above_cap(corpus, tiny_dict_cap):
 
 
 def test_load_index_driver_below_cap(corpus):
-    from clp_spark.search import executor
-
     _encoded, lt_dict, v_dict = corpus
-    executor._INDEX_CACHE = executor.LruCache(maxsize=8)
     assert isinstance(_load_index(lt_dict, v_dict), _DictIndex)
 
 
@@ -96,10 +93,7 @@ def test_spark_index_plan_keeps_dict_pushdown(corpus, tiny_dict_cap):
 def test_spark_index_candidate_sets_match_driver(corpus):
     """Every candidate-set query answers identically through both
     index engines (the memoized driver matcher is the semantics)."""
-    from clp_spark.search import executor
-
     _encoded, lt_dict, v_dict = corpus
-    executor._INDEX_CACHE = executor.LruCache(maxsize=8)
     drv = _load_index(lt_dict, v_dict)
     assert isinstance(drv, _DictIndex)
     sp = _SparkDictIndex(lt_dict, v_dict)
@@ -131,10 +125,10 @@ def test_sink_pruning_through_spark_index(spark, pages_df, tmp_path,
         for r in search_sinks(spark, out, "user=alice").select("url").collect()
     }
     # un-forced twin: same archive searched through the driver index
-    from clp_spark.search import executor
+    from clp_spark.search import executor, sinks
 
     executor._MAX_DRIVER_DICT_ROWS = 2_000_000  # monkeypatch restores 3→real
-    executor._INDEX_CACHE = executor.LruCache(maxsize=8)
+    sinks._HANDLES.clear()
     want = {
         r["url"]
         for r in search_sinks(spark, out, "user=alice").select("url").collect()

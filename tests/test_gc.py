@@ -189,8 +189,6 @@ def test_crashed_swap_self_heals(spark, archive):
     instead of failing on the missing directory."""
     import shutil
 
-    from clp_spark.search import sinks as sinks_mod
-
     out, _res = archive
     before = search_sinks(spark, out, QUERY).count()
     assert before > 0
@@ -199,7 +197,6 @@ def test_crashed_swap_self_heals(spark, archive):
     for name in ("segments", "logtype", "var"):
         live = os.path.join(out, "manifest", name)
         os.rename(live, live + ".gc_old")
-    sinks_mod._MANIFEST_CACHE.clear()
 
     # search heals the token + zone-map manifests on open
     assert search_sinks(spark, out, QUERY).count() == before
@@ -216,7 +213,6 @@ def test_crashed_swap_self_heals(spark, archive):
         os.rename(live, live + ".gc_old")
     got = expire_segments(out, cutoff)
     assert got["segments_deleted"] >= 0
-    sinks_mod._MANIFEST_CACHE.clear()
     after = search_sinks(spark, out, QUERY).count()
     assert 0 < after <= before
 

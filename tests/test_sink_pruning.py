@@ -297,7 +297,7 @@ def test_distributed_pruning_above_driver_cap(
 
     # end-to-end: force the tiny cap, clear the cache, search — exact
     monkeypatch.setattr(S, "_MAX_DRIVER_MANIFEST_PAIRS", 1)
-    S._MANIFEST_CACHE.clear()
+    S._HANDLES.clear()
     try:
         got = {
             row["url"]
@@ -306,49 +306,50 @@ def test_distributed_pruning_above_driver_cap(
         assert got == _oracle(pages_pdf, q)
         # the huge-survivor-set branch too: collect cap of 0 literals
         monkeypatch.setattr(S, "_MAX_UNIT_LITERALS", 0)
-        S._MANIFEST_CACHE.clear()
+        S._HANDLES.clear()
         got2 = {
             row["url"]
             for row in S.search_sinks(spark, out, q).select("url").collect()
         }
         assert got2 == _oracle(pages_pdf, q)
     finally:
-        S._MANIFEST_CACHE.clear()
+        S._HANDLES.clear()
 
 
 def test_ts_zone_map_requires_matching_ts_col(spark, compressed, pages_pdf):
     """The segments zone map was built from warc_ts; a query filtering a
     DIFFERENT ts column must not be pruned with it (round-4 advice:
     unsound drops / TypeError when an archive has both columns)."""
-    from clp_spark.search.sinks import _ts_units_cached
+    from clp_spark.search.sinks import open_archive
 
     out, res = compressed
     seg_dir = res["sink_manifest"] + "/segments"
     seg = spark.read.parquet(seg_dir)
     assert "ts_src" in seg.columns
     lo = pages_pdf["warc_ts"].quantile(0.5).to_pydatetime()
-    assert _ts_units_cached(spark, seg_dir, (lo, None), "warc_ts") is not None
-    assert _ts_units_cached(spark, seg_dir, (0, None), "ts_ms") is None
+    arch = open_archive(spark, out)
+    assert arch.ts_units((lo, None), "warc_ts") is not None
+    assert arch.ts_units((0, None), "ts_ms") is None
 
 
 def test_manifest_cache_invalidated_on_rewrite(spark, pages_pdf, tmp_path):
     """Rewriting an archive's manifests in place (recompress into the
-    same out_dir) must invalidate the driver-side manifest cache —
-    stale maps would silently drop segments that now contain matches."""
-    import time
-
-    from clp_spark.search.sinks import _manifest_cached
+    same out_dir) must invalidate the opened archive's manifest maps —
+    stale maps would silently drop segments that now contain matches.
+    Like every archive writer, the rewrite ends with a commit record."""
+    from clp_spark.checkpoint import RunManifest
+    from clp_spark.search.sinks import open_archive
 
     out = str(tmp_path / "fresh_arch")
     compress(spark, spark.createDataFrame(pages_pdf.iloc[:200]), out, CFG)
     man_dir = out + "/manifest"
-    first = _manifest_cached(spark, man_dir)
+    first = open_archive(spark, out).manifest
     assert first[0] is not None
-    time.sleep(0.02)
     spark.createDataFrame(
         [(0, 0, 424242)], "sink_id bigint, seg_id bigint, logtype_id bigint"
     ).write.mode("overwrite").parquet(man_dir + "/logtype")
-    second = _manifest_cached(spark, man_dir)
+    RunManifest(out).commit("route", "route", RunManifest.new_run_id())
+    second = open_archive(spark, out).manifest
     assert set(second[0][0].keys()) == {424242}
 
 
@@ -459,8 +460,8 @@ def test_null_ts_bounds_segment_survives_zone_map(spark, tmp_path):
 
     from clp_spark.search import sinks as sinks_mod
 
-    seg_dir = tmp_path / "segments"
-    seg_dir.mkdir()
+    seg_dir = tmp_path / "manifest" / "segments"
+    seg_dir.mkdir(parents=True)
     import datetime as dt
 
     tbl = pa.table(
@@ -478,10 +479,7 @@ def test_null_ts_bounds_segment_survives_zone_map(spark, tmp_path):
         }
     )
     pq.write_table(tbl, str(seg_dir / "part-00000.parquet"))
-    sinks_mod._MANIFEST_CACHE.clear()
-    r = sinks_mod._ts_units_cached(
-        spark,
-        str(seg_dir),
+    r = sinks_mod.open_archive(spark, str(tmp_path)).ts_units(
         (dt.datetime(2024, 6, 1), dt.datetime(2024, 6, 2)),
         "warc_ts",
     )
