@@ -366,9 +366,9 @@ class JsonArchive:
     def dict_index(self):
         """Candidate-ID index over this archive's dictionaries, built on
         first use and kept for the archive's lifetime."""
-        from clp_spark.search.executor import _load_index
+        from clp_spark.search.executor import ArchiveDicts
 
-        return _load_index(self.logtype_dict, self.var_dict)
+        return ArchiveDicts(self.logtype_dict, self.var_dict).index
 
     def save(self, out_dir: str) -> None:
         """Persist the archive (ArchiveWriter analog: schema_tree,

@@ -273,23 +273,6 @@ def write_dict_parquet(
     write_driver_table(tbl, dirpath, compression)
 
 
-def build_dicts_small(
-    parsed: DataFrame, sample_cap: int = 300_000
-) -> tuple[DataFrame, DataFrame, dict, dict] | None:
-    """DataFrame-returning wrapper over build_dicts_small_pandas (for
-    in-memory pipelines that hand the dicts straight to search)."""
-    r = build_dicts_small_pandas(parsed, sample_cap)
-    if r is None:
-        return None
-    lt_pdf, v_pdf, lt_map, v_map, _ = r
-    spark = parsed.sparkSession
-    lt_df = spark.createDataFrame(
-        lt_pdf, "logtype_id long, logtype string, num_vars int, n_rows long"
-    )
-    v_df = spark.createDataFrame(v_pdf, "var_id long, value string")
-    return lt_df, v_df, lt_map, v_map
-
-
 # per-worker-process cache of (pd.Index, id ndarray) hashtables for
 # broadcast {str: id} maps, keyed by broadcast id — the index build
 # (one hash insert per dictionary entry) is paid once per worker, then
@@ -386,7 +369,7 @@ def encode_with_maps(
     parsed: DataFrame, logtype_map: dict, var_map: dict
 ) -> DataFrame:
     """Enrich with logtype_id + var IDs in one Arrow pass using broadcast
-    maps — no joins, no extra jobs (pairs with build_dicts_small).
+    maps — no joins, no extra jobs (pairs with build_dicts_small_pandas).
     Vectorized: see _encode_batches_arrow."""
     spark = parsed.sparkSession
     b_lt = spark.sparkContext.broadcast(logtype_map)
@@ -467,7 +450,6 @@ def encode_with_dicts(
     logtype_dict: DataFrame,
     var_dict: DataFrame,
     broadcast_threshold: int = 300_000,
-    key_col: str | None = None,
 ) -> DataFrame:
     """Enrich parsed rows with logtype_id and dictionary-var IDs.
 
@@ -477,8 +459,7 @@ def encode_with_dicts(
     explode/join/regroup (2 shuffles) if the dictionary is too large to
     broadcast. The regroup key is a synthesized unique row id (pinned by
     persisting the keyed frame) — never a caller column, which may not
-    be unique. key_col is accepted for backward compatibility and
-    ignored. Output schema matches FIXTURES.md §3 `encoded`.
+    be unique. Output schema matches FIXTURES.md §3 `encoded`.
     """
     spark = parsed.sparkSession
     with_lt = parsed.join(

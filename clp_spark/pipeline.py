@@ -333,6 +333,21 @@ def _encode(
     return encode_with_dicts(parsed, lt_dict, v_dict, cfg.driver_dict_cap)
 
 
+def _compress_parsed(
+    parsed: DataFrame,
+    cfg: PipelineConfig,
+    sink_cols: tuple = ("logtype_id", "lang"),
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The in-memory tail of the compress dataflow over an already-parsed
+    frame: dictionaries, encode, sink id. Returns (encoded_with_sink,
+    logtype_dict, var_dict). Every in-memory front-end (compress_df, the
+    schema parser's schema_compress_df) shares it."""
+    parsed = parsed.persist()
+    lt_dict, v_dict, lt_map, v_map, _ = _build_dicts(parsed, cfg)
+    encoded = _encode(parsed, lt_dict, v_dict, lt_map, v_map, cfg)
+    return add_sink_id(encoded, cfg.num_sinks, cols=sink_cols), lt_dict, v_dict
+
+
 def compress_df(
     pages: DataFrame,
     cfg: PipelineConfig | None = None,
@@ -347,12 +362,9 @@ def compress_df(
     corpus is read, encoded, queried, and discarded in one job.
     """
     cfg = cfg or PipelineConfig()
-    parsed = _parse_phase(pages, cfg, text_col, passthrough).persist()
-    lt_dict, v_dict, lt_map, v_map, _ = _build_dicts(parsed, cfg)
-    encoded = _encode(parsed, lt_dict, v_dict, lt_map, v_map, cfg)
-    sink_cols = tuple(c for c in sink_cols if c in encoded.columns)
-    encoded = add_sink_id(encoded, cfg.num_sinks, cols=sink_cols)
-    return encoded, lt_dict, v_dict
+    return _compress_parsed(
+        _parse_phase(pages, cfg, text_col, passthrough), cfg, sink_cols
+    )
 
 
 def compress(
@@ -523,6 +535,8 @@ def _write_bookkeeping(
     """Manifests (commits `route`) and/or the metrics table (commits
     `metrics`) from a column-pruned read of the WRITTEN sinks; both
     commits record their wall time from `t0`, the start of phase 3.
+    The metrics half alone is also the GC metrics refresh
+    (route/gc.py _refresh_metrics).
 
     Only TWO distributed aggregations run: the segment summary (one
     (sink, seg)-grouped pass — CLP-small by design, like the

@@ -14,9 +14,11 @@ range partition over exact per-(sink, seg, logtype) row counts: every
 task gets an equal share of ROWS, and a hot cell is split across
 contiguous tasks by a row hash (_route_with_bounds).
 
-Per-sink aggregates (FIXTURES.md §3 sink_metrics) are the pipeline's
-aggregate contract: rows, logtype/var cardinalities, encoded byte sizes —
-all Catalyst partial+final hash aggregates.
+Per-sink metrics (FIXTURES.md §3 sink_metrics: rows, logtype/var
+cardinalities, encoded byte sizes) are not aggregated here:
+segment_summary's one (sink, seg)-grouped pass feeds the driver-side
+metrics writer (pipeline._write_bookkeeping), which compress() and the
+GC metrics refresh (route/gc.py) both run.
 """
 
 from __future__ import annotations
@@ -313,34 +315,3 @@ def route_to_sinks(
         df, out_path, cfg, part_cols, sort_cols, tiebreak, bounds_pdf, total
     )
 
-
-def sink_metrics(encoded_with_sink: DataFrame) -> DataFrame:
-    """Per-sink aggregate contract (exact-match vs oracle).
-
-    encoded_bytes models the reference's columnar cost: 8 bytes per
-    (timestamp, logtype_id, encoded var) slot —
-    streaming_archive/writer/File.hpp:257-259's three parallel columns.
-    """
-    return (
-        encoded_with_sink.groupBy("sink_id")
-        .agg(
-            F.count("*").alias("rows"),
-            F.countDistinct("logtype_id").alias("logtype_cardinality"),
-            F.sum(F.size("encoded_vars")).alias("n_encoded_vars"),
-            F.sum(F.expr("8 + 8 + 8 * size(encoded_vars)")).alias("encoded_bytes"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-        )
-        .orderBy("sink_id")
-    )
-
-
-def sink_var_cardinality(encoded_with_sink: DataFrame) -> DataFrame:
-    """Distinct dictionary-var IDs per sink (separate agg: needs explode)."""
-    return (
-        encoded_with_sink.select(
-            "sink_id", F.explode("dict_var_ids").alias("var_id")
-        )
-        .groupBy("sink_id")
-        .agg(F.countDistinct("var_id").alias("var_cardinality"))
-        .orderBy("sink_id")
-    )

@@ -21,12 +21,19 @@ after the manifest swap. Each changes the commit token the search layer
 keys its opened archive handles on (search/sinks.py open_archive), so a
 session that GCs and re-queries sees the shrunken archive without
 restarts, even when the GC run died between its deletes and its swap.
+
+With a session, the per-sink metrics table is then rewritten from the
+surviving sinks by compress()'s own metrics code
+(pipeline._write_bookkeeping with only its metrics half), so GC has no
+aggregation of its own and the refreshed table keeps the compress
+schema, `ts_min`/`ts_max` included.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import time
 
 from clp_spark.checkpoint import RunManifest
 
@@ -152,10 +159,11 @@ def expire_segments(
         cutoff is min(cutoff, query_floor).
     dry_run: report what WOULD be deleted without touching disk.
     spark: optional SparkSession; when given, per-sink metrics are
-        recomputed from the surviving sink data (one column-pruned
-        scan). Without it the ingest-time metrics file is left as-is
-        (like the reference, whose compression stats describe the
-        archive at creation).
+        recomputed from the surviving sink data by compress()'s own
+        metrics writer (same schema, plus a `metrics` commit record).
+        Without it the ingest-time metrics file is left as-is (like the
+        reference, whose compression stats describe the archive at
+        creation).
 
     Returns {"expired": [(sink_id, seg_id), ...], "segments_deleted",
     "rows_deleted", "bytes_freed", "effective_cutoff", "dry_run"}.
@@ -306,64 +314,32 @@ def expire_segments(
     RunManifest(out_dir).commit("gc", "gc", run_id, segments_deleted=len(pairs))
 
     if spark is not None:
-        _refresh_metrics(spark, out_dir)
+        _refresh_metrics(spark, out_dir, run_id)
     return result
 
 
-def _refresh_metrics(spark, out_dir: str) -> None:
-    """Recompute per-sink metrics from the surviving sink data — one
-    column-pruned scan, same aggregate shapes as compress()'s
-    bookkeeping (route/fanout.py sink_metrics + sink_var_cardinality)."""
+def _refresh_metrics(spark, out_dir: str, run_id: str) -> None:
+    """Recompute per-sink metrics from the surviving sink data with
+    compress()'s own metrics code: the metrics half of
+    pipeline._write_bookkeeping, the path a metrics-only resume of
+    compress() takes (segment summary + var cardinality into the
+    driver-side writer, then a `metrics` commit record). A GC'd
+    archive's metrics therefore keep exactly the compress schema, and
+    a fully expired archive gets the zero-row table."""
     import pyspark.sql.functions as F
 
-    from clp_spark.route.fanout import sink_metrics, sink_var_cardinality
+    from clp_spark.pipeline import _write_bookkeeping
 
-    sinks_dir = os.path.join(out_dir, "sinks")
-    metrics_dir = os.path.join(out_dir, "metrics")
-    if not os.path.isdir(metrics_dir):
+    if not os.path.isdir(os.path.join(out_dir, "metrics")):
         return
-    # everything expired: no parquet left under sinks — write zero-row
-    # metrics preserving the existing schema instead of failing inference
-    any_parquet = any(
-        f.endswith(".parquet")
-        for _r, _d, fs in os.walk(sinks_dir)
-        for f in fs
-    )
-    if not any_parquet:
-        import pyarrow.dataset as ds
-        import pyarrow.parquet as pq
-
-        old = ds.dataset(metrics_dir, format="parquet").to_table()
-        for entry in os.scandir(metrics_dir):
-            if entry.is_file():
-                os.unlink(entry.path)
-        pq.write_table(
-            old.slice(0, 0),
-            os.path.join(metrics_dir, "part-00000.parquet"),
-            compression="zstd",
-        )
-        return
-    enc = spark.read.parquet(sinks_dir)
+    t0 = time.time()
+    enc = spark.read.parquet(os.path.join(out_dir, "sinks"))
     # partition-column inference types sink_id/seg_id int32; compress()
-    # reads with the explicit encoded schema (bigint) — cast back so the
-    # refreshed metrics parquet keeps the original column types
+    # reads with the explicit encoded schema (bigint)
     for pcol in ("sink_id", "seg_id"):
         if pcol in enc.columns:
             enc = enc.withColumn(pcol, F.col(pcol).cast("long"))
-    m = sink_metrics(enc).join(
-        sink_var_cardinality(enc), "sink_id", "left"
-    ).withColumn(
-        "var_cardinality", F.coalesce("var_cardinality", F.lit(0))
-    )
-    pdf = m.toPandas()
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for entry in os.scandir(metrics_dir):
-        if entry.is_file():
-            os.unlink(entry.path)
-    pq.write_table(
-        pa.Table.from_pandas(pdf, preserve_index=False),
-        os.path.join(metrics_dir, "part-00000.parquet"),
-        compression="zstd",
+    _write_bookkeeping(
+        enc, out_dir, RunManifest(out_dir), run_id, t0,
+        need_route=False, need_metrics=True,
     )

@@ -7,14 +7,15 @@ walk the logtype template; placeholder 0x11 → int64 as decimal text,
 dictionary lookup, '\\' → escaped literal.
 
 Spark shape: dictionaries ship as broadcast variables (CLP itself keeps
-both dicts in memory per archive). `prepare_decode` collects and
-broadcasts them; an opened Archive handle (search/sinks.py) keeps the
-result for its lifetime, while decode_messages over bare frames
-prepares them per call. Decoding is an Arrow-batched
-mapInPandas over only the rows that need text (search survivors or a
-full extract). Dictionaries too large to
-broadcast take the explode → shuffle-join → regroup path instead, so
-stage-4 decode never requires a dictionary to fit on the driver.
+both dicts in memory per archive). search.executor.ArchiveDicts
+collects each dictionary once and builds both the search index and
+these broadcasts from that collect; an opened Archive handle
+(search/sinks.py) keeps the result for its lifetime, while
+decode_messages over bare frames prepares them per call. Decoding is an
+Arrow-batched mapInPandas over only the rows that need text (search
+survivors or a full extract). Dictionaries too large to broadcast take
+the explode → shuffle-join → regroup path instead, so stage-4 decode
+never requires a dictionary to fit on the driver.
 """
 
 from __future__ import annotations
@@ -79,57 +80,29 @@ def _fill_template(parts, kinds, encoded_vars, var_map) -> str:
     return "".join(out)
 
 
-# above this many rows a dictionary is not collected to the driver;
-# decode switches to the explode → join → regroup path
-_MAX_DRIVER_DICT_ROWS = 2_000_000
-
-
-def prepare_decode(
-    logtype_dict: DataFrame,
-    var_dict: DataFrame,
-    driver_dict_cap: int = _MAX_DRIVER_DICT_ROWS,
-) -> tuple:
-    """(b_lt, b_v, lt_small): both dictionaries collected and broadcast
-    as driver maps, or (None, None, lt_small) when either is above the
-    cap — decode then takes the join path, broadcasting the logtype
-    dict only if it is small. One collect per call: an Archive handle
-    prepares once and reuses the result for every query."""
-    lt_rows = logtype_dict.select("logtype_id", "logtype").limit(
-        driver_dict_cap + 1
-    ).collect()
-    lt_small = len(lt_rows) <= driver_dict_cap
-    if not lt_small:
-        return None, None, False
-    v_rows = var_dict.select("var_id", "value").limit(driver_dict_cap + 1).collect()
-    if len(v_rows) > driver_dict_cap:
-        return None, None, True
-    sc = logtype_dict.sparkSession.sparkContext
-    return (
-        sc.broadcast({r["logtype_id"]: r["logtype"] for r in lt_rows}),
-        sc.broadcast({r["var_id"]: r["value"] for r in v_rows}),
-        True,
-    )
-
-
 def decode_messages(
     encoded: DataFrame,
     logtype_dict: DataFrame,
     var_dict: DataFrame,
     out_col: str = "text",
-    driver_dict_cap: int = _MAX_DRIVER_DICT_ROWS,
+    driver_dict_cap: int | None = None,
 ) -> DataFrame:
     """Append the reconstructed original message text.
 
     Fast path (dictionaries ≤ driver_dict_cap rows each, CLP's own
-    model): broadcast both as driver maps, one narrow Arrow pass.
-    Fallback (either dictionary too large): dictionary lookups become
-    joins — dict-var strings are gathered per row via
-    posexplode → join(var_dict) → regroup, the template via a join on
-    logtype_id — so nothing ever requires a dictionary to fit on the
-    driver. Both paths produce byte-identical text.
+    model; default search.executor._MAX_DRIVER_DICT_ROWS): broadcast
+    both as driver maps, one narrow Arrow pass. Fallback (either
+    dictionary too large): dictionary lookups become joins — dict-var
+    strings are gathered per row via posexplode → join(var_dict) →
+    regroup, the template via a join on logtype_id — so nothing ever
+    requires a dictionary to fit on the driver. Both paths produce
+    byte-identical text.
     """
-    prepared = prepare_decode(logtype_dict, var_dict, driver_dict_cap)
-    return decode_prepared(encoded, logtype_dict, var_dict, prepared, out_col)
+    from clp_spark.search.executor import ArchiveDicts
+
+    return ArchiveDicts(logtype_dict, var_dict, driver_dict_cap).decode(
+        encoded, out_col
+    )
 
 
 def decode_prepared(
@@ -139,8 +112,11 @@ def decode_prepared(
     prepared: tuple,
     out_col: str = "text",
 ) -> DataFrame:
-    """decode_messages with the dictionaries already prepared by
-    prepare_decode."""
+    """decode_messages with the dictionaries already prepared
+    (search.executor.ArchiveDicts.decoder): `prepared` is
+    (b_lt, b_v, lt_small), the two broadcast driver maps, or
+    (None, None, lt_small) for the join path, which broadcasts the
+    logtype dictionary only when lt_small."""
     b_lt, b_v, lt_small = prepared
     if b_lt is None:
         return _decode_messages_joined(

@@ -15,14 +15,16 @@ Query.hpp:103-121,168-241):
 
 All prefilters are supersets; the confirm is exact ⇒ results are exact.
 Dictionary matching runs driver-side on the collected dicts (CLP loads
-dictionaries in memory too — DictionaryReader.hpp:241-290). Any ID set
-larger than `_MAX_ISIN_IDS`, or a dictionary larger than
-`_MAX_DRIVER_DICT_ROWS`, degrades that branch to *unconstrained* (never
+dictionaries in memory too — DictionaryReader.hpp:241-290); above
+`_MAX_DRIVER_DICT_ROWS` the same candidate-ID questions become
+distributed dict-frame filters (_SparkDictIndex). Any ID set larger
+than `_MAX_ISIN_IDS` degrades that branch to *unconstrained* (never
 truncated) so pruning weakens gracefully while staying a superset.
 
-The collected index and the decode broadcasts live on an `ArchiveDicts`:
-search_sinks passes the one its opened Archive handle keeps across
-queries, while search() over bare frames prepares a fresh one per call.
+The collected index and the decode broadcasts live on an `ArchiveDicts`,
+both built from one collect of each dictionary: search_sinks passes the
+one its opened Archive handle keeps across queries, while search() over
+bare frames prepares a fresh one per call.
 """
 
 from __future__ import annotations
@@ -35,14 +37,14 @@ from pyspark.sql import Column, DataFrame
 
 from clp_spark.config import PLACEHOLDER_FLOAT, PLACEHOLDER_INT
 from clp_spark.search.compiler import CompiledQuery, TokenPred, compile_query
-from clp_spark.search.decode import decode_prepared, prepare_decode
+from clp_spark.search.decode import decode_prepared
 from clp_spark.search.wildcard import wildcard_to_java_regex, wildcard_to_regex
 
 # above this many candidate IDs a branch stops constraining (supersets
 # only — never a truncated ID list, which would drop matching rows)
 _MAX_ISIN_IDS = 4096
-# above this many dict rows, don't collect to the driver: search falls
-# back to decode-everything + confirm (still exact), and decode_messages
+# above this many dict rows, don't collect to the driver: candidate IDs
+# come from distributed dict-frame filters (_SparkDictIndex), and decode
 # takes its join-based path
 _MAX_DRIVER_DICT_ROWS = 2_000_000
 
@@ -161,44 +163,65 @@ class _SparkDictIndex:
         )
 
 
-def _load_index(logtype_dict: DataFrame, var_dict: DataFrame):
-    """Driver-side _DictIndex under _MAX_DRIVER_DICT_ROWS (one collect,
-    memoized matching); above it, a _SparkDictIndex that answers the
-    same candidate-set queries with distributed dict-frame filters —
-    dictionary pushdown never silently turns off."""
-    cap = _MAX_DRIVER_DICT_ROWS
-    lt_rows = [
-        (r["logtype_id"], r["logtype"])
-        for r in logtype_dict.select("logtype_id", "logtype").limit(cap + 1).collect()
-    ]
-    if len(lt_rows) <= cap:
-        v_rows = [
-            (r["var_id"], r["value"])
-            for r in var_dict.select("var_id", "value").limit(cap + 1).collect()
-        ]
-        if len(v_rows) <= cap:
-            return _DictIndex(lt_rows, v_rows)
-    return _SparkDictIndex(logtype_dict, var_dict)
+def _collect_capped(df: DataFrame, id_col: str, text_col: str, cap: int):
+    """[(id, text), ...] of a dictionary frame in one collect; None when
+    it holds more than `cap` rows."""
+    rows = df.select(id_col, text_col).limit(cap + 1).collect()
+    return None if len(rows) > cap else [(r[0], r[1]) for r in rows]
 
 
 class ArchiveDicts:
     """An archive's two dictionary frames plus what search derives from
-    them, each built on first use: the candidate-ID index (stages 2-3)
-    and the decode broadcasts (stage 4). An opened Archive handle
-    (search/sinks.py) keeps one for its lifetime; search() over bare
-    frames builds a fresh one per call."""
+    them: the candidate-ID index (stages 2-3) and the decode broadcasts
+    (stage 4). Both come from ONE collect of each dictionary, taken on
+    first use under one cap (`driver_dict_cap`, default
+    _MAX_DRIVER_DICT_ROWS). Above the cap the index is a
+    _SparkDictIndex and decode takes the join path, broadcasting the
+    logtype dictionary when only the var dictionary is over. An opened
+    Archive handle (search/sinks.py) keeps one for its lifetime;
+    search() and decode_messages() over bare frames build a fresh one
+    per call."""
 
-    def __init__(self, logtype_dict: DataFrame, var_dict: DataFrame):
+    def __init__(
+        self,
+        logtype_dict: DataFrame,
+        var_dict: DataFrame,
+        driver_dict_cap: int | None = None,
+    ):
         self.logtype_dict = logtype_dict
         self.var_dict = var_dict
+        self.driver_dict_cap = driver_dict_cap
+
+    @cached_property
+    def _rows(self) -> tuple:
+        """(lt_rows, var_rows, lt_small): both dictionaries' driver rows,
+        or (None, None, lt_small) when either is over the cap (the var
+        dictionary is not collected when the logtype one is over)."""
+        cap = self.driver_dict_cap
+        if cap is None:
+            cap = _MAX_DRIVER_DICT_ROWS
+        lt = _collect_capped(self.logtype_dict, "logtype_id", "logtype", cap)
+        v = None if lt is None else _collect_capped(self.var_dict, "var_id", "value", cap)
+        if v is None:
+            return None, None, lt is not None
+        return lt, v, True
 
     @cached_property
     def index(self):
-        return _load_index(self.logtype_dict, self.var_dict)
+        lt, v, _ = self._rows
+        if v is None:
+            return _SparkDictIndex(self.logtype_dict, self.var_dict)
+        return _DictIndex(lt, v)
 
     @cached_property
     def decoder(self) -> tuple:
-        return prepare_decode(self.logtype_dict, self.var_dict)
+        """(b_lt, b_v, lt_small) for decode_prepared: both driver maps
+        broadcast, or (None, None, lt_small) for the join path."""
+        lt, v, lt_small = self._rows
+        if v is None:
+            return None, None, lt_small
+        sc = self.logtype_dict.sparkSession.sparkContext
+        return sc.broadcast(dict(lt)), sc.broadcast(dict(v)), True
 
     def decode(self, df: DataFrame, out_col: str) -> DataFrame:
         return decode_prepared(

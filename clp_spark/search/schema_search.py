@@ -24,8 +24,11 @@ wildcard confirm) runs unchanged; exactness still comes from the
 confirm stage, the automata only make the *pruning* non-heuristic.
 
 Spark shape: schema parse is an Arrow-batched mapInPandas with the same
-output schema as the default tokenizer, so dictionaries, encode, sinks,
-and search all reuse the existing distributed machinery.
+output schema as the default tokenizer. schema_compress_df hands that
+frame to the compress dataflow's own tail (pipeline._compress_parsed:
+dictionary build, encode, sink id), and search reuses the shared
+executor, so the schema path has no dictionary or encode code of its
+own.
 """
 
 from __future__ import annotations
@@ -43,6 +46,7 @@ from clp_spark.config import (
     VT_DICT,
     VT_FLOAT,
     VT_INT,
+    PipelineConfig,
 )
 from clp_spark.parse.tokenizer import (
     _ESC_TRANS,
@@ -51,6 +55,7 @@ from clp_spark.parse.tokenizer import (
     _encode_float_packed,
     PARSED_FIELDS,
 )
+from clp_spark.pipeline import _compress_parsed
 from clp_spark.search.automata import (
     _ALL,
     Dfa,
@@ -256,32 +261,12 @@ def schema_compress_df(
     passthrough: list[str] | None = None,
     cfg=None,
 ):
-    """compress_df twin for schema-defined parsing: schema parse →
-    shared dictionary build → shared encode. Returns
-    (encoded, logtype_dict, var_dict)."""
-    from clp_spark.config import PipelineConfig
-    from clp_spark.dicts.build import (
-        build_dicts_small,
-        build_logtype_dict,
-        build_var_dict,
-        encode_with_dicts,
-        encode_with_maps,
-    )
-    from clp_spark.route.fanout import add_sink_id
-
+    """compress_df twin for schema-defined parsing: schema parse, then
+    the compress dataflow's own dictionary build, encode and sink id
+    (pipeline._compress_parsed). Returns (encoded, logtype_dict,
+    var_dict)."""
     cfg = cfg or PipelineConfig()
-    parsed = schema_parse_df(df, schema, text_col, passthrough).persist()
-    small = build_dicts_small(parsed, cfg.driver_dict_cap)
-    if small is not None:
-        lt_dict, v_dict, lt_map, v_map = small
-        encoded = encode_with_maps(parsed, lt_map, v_map)
-    else:
-        lt_dict = build_logtype_dict(parsed, cfg.dict_id_partitions)
-        v_dict = build_var_dict(parsed, cfg.dict_id_partitions)
-        encoded = encode_with_dicts(parsed, lt_dict, v_dict, cfg.driver_dict_cap)
-    sink_cols = tuple(c for c in ("logtype_id", "lang") if c in encoded.columns)
-    encoded = add_sink_id(encoded, cfg.num_sinks, cols=sink_cols)
-    return encoded, lt_dict, v_dict
+    return _compress_parsed(schema_parse_df(df, schema, text_col, passthrough), cfg)
 
 
 # ---------------------------------------------------------------- compile

@@ -174,10 +174,14 @@ class Archive:
         return rows, unit_cols, ts_src
 
     def ts_units(self, ts_range: tuple, ts_col: str) -> tuple[list, list[str]] | None:
-        """ts_surviving_units over the collected zone map (filtered
-        driver-side per query; the compares are trivial). The zone map
-        applies ONLY when it was built from the query's ts_col; a
-        warc_ts zone map must not prune a ts_ms query."""
+        """(surviving prune units, unit column names): the units whose
+        zone-map [ts_min, ts_max] overlaps the query range (CLP's
+        archive-level timestamp range pruning, SURVEY §4 row 1;
+        Grep.cpp skips archives outside [begin_ts, end_ts]), filtered
+        driver-side per query over the collected zone map. None when
+        the archive has no zone map. The zone map applies ONLY when it
+        was built from the query's ts_col; a warc_ts zone map must not
+        prune a ts_ms query."""
         zm = self.zone_map
         if zm is None or zm[2] != ts_col:
             return None
@@ -199,8 +203,7 @@ class Archive:
         def _survives(tmin, tmax):
             # NULL bounds (an all-null-ts segment) mean "unknown": the zone
             # map cannot prove non-overlap, so the unit must SURVIVE — the
-            # sound degrade direction (same rule as Spark's null-safe
-            # filters in ts_surviving_units)
+            # sound degrade direction
             if tmin is None or tmax is None:
                 return True
             try:
@@ -359,36 +362,6 @@ def _prune_units_distributed(
     return surviving
 
 
-def prune_segment_units(
-    cq: CompiledQuery,
-    idx: _DictIndex,
-    lt_manifest: DataFrame,
-    var_manifest: DataFrame | None,
-) -> tuple[list, list[str]] | None:
-    """(surviving prune units, unit column names); None = cannot prune."""
-    if cq.match_all or idx is None:
-        return None
-    lt = _collect_pairs(lt_manifest, "logtype_id")
-    var = _collect_pairs(var_manifest, "var_id") if var_manifest is not None else None
-    return _prune_from_pairs(cq, idx, lt, var, _unit_cols(lt_manifest))
-
-
-def prune_sink_ids(
-    cq: CompiledQuery,
-    idx: _DictIndex,
-    lt_manifest: DataFrame,
-    var_manifest: DataFrame | None,
-) -> list | None:
-    """Sink ids that could contain matches; None = cannot prune.
-    Sink-granular view over prune_segment_units (kept for callers that
-    only key on sink_id)."""
-    r = prune_segment_units(cq, idx, lt_manifest, var_manifest)
-    if r is None:
-        return None
-    units, _ = r
-    return sorted({u[0] for u in units})
-
-
 def unit_filter(units: list, unit_cols: list[str]) -> str:
     """Partition predicate selecting exactly these prune units, as one
     SQL expression string: one parse on the JVM instead of a Column tree
@@ -412,26 +385,6 @@ def unit_filter(units: list, unit_cols: list[str]) -> str:
 
 def _int_list(values) -> str:
     return ",".join(str(int(v)) for v in sorted(values))
-
-
-def ts_surviving_units(
-    seg_manifest: DataFrame, ts_range: tuple
-) -> tuple[list, list[str]] | None:
-    """Prune units whose zone-map [ts_min, ts_max] overlaps the query
-    range (CLP's archive-level timestamp range pruning, SURVEY §4 row 1;
-    Grep.cpp skips archives outside [begin_ts, end_ts]). None when the
-    manifest carries no timestamp columns."""
-    if "ts_min" not in seg_manifest.columns:
-        return None
-    lo, hi = ts_range
-    df = seg_manifest
-    if lo is not None:
-        df = df.filter(F.col("ts_max") >= lo)
-    if hi is not None:
-        df = df.filter(F.col("ts_min") <= hi)
-    unit_cols = _unit_cols(seg_manifest)
-    rows = df.select(*unit_cols).collect()
-    return [tuple(r[c] for c in unit_cols) for r in rows], unit_cols
 
 
 def _surviving_units(

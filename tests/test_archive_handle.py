@@ -59,6 +59,36 @@ def test_warm_search_plans_without_spark_jobs(spark, pages_df, tmp_path):
     assert df.count() == first > 0
 
 
+def test_archive_dicts_collect_each_dictionary_once(spark, pages_df, tmp_path):
+    """The dictionary index and the decode broadcasts of a fresh
+    ArchiveDicts come from one collect of each dictionary: 2 Spark jobs
+    for both, not 2 each."""
+    from clp_spark.search.executor import ArchiveDicts, _DictIndex, _SparkDictIndex
+
+    out = str(tmp_path / "arch")
+    compress(spark, pages_df, out, CFG)
+    lt_df = spark.read.parquet(os.path.join(out, "dicts", "logtype"))
+    v_df = spark.read.parquet(os.path.join(out, "dicts", "var"))
+    dicts = ArchiveDicts(lt_df, v_df)
+    sc = spark.sparkContext
+    sc.setJobGroup("dict-collect", "index + decoder of a fresh ArchiveDicts")
+    try:
+        idx, (b_lt, b_v, lt_small) = dicts.index, dicts.decoder
+    finally:
+        sc.setJobGroup("dict-collect-done", "")
+    assert len(sc.statusTracker().getJobIdsForGroup("dict-collect")) == 2
+    assert isinstance(idx, _DictIndex) and lt_small
+    assert b_lt.value == dict(idx.lt_rows) and b_v.value == dict(idx.var_rows)
+
+    # only the var dictionary over the cap: distributed index, join
+    # decode with the logtype dictionary still broadcast (lt_small)
+    n_lt = len(idx.lt_rows)
+    assert len(idx.var_rows) > n_lt
+    split = ArchiveDicts(lt_df, v_df, driver_dict_cap=n_lt)
+    assert isinstance(split.index, _SparkDictIndex)
+    assert split.decoder == (None, None, True)
+
+
 def test_expire_then_search_sees_shrunken_archive(spark, pages_df, tmp_path):
     out = str(tmp_path / "arch")
     compress(spark, pages_df, out, CFG)

@@ -1,6 +1,6 @@
 """Above-_MAX_DRIVER_DICT_ROWS search must keep dictionary pushdown.
 
-When the dictionaries are too large to collect, _load_index returns a
+When the dictionaries are too large to collect, ArchiveDicts.index is a
 _SparkDictIndex that answers candidate-set queries with distributed
 dict-frame filters (SURVEY §2.3's `var_dict.filter(value rlike ...)`
 shape; reference streams dicts, DictionaryReader.hpp:241-290). These
@@ -20,9 +20,9 @@ from clp_spark.config import PipelineConfig
 from clp_spark.pipeline import compress_df
 from clp_spark.search import search
 from clp_spark.search.executor import (
+    ArchiveDicts,
     _DictIndex,
     _SparkDictIndex,
-    _load_index,
 )
 from clp_spark.search.wildcard import wildcard_match
 
@@ -57,13 +57,13 @@ def _oracle_urls(pages_pdf, query, ignore_case=False):
 
 def test_load_index_returns_spark_index_above_cap(corpus, tiny_dict_cap):
     _encoded, lt_dict, v_dict = corpus
-    idx = _load_index(lt_dict, v_dict)
+    idx = ArchiveDicts(lt_dict, v_dict).index
     assert isinstance(idx, _SparkDictIndex)
 
 
 def test_load_index_driver_below_cap(corpus):
     _encoded, lt_dict, v_dict = corpus
-    assert isinstance(_load_index(lt_dict, v_dict), _DictIndex)
+    assert isinstance(ArchiveDicts(lt_dict, v_dict).index, _DictIndex)
 
 
 @pytest.mark.parametrize(
@@ -94,7 +94,7 @@ def test_spark_index_candidate_sets_match_driver(corpus):
     """Every candidate-set query answers identically through both
     index engines (the memoized driver matcher is the semantics)."""
     _encoded, lt_dict, v_dict = corpus
-    drv = _load_index(lt_dict, v_dict)
+    drv = ArchiveDicts(lt_dict, v_dict).index
     assert isinstance(drv, _DictIndex)
     sp = _SparkDictIndex(lt_dict, v_dict)
     from clp_spark.config import PLACEHOLDER_FLOAT, PLACEHOLDER_INT

@@ -4,18 +4,23 @@ optimization, never a semantic fork."""
 
 from __future__ import annotations
 
-from clp_spark.dicts.build import (
-    build_dicts_small,
-    build_logtype_dict,
-    build_var_dict,
-)
+from clp_spark.config import PipelineConfig
+from clp_spark.dicts.build import build_logtype_dict, build_var_dict
 from clp_spark.parse.tokenizer import tokenize_df
+from clp_spark.pipeline import _build_dicts
+
+
+def _driver_dicts(parsed):
+    """(lt_df, v_df, lt_map, v_map) from compress's driver-map path."""
+    lt_df, v_df, lt_map, v_map, _ = _build_dicts(parsed, PipelineConfig())
+    assert lt_map is not None
+    return lt_df, v_df, lt_map, v_map
 
 
 def test_small_and_distributed_dicts_identical(spark, pages_df):
     parsed = tokenize_df(pages_df).persist()
 
-    lt_df, v_df, lt_map, v_map = build_dicts_small(parsed)
+    lt_df, v_df, lt_map, v_map = _driver_dicts(parsed)
     lt_dist = build_logtype_dict(parsed, num_partitions=5)
     v_dist = build_var_dict(parsed, num_partitions=5)
 
@@ -45,10 +50,10 @@ def test_encode_paths_identical(spark, pages_df):
     from clp_spark.dicts.build import encode_with_dicts, encode_with_maps
 
     parsed = tokenize_df(pages_df).persist()
-    lt_df, v_df, lt_map, v_map = build_dicts_small(parsed)
+    lt_df, v_df, lt_map, v_map = _driver_dicts(parsed)
     a = encode_with_maps(parsed, lt_map, v_map)
     # broadcast_threshold=0 forces the join path
-    b = encode_with_dicts(parsed, lt_df, v_df, broadcast_threshold=0, key_col="url")
+    b = encode_with_dicts(parsed, lt_df, v_df, broadcast_threshold=0)
     rows_a = {
         r["url"]: (r["logtype_id"], tuple(r["encoded_vars"]), tuple(r["dict_var_ids"]))
         for r in a.collect()
@@ -68,7 +73,7 @@ def test_encode_arrow_matches_pandas_engine(spark, pages_df):
     from clp_spark.dicts.build import encode_with_maps, encode_with_maps_pandas
 
     parsed = tokenize_df(pages_df).persist()
-    lt_df, v_df, lt_map, v_map = build_dicts_small(parsed)
+    lt_df, v_df, lt_map, v_map = _driver_dicts(parsed)
     a = encode_with_maps(parsed, lt_map, v_map)
     b = encode_with_maps_pandas(parsed, lt_map, v_map)
     assert a.schema == b.schema
@@ -102,7 +107,7 @@ def test_encode_arrow_empty_and_all_dict_rows(spark):
     )
     pages = spark.createDataFrame(pdf)
     parsed = tokenize_df(pages, passthrough=["url"]).persist()
-    lt_df, v_df, lt_map, v_map = build_dicts_small(parsed)
+    lt_df, v_df, lt_map, v_map = _driver_dicts(parsed)
     rows = {
         r["url"]: (tuple(r["encoded_vars"]), tuple(r["dict_var_ids"]))
         for r in encode_with_maps(parsed, lt_map, v_map).collect()

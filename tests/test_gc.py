@@ -41,6 +41,18 @@ def _seg_dirs(out: str) -> set[tuple[int, int]]:
     return pairs
 
 
+def _metrics_schema(out: str):
+    import pyarrow.parquet as pq
+
+    return pq.read_schema(
+        next(
+            e.path
+            for e in os.scandir(os.path.join(out, "metrics"))
+            if e.name.endswith(".parquet")
+        )
+    )
+
+
 def _zone_map(spark, out: str):
     return spark.read.parquet(os.path.join(out, "manifest", "segments")).toPandas()
 
@@ -126,9 +138,13 @@ def test_unit_mismatch_raises(spark, archive):
 
 def test_metrics_refresh(spark, archive):
     out, _res = archive
+    schema = _metrics_schema(out)
     zm = _zone_map(spark, out)
     cutoff = pd.Timestamp(zm["ts_max"].quantile(0.5))
     expire_segments(out, cutoff, spark=spark)
+    # the refreshed table has exactly the schema compress() wrote
+    assert _metrics_schema(out) == schema
+    assert {"ts_min", "ts_max"} <= set(schema.names)
     metrics = spark.read.parquet(os.path.join(out, "metrics")).toPandas()
     surviving_rows = int(
         spark.read.parquet(os.path.join(out, "sinks")).count()
@@ -170,10 +186,12 @@ def test_spark_var_rewrite_matches_driver_rewrite(spark, pages_df, tmp_path_fact
 
 def test_expire_everything(spark, archive):
     out, _res = archive
+    schema = _metrics_schema(out)
     zm = _zone_map(spark, out)
     cutoff = pd.Timestamp(zm["ts_max"].max()) + pd.Timedelta(days=1)
     got = expire_segments(out, cutoff, spark=spark)
     assert got["segments_deleted"] == len(zm)
+    assert _metrics_schema(out) == schema
     # a zero-row schema-seed file keeps the archive readable; no data rows
     assert spark.read.parquet(os.path.join(out, "sinks")).count() == 0
     metrics = spark.read.parquet(os.path.join(out, "metrics")).toPandas()

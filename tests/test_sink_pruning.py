@@ -9,8 +9,7 @@ from pyspark.sql import functions as F
 from clp_spark.config import PipelineConfig
 from clp_spark.pipeline import compress
 from clp_spark.search.compiler import compile_query
-from clp_spark.search.executor import _load_index
-from clp_spark.search.sinks import prune_sink_ids, search_sinks
+from clp_spark.search.sinks import _surviving_units, open_archive, search_sinks
 from clp_spark.search.wildcard import wildcard_match
 
 CFG = PipelineConfig(num_sinks=16, num_checkpoint_buckets=1, shuffle_partitions=8)
@@ -21,6 +20,22 @@ def compressed(spark, pages_df, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("sink_prune"))
     res = compress(spark, pages_df, out, CFG)
     return out, res
+
+
+def _units(spark, out, query):
+    """(surviving prune units, unit column names) of the production
+    token-manifest pruning pass over the opened archive; None = cannot
+    prune."""
+    units, _units_df, unit_cols = _surviving_units(
+        open_archive(spark, out), compile_query(query), None, "warc_ts"
+    )
+    return None if units is None else (units, unit_cols)
+
+
+def _sink_ids(spark, out, query):
+    """Sink-granular view of _units; None = cannot prune."""
+    r = _units(spark, out, query)
+    return None if r is None else sorted({u[0] for u in r[0]})
 
 
 def _oracle(pages_pdf, query):
@@ -48,14 +63,9 @@ def test_pruning_skips_sinks(spark, compressed):
     """A query whose candidate IDs live in few sinks must not scan all
     sink partitions."""
     out, res = compressed
-    lt_dict = spark.read.parquet(res["dicts"] + "/logtype")
-    v_dict = spark.read.parquet(res["dicts"] + "/var")
-    idx = _load_index(lt_dict, v_dict)
     lt_man = spark.read.parquet(res["sink_manifest"] + "/logtype")
-    var_man = spark.read.parquet(res["sink_manifest"] + "/var")
 
-    cq = compile_query("*deadbeef*")
-    keep = prune_sink_ids(cq, idx, lt_man, var_man)
+    keep = _sink_ids(spark, out, "*deadbeef*")
     all_sinks = {
         r["sink_id"] for r in lt_man.select("sink_id").distinct().collect()
     }
@@ -73,21 +83,15 @@ def test_segment_pruning_scans_fewer_files_than_sink_pruning(spark, compressed):
     BELOW sink level: for a selective query the scanned-file count is
     strictly less than the file count of the surviving sinks (CLP's
     per-segment index, Query.hpp:103-121)."""
-    from clp_spark.search.sinks import prune_segment_units, unit_filter
+    from clp_spark.search.sinks import unit_filter
 
     out, res = compressed
-    lt_dict = spark.read.parquet(res["dicts"] + "/logtype")
-    v_dict = spark.read.parquet(res["dicts"] + "/var")
-    idx = _load_index(lt_dict, v_dict)
-    lt_man = spark.read.parquet(res["sink_manifest"] + "/logtype")
-    var_man = spark.read.parquet(res["sink_manifest"] + "/var")
 
     # one-row token: its dict-var id lives in exactly one time-window
     # segment, so segment pruning must beat sink pruning
-    cq = compile_query("*deadbeef2fd2*")
-    r = prune_segment_units(cq, idx, lt_man, var_man)
+    r = _units(spark, out, "*deadbeef2fd2*")
     assert r is not None
-    units, unit_cols = r
+    units, unit_cols = sorted(r[0]), r[1]
     assert unit_cols == ["sink_id", "seg_id"]
     sinks = spark.read.parquet(res["sinks"])
 
@@ -119,8 +123,6 @@ def test_ts_zone_map_prunes_segments(spark, compressed, pages_pdf):
     """The segments zone map drops (sink, seg) units whose
     [ts_min, ts_max] misses the query range, and the pruned search
     stays exact for a ts-bounded grep."""
-    from clp_spark.search.sinks import ts_surviving_units
-
     out, res = compressed
     seg_man = spark.read.parquet(res["sink_manifest"] + "/segments")
     assert {"sink_id", "seg_id", "rows", "ts_min", "ts_max"} <= set(
@@ -128,7 +130,7 @@ def test_ts_zone_map_prunes_segments(spark, compressed, pages_pdf):
     )
     total_units = seg_man.count()
     lo = pages_pdf["warc_ts"].quantile(0.98).to_pydatetime()
-    r = ts_surviving_units(seg_man, (lo, None))
+    r = open_archive(spark, out).ts_units((lo, None), "warc_ts")
     assert r is not None
     units, unit_cols = r
     assert len(units) < total_units
@@ -151,14 +153,7 @@ def test_ts_zone_map_prunes_segments(spark, compressed, pages_pdf):
 
 def test_zero_hit_query_prunes_every_sink(spark, compressed):
     out, res = compressed
-    lt_dict = spark.read.parquet(res["dicts"] + "/logtype")
-    v_dict = spark.read.parquet(res["dicts"] + "/var")
-    idx = _load_index(lt_dict, v_dict)
-    lt_man = spark.read.parquet(res["sink_manifest"] + "/logtype")
-    var_man = spark.read.parquet(res["sink_manifest"] + "/var")
-    keep = prune_sink_ids(
-        compile_query("qq7z_missing_token_9x"), idx, lt_man, var_man
-    )
+    keep = _sink_ids(spark, out, "qq7z_missing_token_9x")
     assert keep == []
     assert search_sinks(spark, out, "qq7z_missing_token_9x").count() == 0
 
@@ -261,15 +256,14 @@ def test_distributed_pruning_above_driver_cap(
 
     out, res = compressed
     q = "*deadbeef2fd2*"
-    lt_dict = spark.read.parquet(res["dicts"] + "/logtype")
-    v_dict = spark.read.parquet(res["dicts"] + "/var")
-    idx = _load_index(lt_dict, v_dict)
+    arch = open_archive(spark, out)
+    idx = arch.dicts.index
     lt_man = spark.read.parquet(res["sink_manifest"] + "/logtype")
     var_man = spark.read.parquet(res["sink_manifest"] + "/var")
     cq = compile_query(q)
 
     # collected-path units (normal cap)
-    r = S.prune_segment_units(cq, idx, lt_man, var_man)
+    r = _units(spark, out, q)
     assert r is not None
     coll_units, unit_cols = set(r[0]), r[1]
 
