@@ -46,8 +46,10 @@ class PipelineConfig:
     # buckets; each bucket commits atomically and is skipped on resume
     num_checkpoint_buckets: int = 4
 
-    # shuffle sizing (tests/local); a real cluster run would scale this
-    # with executor count (≈ 2-3x total cores)
+    # cap on the route's write tasks: the route shuffle runs
+    # min(shuffle_partitions, default parallelism) tasks — one wave.
+    # Its analytic bounds give every task an equal row share, so more
+    # tasks would only add per-task and per-file cost.
     shuffle_partitions: int = 32
 
     # parquet codec for all sinks (reference uses zstd segments:

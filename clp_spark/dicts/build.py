@@ -127,116 +127,119 @@ def build_dicts_small_pandas(
     """Fast path: both dictionaries collected, sorted, and ID'd on the
     driver (CLP's own model — dictionaries fit in memory:
     DictionaryReader.hpp loads them wholesale). Returns
-    (logtype_pdf, var_pdf, logtype_map, var_map, route_counts), or None
-    when a dictionary exceeds sample_cap (caller falls back to the fully
-    distributed rank assignment). IDs are value-sorted ranks either way,
-    so the two paths produce identical dictionaries.
+    (logtype_pdf, var_pdf, logtype_map, var_map, cells), or None when a
+    dictionary exceeds sample_cap (caller falls back to the fully
+    distributed rank assignment). IDs are value-sorted ranks either way
+    (pandas sorts str by code point, which is Spark's UTF-8 byte
+    order), so the two paths produce identical dictionaries.
+
+    Each dictionary is ONE aggregation and ONE capped collect
+    (limit(cap + 1)); the sort and the IDs are driver work.
 
     route_count_cols: optional [(name, Column), ...] extra grouping
-    keys (lang + the segment window). When given, the logtype aggregate
-    groups by (logtype, *extras) and is rolled up to the plain logtype
-    dictionary driver-side, and the per-(logtype, *extras) counts come
-    back as route_counts — exact inputs for the analytic route
-    boundaries (route/fanout._route_with_bounds) at ZERO extra scans.
-    route_counts is None without extras, or (with the dictionary still
-    built, via a second agg) if the grouped cardinality exceeds the cap
-    — route_to_sinks then counts its cells itself.
-
-    Scaling shape: the distinct aggregate is computed ONCE and cached;
-    the cardinality guard is a count over the cache, and the value sort
-    is a parallel range-partition sort whose Arrow collect concatenates
-    partitions in sorted order. (The previous orderBy().limit(cap)
-    compiled to TakeOrderedAndProject — a single-task heap merge of all
-    partitions, i.e. serial seconds charged to every cluster size.)
+    keys (lang + the segment window). With them the two aggregates are
+    the archive's exact cells, returned as cells = (cell_pdf, var_pdf):
+      - cell_pdf: per (logtype_id, *extras): n_rows, sum(n_vars),
+        sum(raw_bytes) and the zone-map ts bounds
+        (route.fanout.zone_map_aggs);
+      - var_pdf: the distinct (var_id, logtype_id, *extras) of the
+        dictionary variables. Spark groups them by xxhash64(logtype),
+        resolved against the cells' own hashes, so no template string
+        is held per var cell; None if two templates share a hash.
+    cells is None without extras or past the cap (the dictionaries then
+    come from a plain aggregation).
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    extra_names = [n for n, _ in (route_count_cols or [])]
-    # NO input-level persist: the logtype and var aggregations read
-    # DISJOINT column sets (logtype/n_vars/+extras vs var_strs/
-    # var_types), and `parsed` is parquet-backed (checkpoint bucket), so
-    # two column-pruned scans move strictly fewer bytes than building a
-    # deserialized JVM cache of the union and reading all of it twice —
-    # the cache build was the dict phase's scaling ceiling (measured
-    # 2.21x at 2→8 cores; the store+load traffic is pure bandwidth).
-    # The AGGREGATED frames below stay persisted (small, reused).
-    slim = parsed.select(
-        "logtype",
-        "n_vars",
-        "var_strs",
-        "var_types",
-        *[c.alias(n) for n, c in (route_count_cols or [])],
-    )
+    from clp_spark.route.fanout import zone_map_aggs
+    from clp_spark.util import collect_capped
 
-    def _lt_plain(src) -> pd.DataFrame | None:
-        lt_agg = (
-            src.groupBy("logtype")
-            .agg(F.min("n_vars").alias("num_vars"), F.count("*").alias("n_rows"))
-            .persist()
-        )
-        try:
-            if lt_agg.count() > sample_cap:
-                return None
-            return lt_agg.orderBy("logtype").toPandas()
-        finally:
-            lt_agg.unpersist()
+    extras = route_count_cols or []
+    extra_names = [n for n, _ in extras]
+    # NO input-level persist: the logtype and var aggregations read
+    # mostly DISJOINT column sets, and `parsed` is parquet-backed
+    # (checkpoint bucket), so two column-pruned scans move fewer bytes
+    # than building a deserialized JVM cache of the union and reading
+    # all of it twice.
+    lt_aggs = F.min("n_vars").alias("num_vars"), F.count("*").alias("n_rows")
 
     def _lt() -> tuple[pd.DataFrame | None, pd.DataFrame | None]:
-        if not extra_names:
-            return _lt_plain(slim), None
-        g = (
-            slim.groupBy("logtype", *extra_names)
-            .agg(F.min("n_vars").alias("num_vars"), F.count("*").alias("n_rows"))
-            .persist()
-        )
-        try:
-            grouped_n = g.count()
-            if grouped_n > sample_cap:
-                # grouped cardinality blew past the cap: rebuild the plain
-                # logtype dictionary over the same cache; no route counts
-                return _lt_plain(slim), None
-            counts_pdf = g.orderBy("logtype", *extra_names).toPandas()
-        finally:
-            g.unpersist()
-        # len(lt_pdf) ≤ grouped_n ≤ sample_cap by construction (the
-        # rollup only merges rows), so no second cap check is needed
-        lt_pdf = (
-            counts_pdf.groupby("logtype", sort=True)
-            .agg(num_vars=("num_vars", "min"), n_rows=("n_rows", "sum"))
-            .reset_index()
-        )
-        return lt_pdf, counts_pdf
+        if extras:
+            cells = collect_capped(
+                parsed.groupBy("logtype", *[c.alias(n) for n, c in extras])
+                .agg(
+                    *lt_aggs,
+                    F.sum("n_vars").alias("n_vars"),
+                    F.sum("raw_bytes").alias("raw_bytes"),
+                    *zone_map_aggs(parsed),
+                )
+                .withColumn("_lt_hash", F.xxhash64("logtype")),
+                sample_cap,
+            )
+            if cells is not None:
+                # len(lt_pdf) <= len(cells) <= sample_cap: the rollup
+                # only merges rows
+                lt_pdf = (
+                    cells.groupby("logtype", sort=True)
+                    .agg(num_vars=("num_vars", "min"), n_rows=("n_rows", "sum"))
+                    .reset_index()
+                )
+                return lt_pdf, cells
+        lt_pdf = collect_capped(parsed.groupBy("logtype").agg(*lt_aggs), sample_cap)
+        if lt_pdf is not None:
+            lt_pdf = lt_pdf.sort_values("logtype", ignore_index=True)
+        return lt_pdf, None
 
     def _v() -> pd.DataFrame | None:
-        v_distinct = (
-            slim.select(
-                F.explode(F.arrays_zip("var_strs", "var_types")).alias("z")
+        values = (
+            parsed.select(
+                F.explode(F.arrays_zip("var_strs", "var_types")).alias("z"),
+                *([F.xxhash64("logtype").alias("_lt_hash")] if extras else []),
+                *[c.alias(n) for n, c in extras],
             )
             .filter(F.col("z.var_types") == VT_DICT)
-            .select(F.col("z.var_strs").alias("value"))
-            .distinct()
-            .persist()
+            .select(
+                F.col("z.var_strs").alias("value"),
+                *(["_lt_hash", *extra_names] if extras else []),
+            )
         )
-        try:
-            if v_distinct.count() > sample_cap:
-                return None
-            return v_distinct.orderBy("value").toPandas()
-        finally:
-            v_distinct.unpersist()
+        if extras:
+            var_cells = collect_capped(values.distinct(), sample_cap)
+            if var_cells is not None:
+                return var_cells
+        return collect_capped(values.select("value").distinct(), sample_cap)
 
     # the two dictionary builds are independent Spark jobs — run them
     # from two driver threads so each one's driver-serial tail (Arrow
-    # collect, pandas concat) overlaps the other's executor work
+    # collect, pandas work) overlaps the other's executor work
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_lt, f_v = pool.submit(_lt), pool.submit(_v)
-        (lt_pdf, counts_pdf), v_pdf = f_lt.result(), f_v.result()
-    if lt_pdf is None or v_pdf is None:
+        (lt_pdf, cells), v_rows = f_lt.result(), f_v.result()
+    if lt_pdf is None or v_rows is None:
         return None
     lt_pdf.insert(0, "logtype_id", range(len(lt_pdf)))
     lt_map = dict(zip(lt_pdf["logtype"], lt_pdf["logtype_id"]))
-    v_pdf.insert(0, "var_id", range(len(v_pdf)))
-    v_map = dict(zip(v_pdf["value"], v_pdf["var_id"]))
-    return lt_pdf, v_pdf, lt_map, v_map, counts_pdf
+    var_ids, values = pd.factorize(v_rows["value"], sort=True)
+    v_pdf = pd.DataFrame({"var_id": range(len(values)), "value": values})
+    v_map = dict(zip(values, range(len(values))))
+    if cells is None:
+        return lt_pdf, v_pdf, lt_map, v_map, None
+
+    lt_ids = pd.Index(lt_pdf["logtype"]).get_indexer(cells["logtype"])
+    hashes = pd.Series(lt_ids, index=cells["_lt_hash"].to_numpy()).groupby(level=0)
+    var_pdf = None
+    if "_lt_hash" in v_rows.columns and (hashes.nunique() == 1).all():
+        lt_of_hash = hashes.first()
+        var_pdf = pd.DataFrame(
+            {
+                "var_id": var_ids,
+                "logtype_id": lt_of_hash.reindex(v_rows["_lt_hash"]).to_numpy(),
+                **{n: v_rows[n] for n in extra_names},
+            }
+        )
+    cells = cells.drop(columns=["logtype", "_lt_hash", "num_vars"])
+    cells.insert(0, "logtype_id", lt_ids)
+    return lt_pdf, v_pdf, lt_map, v_map, (cells, var_pdf)
 
 
 LOGTYPE_DICT_ARROW_SCHEMA = [

@@ -1,11 +1,18 @@
 """End-to-end compress job: pages → parse → dicts → encode → route → metrics.
 
-Spark shape (SURVEY.md §3.1): one logical job —
-  read pages → mapInArrow(tokenize)                     [narrow, no shuffle]
-  → build logtype/var dicts (2 distinct aggs + stable-ID rank)
-  → encode (broadcast-map Arrow pass / dictionary join)  [no shuffle]
-  → fan-out to per-sink parquet partitions (1 analytic range shuffle)
-  → per-segment summary → manifests + metrics table (driver-written)
+Spark shape (SURVEY.md §3.1):
+  read pages → mapInArrow(tokenize) → parsed/           [narrow, no shuffle]
+  → 2 aggregations over parsed/, one capped collect each: the archive's
+    exact (logtype, lang, window) cells and their distinct dictionary
+    vars; both dictionaries are sorted and ID'd on the driver
+  → encode (broadcast-map Arrow pass)                    [no shuffle]
+  → fan-out to per-sink parquet partitions (1 analytic range shuffle,
+    one wave of write tasks)
+  → manifests + metrics table, written on the driver from the same
+    cells — like CLP's archive writer, nothing written is read back.
+Runs without those cells (resume after `dicts`, dictionaries above
+`driver_dict_cap`, the GC metrics refresh) take the same tables from
+one aggregation over a frame (route.fanout.cell_stats, var_pairs).
 
 Checkpointing: the parse phase commits per url-hash bucket; dict/encode/
 route phases commit as whole phases (their inputs are the committed
@@ -33,57 +40,64 @@ from clp_spark.dicts.build import (
     write_dict_parquet,
 )
 from clp_spark.parse.tokenizer import tokenize_df
-from clp_spark.util import spread
+from clp_spark.util import collect_capped, spread
 from clp_spark.route.fanout import (
     add_seg_id,
     add_sink_id,
     bounds_from_cells,
+    cell_stats,
     route_to_sinks,
     segment_expr,
-    segment_summary,
+    var_pairs,
+    zone_map_field,
 )
 
-# above this many (logtype, lang, window) cells the driver-side bounds
-# construction (a Python xxhash64 per cell) stops being free; route_to_sinks
-# then counts the (sink, seg, logtype) cells itself with one aggregation
+# above this many (logtype, lang, window) cells the driver-side sink
+# assignment (a Python xxhash64 per distinct (logtype, lang)) stops
+# being free; compress then takes its cells from one aggregation over
+# the sinked frame (route.fanout.cell_stats)
 _MAX_BOUNDS_CELLS = 100_000
 
 
-def _route_bounds(counts_pdf, lt_map: dict, num_sinks: int):
-    """Exact analytic range-partition boundaries for the route shuffle.
-
-    Input: the per-(logtype[, lang], window) row counts that rode along
-    with the dictionary aggregation. Output: (bounds_pdf, total_rows)
-    where bounds_pdf has one row per (sink_id, seg_id, logtype_id) cell
-    with its cumulative start position in the (sink, seg, logtype)-
-    sorted global row order — what RangePartitioner would have derived
-    from a sample, but exact, deterministic, and with zero extra passes
-    over the data. sink_id is computed driver-side with the Spark-parity
-    xxhash64 oracle (the same pmod(xxhash64(logtype_id, lang), K) the
-    rows get in add_sink_id)."""
+def _sink_cells(dict_cells, num_sinks: int):
+    """The dictionary pass's cells (build_dicts_small_pandas) keyed as
+    the archive is laid out: (cells, var_pairs) — one row per (sink_id,
+    seg_id, logtype_id) with rows, n_encoded_vars, raw_bytes [, ts_min,
+    ts_max], and the distinct (sink_id, seg_id, var_id) (None when the
+    var cells were not collected). None without cells or past
+    _MAX_BOUNDS_CELLS. sink_id is the Spark-parity oracle's
+    pmod(xxhash64(logtype_id, lang), K), once per distinct
+    (logtype_id, lang) — what add_sink_id gives the rows."""
     from clp_spark.oracle.xxhash import pmod, spark_xxhash64
 
-    if counts_pdf is None or len(counts_pdf) > _MAX_BOUNDS_CELLS:
+    if dict_cells is None or len(dict_cells[0]) > _MAX_BOUNDS_CELLS:
         return None
-    import pandas as pd
-
-    lt_ids = counts_pdf["logtype"].map(lt_map)
-    if "lang" in counts_pdf.columns:
-        sink = [
-            pmod(spark_xxhash64(int(lt), s), num_sinks)
-            for lt, s in zip(lt_ids, counts_pdf["lang"])
-        ]
-    else:
-        sink = [pmod(spark_xxhash64(int(lt)), num_sinks) for lt in lt_ids]
-    cells = pd.DataFrame(
-        {
-            "sink_id": pd.array(sink, dtype="int64"),
-            "seg_id": counts_pdf["_seg"].astype("int64"),
-            "logtype_id": lt_ids.astype("int64"),
-            "n": counts_pdf["n_rows"].astype("int64"),
-        }
+    cells, var_cells = dict_cells
+    key = ["logtype_id"] + (["lang"] if "lang" in cells.columns else [])
+    sinks = cells[key].drop_duplicates()
+    sinks["sink_id"] = [
+        pmod(spark_xxhash64(int(lt), *lang), num_sinks)
+        for lt, *lang in sinks.itertuples(index=False)
+    ]
+    cells = cells.merge(sinks, on=key).rename(
+        columns={"_seg": "seg_id", "n_rows": "rows", "n_vars": "n_encoded_vars"}
     )
-    return bounds_from_cells(cells)
+    how = {
+        "rows": "sum", "n_encoded_vars": "sum", "raw_bytes": "sum",
+        "ts_min": "min", "ts_max": "max",
+    }
+    cells = (
+        cells.groupby(["sink_id", "seg_id", "logtype_id"], sort=True)
+        .agg({c: f for c, f in how.items() if c in cells.columns})
+        .reset_index()
+    )
+    if var_cells is not None:
+        var_cells = (
+            var_cells.merge(sinks, on=key)
+            .rename(columns={"_seg": "seg_id"})[["sink_id", "seg_id", "var_id"]]
+            .drop_duplicates()
+        )
+    return cells, var_cells
 
 
 def _pa_type(dt):
@@ -106,121 +120,6 @@ def _pa_type(dt):
     if isinstance(dt, T.TimestampNTZType):
         return pa.timestamp("us")
     raise TypeError(f"unmapped Spark type {dt}")
-
-
-def _write_driver_parquet(dirpath: str, cols: dict, types: dict) -> None:
-    """Column-dict front-end over util.write_driver_table (the shared
-    driver-side single-file parquet writer)."""
-    import pandas as _pd
-    import pyarrow as pa
-
-    from clp_spark.util import write_driver_table
-
-    arrays = [
-        v
-        if isinstance(v, pa.Array)
-        else (
-            # from_pandas maps NaN/pd.NA → parquet null (plain pa.array
-            # rejects pd.NA and would store NaN-poisoned floats)
-            pa.Array.from_pandas(v, type=types[name])
-            if isinstance(v, _pd.Series)
-            else pa.array(v, type=types[name])
-        )
-        for name, v in cols.items()
-    ]
-    tbl = pa.Table.from_arrays(
-        arrays, schema=pa.schema([(n, types[n]) for n in cols])
-    )
-    write_driver_table(tbl, dirpath)
-
-
-def _write_summary_derived(
-    summary_pdf, summary_fields, seg_cols, out_dir: str
-) -> None:
-    """Logtype manifest + ts zone map, derived driver-side from the
-    collected segment summary (a (sink, seg)-grouped frame — CLP-small
-    by the same design bound as the dictionaries). The manifest rows are
-    sorted by logtype_id so parquet row-group min/max stats prune
-    id-probing queries just like the old range-partitioned Spark write."""
-    import numpy as np
-    import pyarrow as pa
-
-    n = len(summary_pdf)
-    if n:
-        lens = summary_pdf["lt_set"].map(len).to_numpy(dtype=np.int64)
-        sink_r = np.repeat(summary_pdf["sink_id"].to_numpy(np.int64), lens)
-        seg_r = np.repeat(summary_pdf["seg_id"].to_numpy(np.int64), lens)
-        lt_r = np.concatenate(
-            [np.asarray(a, dtype=np.int64) for a in summary_pdf["lt_set"]]
-        ) if lens.sum() else np.array([], dtype=np.int64)
-        order = np.argsort(lt_r, kind="stable")
-        sink_r, seg_r, lt_r = sink_r[order], seg_r[order], lt_r[order]
-    else:
-        sink_r = seg_r = lt_r = np.array([], dtype=np.int64)
-    _write_driver_parquet(
-        os.path.join(out_dir, "manifest", "logtype"),
-        {"sink_id": sink_r, "seg_id": seg_r, "logtype_id": lt_r},
-        {"sink_id": pa.int64(), "seg_id": pa.int64(), "logtype_id": pa.int64()},
-    )
-
-    seg_out_cols = ["sink_id", "seg_id", "rows", *seg_cols]
-    _write_driver_parquet(
-        os.path.join(out_dir, "manifest", "segments"),
-        {c: summary_pdf[c] if n else [] for c in seg_out_cols},
-        {c: _pa_type(summary_fields[c]) for c in seg_out_cols},
-    )
-
-
-def _write_metrics_driver(
-    summary_pdf, vcard_pdf, summary_fields, ts_cols, metrics_dir: str
-) -> None:
-    """The one per-sink metrics writer: aggregated driver-side from the
-    segment summary (rows/cardinality/byte sums over a tiny frame) + the
-    var-cardinality counts from the distinct (sink, var) aggregation."""
-    import pandas as pd
-    import pyarrow as pa
-
-    vc = {
-        int(r["sink_id"]): int(r["var_cardinality"])
-        for _, r in vcard_pdf.iterrows()
-    }
-    recs = []
-    for sid, g in summary_pdf.groupby("sink_id", sort=True):
-        lt_all = set()
-        for a in g["lt_set"]:
-            lt_all.update(int(x) for x in a)
-        rec = {
-            "sink_id": int(sid),
-            "rows": int(g["rows"].sum()),
-            "logtype_cardinality": len(lt_all),
-            "n_encoded_vars": int(g["n_encoded_vars"].sum()),
-            "encoded_bytes": int(g["encoded_bytes"].sum()),
-            "raw_bytes": int(g["raw_bytes"].sum()),
-        }
-        for c, fn in zip(ts_cols, ("min", "max")):
-            rec[c] = getattr(g[c], fn)()
-        rec["var_cardinality"] = vc.get(int(sid), 0)
-        recs.append(rec)
-    out_cols = [
-        "sink_id", "rows", "logtype_cardinality", "n_encoded_vars",
-        "encoded_bytes", "raw_bytes", *ts_cols, "var_cardinality",
-    ]
-    mdf = pd.DataFrame(recs, columns=out_cols)
-    types = {
-        "sink_id": pa.int64(),
-        "rows": pa.int64(),
-        # LongType, as Spark's countDistinct would emit: strict readers
-        # union metrics tables across runs and across gc refreshes
-        "logtype_cardinality": pa.int64(),
-        "n_encoded_vars": pa.int64(),
-        "encoded_bytes": pa.int64(),
-        "raw_bytes": pa.int64(),
-        "var_cardinality": pa.int64(),
-        **{c: _pa_type(summary_fields[c]) for c in ts_cols},
-    }
-    _write_driver_parquet(
-        metrics_dir, {c: mdf[c] for c in out_cols}, types
-    )
 
 
 def write_var_manifest(var_man, path: str) -> None:
@@ -277,16 +176,16 @@ def _build_dicts(
     driver), else the fully distributed range-ranked build. Both give
     the same value-sorted-rank IDs.
 
-    Returns (logtype_dict, var_dict, logtype_map, var_map, route_counts).
-    The maps and the route counts (see build_dicts_small_pandas) are None
-    on the distributed path. With `dicts_dir` the dictionaries are
+    Returns (logtype_dict, var_dict, logtype_map, var_map, cells).
+    The maps and the cells (see build_dicts_small_pandas) are None on
+    the distributed path. With `dicts_dir` the dictionaries are
     written there and the frames returned are the read-back tables."""
     spark = parsed.sparkSession
     small = build_dicts_small_pandas(
         parsed, cfg.driver_dict_cap, route_count_cols=route_count_cols
     )
     if small is not None:
-        lt_pdf, v_pdf, lt_map, v_map, route_counts = small
+        lt_pdf, v_pdf, lt_map, v_map, cells = small
         if dicts_dir is None:
             lt_dict = spark.createDataFrame(
                 lt_pdf, "logtype_id long, logtype string, num_vars int, n_rows long"
@@ -306,7 +205,7 @@ def _build_dicts(
                 cfg.compression_codec,
             )
     else:
-        lt_map = v_map = route_counts = None
+        lt_map = v_map = cells = None
         lt_dict = build_logtype_dict(parsed, cfg.dict_id_partitions)
         v_dict = build_var_dict(parsed, cfg.dict_id_partitions)
         if dicts_dir is not None:
@@ -315,7 +214,7 @@ def _build_dicts(
     if dicts_dir is not None:
         lt_dict = spark.read.parquet(os.path.join(dicts_dir, "logtype"))
         v_dict = spark.read.parquet(os.path.join(dicts_dir, "var"))
-    return lt_dict, v_dict, lt_map, v_map, route_counts
+    return lt_dict, v_dict, lt_map, v_map, cells
 
 
 def _encode(
@@ -437,10 +336,12 @@ def compress(
     parsed_all = spark.read.schema(parsed_schema).parquet(parsed_dir)
 
     # ---- phase 2: dictionaries (deterministic IDs at any parallelism) ----
-    # the routing counts (exact per-(logtype, lang, window) rows for the
-    # analytic route boundaries) ride along with the logtype aggregation
-    # — same scan, slightly wider group key
-    lt_map = v_map = route_counts = None
+    # the archive's exact cells (per (logtype, lang, window): rows, var
+    # counts, raw bytes, ts bounds, and the distinct dictionary vars)
+    # ride along with the two dictionary aggregations — same scans,
+    # slightly wider group keys. They feed the analytic route bounds and
+    # every bookkeeping table, so the written sinks are never re-read.
+    lt_map = v_map = cells = pairs = None
     if "dicts" not in manifest.committed("dicts"):
         t0 = time.time()
         extras = []
@@ -450,9 +351,10 @@ def compress(
             parsed_all, cfg.num_segments, cfg.segment_window_days
         )
         extras.append(("_seg", seg_col))
-        lt_dict, v_dict, lt_map, v_map, route_counts = _build_dicts(
+        lt_dict, v_dict, lt_map, v_map, dict_cells = _build_dicts(
             parsed_all, cfg, dicts_dir, route_count_cols=extras
         )
+        cells, pairs = _sink_cells(dict_cells, cfg.num_sinks) or (None, None)
         manifest.commit(
             "dicts",
             "dicts",
@@ -469,15 +371,19 @@ def compress(
     need_route = "route" not in manifest.committed("route")
     t0 = time.time()
     if need_route:
-        if lt_map is None and (
+        if lt_map is None:
             # resume path: reload dictionaries as driver maps only when
-            # BOTH fit (a large logtype dict must not be collected just
-            # because the var dict happens to be small)
-            v_dict.count() <= cfg.driver_dict_cap
-            and lt_dict.count() <= cfg.driver_dict_cap
-        ):
-            lt_map = {r["logtype"]: r["logtype_id"] for r in lt_dict.collect()}
-            v_map = {r["value"]: r["var_id"] for r in v_dict.collect()}
+            # BOTH fit (a large var dict is not collected when the
+            # logtype dict is already over)
+            lt_pdf = collect_capped(lt_dict, cfg.driver_dict_cap)
+            v_pdf = (
+                None
+                if lt_pdf is None
+                else collect_capped(v_dict, cfg.driver_dict_cap)
+            )
+            if v_pdf is not None:
+                lt_map = dict(zip(lt_pdf["logtype"], lt_pdf["logtype_id"]))
+                v_map = dict(zip(v_pdf["value"], v_pdf["var_id"]))
         enc_sinked = add_seg_id(
             add_sink_id(
                 _encode(parsed_all, lt_dict, v_dict, lt_map, v_map, cfg),
@@ -487,11 +393,14 @@ def compress(
             window_days=cfg.segment_window_days,
         )
         encoded_schema = enc_sinked.schema
-        # the dict-phase ride-along counts give the route its cells; on
-        # resume after `dicts`, above the cap, or past _MAX_BOUNDS_CELLS
-        # route_to_sinks counts them from the sinked frame instead
-        bounds = _route_bounds(route_counts, lt_map, cfg.num_sinks)
-        route_to_sinks(enc_sinked, sinks_dir, cfg, presinked=True, bounds=bounds)
+        if cells is None:
+            # no dictionary-pass cells (resume after `dicts`, above the
+            # cap, past _MAX_BOUNDS_CELLS): one aggregation over the
+            # sinked frame gives the same cells
+            cells = cell_stats(enc_sinked)
+        route_to_sinks(
+            enc_sinked, sinks_dir, cfg, presinked=True, bounds=bounds_from_cells(cells)
+        )
     else:
         encoded_schema = add_seg_id(
             add_sink_id(
@@ -503,13 +412,18 @@ def compress(
             cfg.num_segments,
         ).schema
 
-    encoded_sinks = spark.read.schema(encoded_schema).parquet(sinks_dir)
-
     # ---- bookkeeping: manifests (route phase) + metrics ----
     need_metrics = "metrics" not in manifest.committed("metrics")
     if need_route or need_metrics:
+        if cells is None or pairs is None:
+            sinks = spark.read.schema(encoded_schema).parquet(sinks_dir)
+            if cells is None:
+                cells = cell_stats(sinks)
+            if pairs is None:
+                pairs = var_pairs(sinks)
         _write_bookkeeping(
-            encoded_sinks, out_dir, manifest, run_id, t0, need_route, need_metrics
+            out_dir, cells, pairs, zone_map_field(encoded_schema),
+            cfg.driver_dict_cap, manifest, run_id, t0, need_route, need_metrics,
         )
 
     return {
@@ -524,8 +438,11 @@ def compress(
 
 
 def _write_bookkeeping(
-    sinks: DataFrame,
     out_dir: str,
+    cells,
+    pairs,
+    ts_field,
+    cap: int,
     manifest: RunManifest,
     run_id: str,
     t0: float,
@@ -533,86 +450,117 @@ def _write_bookkeeping(
     need_metrics: bool,
 ) -> None:
     """Manifests (commits `route`) and/or the metrics table (commits
-    `metrics`) from a column-pruned read of the WRITTEN sinks; both
-    commits record their wall time from `t0`, the start of phase 3.
+    `metrics`), all written DRIVER-SIDE with pyarrow from exact cells;
+    both commits record their wall time from `t0`, the start of phase 3.
     The metrics half alone is also the GC metrics refresh
     (route/gc.py _refresh_metrics).
 
-    Only TWO distributed aggregations run: the segment summary (one
-    (sink, seg)-grouped pass — CLP-small by design, like the
-    dictionaries) and the distinct (sink, seg, var) pairs. Everything
-    the summary derives — logtype manifest, ts zone map, per-sink
-    metrics — is written DRIVER-SIDE with pyarrow: each of those used to
-    be its own multi-stage Spark write job, and those fixed scheduling
-    seconds are charged to every cluster size."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    cells: one row per (sink_id, seg_id, logtype_id) with rows,
+    n_encoded_vars, raw_bytes [, ts_min, ts_max] — from the dictionary
+    pass (_sink_cells) or route.fanout.cell_stats. pairs: the distinct
+    (sink_id, seg_id, var_id) — collected, or a DataFrame that is
+    collected here when it has at most `cap` rows and otherwise stays
+    distributed (write_var_manifest + one Spark var-cardinality
+    aggregation). ts_field: the zone map's source StructField, or None.
+    Encoded bytes are 16·rows + 8·n_encoded_vars, the metrics table's
+    long-standing definition (8 + 8 + 8 per encoded variable a row)."""
+    import pyarrow as pa
     from pyspark.sql import types as T
 
-    summary = segment_summary(sinks)
-    ts_cols = [c for c in ("ts_min", "ts_max") if c in summary.columns]
-    seg_cols = ts_cols + (["ts_src"] if "ts_src" in summary.columns else [])
-    summary_fields = {f.name: f.dataType for f in summary.schema.fields}
-    # TimestampType bounds are collected as epoch MICROS, not as
-    # datetimes: toPandas renders timestamps in the session's
-    # spark.sql.session.timeZone as naive wall times, and the
-    # pyarrow writer's timestamp("us", tz="UTC") would re-read
-    # those wall times as UTC — shifting the zone map by the UTC
-    # offset on any non-UTC session and mis-pruning range queries.
-    # Integer micros are timezone-free; pa.array interprets them
-    # as epoch values under the declared tz=UTC type, which is
-    # exactly the instant Spark stores internally.
-    micros_cols = [
-        c for c in ts_cols if isinstance(summary_fields[c], T.TimestampType)
-    ]
-    for c in micros_cols:
-        summary = summary.withColumn(c, F.unix_micros(F.col(c)))
+    from clp_spark.util import write_driver_table
 
-    var_pairs = sinks.select(
-        "sink_id", "seg_id", F.explode("dict_var_ids").alias("var_id")
-    )
-    var_man = var_pairs.distinct().persist() if need_route else var_pairs
+    if isinstance(pairs, DataFrame):
+        collected = collect_capped(pairs, cap)
+        pairs = pairs.persist() if collected is None else collected
+    zone, ts_type = {}, None
+    if ts_field is not None:
+        zone = {"ts_min": ("ts_min", "min"), "ts_max": ("ts_max", "max")}
+        ts_type = _pa_type(ts_field.dataType)
+        if pa.types.is_integer(ts_type) or isinstance(
+            ts_field.dataType, T.TimestampType
+        ):
+            # nullable Int64: an all-null-ts segment must round-trip as
+            # parquet null, not poison the column to float64 (TimestampType
+            # bounds arrive as epoch micros, see fanout.zone_map_aggs)
+            cells = cells.astype({c: "Int64" for c in zone})
 
-    def _w_varcard():
-        return (
-            var_man.select("sink_id", "var_id")
-            .distinct()
-            .groupBy("sink_id")
-            .agg(F.count("*").alias("var_cardinality"))
-            .toPandas()
+    def write(name: str, pdf, cols: list) -> None:
+        # every column is int64 but the zone map's; from_pandas maps
+        # pd.NA → parquet null
+        types = [
+            ts_type if c in zone else pa.string() if c == "ts_src" else pa.int64()
+            for c in cols
+        ]
+        write_driver_table(
+            pa.Table.from_arrays(
+                [pa.Array.from_pandas(pdf[c], type=t) for c, t in zip(cols, types)],
+                schema=pa.schema(list(zip(cols, types))),
+            ),
+            os.path.join(out_dir, name),
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_sum = pool.submit(summary.toPandas)
-        f_var = (
-            pool.submit(
-                write_var_manifest, var_man, os.path.join(out_dir, "manifest", "var")
-            )
-            if need_route
-            else None
-        )
-        f_vcard = pool.submit(_w_varcard) if need_metrics else None
-        summary_pdf = f_sum.result()
-        for c in micros_cols:
-            # nullable Int64: an all-null-ts segment must round-trip
-            # as parquet null, not poison the column to float64
-            summary_pdf[c] = summary_pdf[c].astype("Int64")
-        if need_route:
-            _write_summary_derived(summary_pdf, summary_fields, seg_cols, out_dir)
-            f_var.result()
-            manifest.commit(
-                "route", "route", run_id, wall_ms=int(1000 * (time.time() - t0))
-            )
-        if need_metrics:
-            _write_metrics_driver(
-                summary_pdf,
-                f_vcard.result(),
-                summary_fields,
-                ts_cols,
-                os.path.join(out_dir, "metrics"),
-            )
-            manifest.commit(
-                "metrics", "metrics", run_id, wall_ms=int(1000 * (time.time() - t0))
-            )
     if need_route:
-        var_man.unpersist()
+        # sorted by logtype_id / var_id so parquet row-group min/max stats
+        # prune id-probing queries
+        write(
+            "manifest/logtype",
+            cells.sort_values(["logtype_id", "sink_id", "seg_id"]),
+            ["sink_id", "seg_id", "logtype_id"],
+        )
+        segs = (
+            cells.groupby(["sink_id", "seg_id"], sort=True)
+            .agg(rows=("rows", "sum"), **zone)
+            .reset_index()
+        )
+        if ts_field is not None:
+            # WHICH column fed the zone map: search applies it only to
+            # queries filtering on that same column
+            segs["ts_src"] = ts_field.name
+        write("manifest/segments", segs, list(segs.columns))
+        var_dir = os.path.join(out_dir, "manifest", "var")
+        if isinstance(pairs, DataFrame):
+            write_var_manifest(pairs, var_dir)
+        else:
+            # no bloom filter here (pyarrow cannot write one): search
+            # collects any var manifest of up to 4M pairs
+            # (search.sinks._MAX_DRIVER_MANIFEST_PAIRS, twice the default
+            # cap) and never reads its bloom; a larger manifest still
+            # searches correctly through the semi-join path
+            write(
+                "manifest/var",
+                pairs.sort_values(["var_id", "sink_id", "seg_id"]),
+                ["sink_id", "seg_id", "var_id"],
+            )
+        manifest.commit(
+            "route", "route", run_id, wall_ms=int(1000 * (time.time() - t0))
+        )
+    if need_metrics:
+        met = cells.groupby("sink_id", sort=True).agg(
+            rows=("rows", "sum"),
+            logtype_cardinality=("logtype_id", "nunique"),
+            n_encoded_vars=("n_encoded_vars", "sum"),
+            raw_bytes=("raw_bytes", "sum"),
+            **zone,
+        ).reset_index()
+        met.insert(
+            4, "encoded_bytes", 16 * met["rows"] + 8 * met["n_encoded_vars"]
+        )
+        if isinstance(pairs, DataFrame):
+            vcard = (
+                pairs.select("sink_id", "var_id").distinct().groupBy("sink_id")
+                .count().toPandas()
+            )
+            vcard = vcard.set_index("sink_id")["count"]
+        else:
+            vcard = pairs.drop_duplicates(["sink_id", "var_id"]).groupby(
+                "sink_id"
+            ).size()
+        met["var_cardinality"] = (
+            met["sink_id"].map(vcard).fillna(0).astype("int64")
+        )
+        write("metrics", met, list(met.columns))
+        manifest.commit(
+            "metrics", "metrics", run_id, wall_ms=int(1000 * (time.time() - t0))
+        )
+    if isinstance(pairs, DataFrame):
+        pairs.unpersist()

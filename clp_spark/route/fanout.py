@@ -15,15 +15,17 @@ task gets an equal share of ROWS, and a hot cell is split across
 contiguous tasks by a row hash (_route_with_bounds).
 
 Per-sink metrics (FIXTURES.md §3 sink_metrics: rows, logtype/var
-cardinalities, encoded byte sizes) are not aggregated here:
-segment_summary's one (sink, seg)-grouped pass feeds the driver-side
-metrics writer (pipeline._write_bookkeeping), which compress() and the
-GC metrics refresh (route/gc.py) both run.
+cardinalities, encoded byte sizes) and the manifests are not aggregated
+here: compress() derives them on the driver from the dictionary pass's
+exact cells (pipeline._write_bookkeeping). cell_stats and var_pairs are
+the same two tables taken from a frame, for the runs that have no such
+cells (resume after the dictionaries, above the driver cap, the GC
+metrics refresh).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from clp_spark.config import PipelineConfig
 
@@ -90,34 +92,52 @@ def add_seg_id(
     return encoded.withColumn("seg_id", seg)
 
 
-def segment_summary(encoded_with_seg: DataFrame) -> DataFrame:
-    """ONE pass fusing the per-SEGMENT metric aggregates with the
-    logtype inverted index and the timestamp zone map (sink_id, seg_id,
-    rows, n_encoded_vars, encoded_bytes, raw_bytes, lt_set
-    [, ts_min, ts_max]). Per-sink metrics re-aggregate from this tiny
-    frame; the manifests explode from it — the big frame is scanned
-    once for all of them."""
-    aggs = [
-        F.count("*").alias("rows"),
-        F.sum(F.size("encoded_vars")).alias("n_encoded_vars"),
-        F.sum(F.expr("8 + 8 + 8 * size(encoded_vars)")).alias("encoded_bytes"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sort_array(F.collect_set("logtype_id")).alias("lt_set"),
-    ]
-    ts_src = None
-    for c in ("warc_ts", "ts_ms"):
-        if c in encoded_with_seg.columns:
-            aggs += [F.min(c).alias("ts_min"), F.max(c).alias("ts_max")]
-            ts_src = c
-            break
-    out = encoded_with_seg.groupBy("sink_id", "seg_id").agg(*aggs)
-    if ts_src is not None:
-        # record WHICH column fed the zone map so search only applies it
-        # to queries filtering on that same column (an archive can carry
-        # both warc_ts and ts_ms; pruning a ts_ms query with warc_ts
-        # stats would be unsound)
-        out = out.withColumn("ts_src", F.lit(ts_src))
-    return out
+def zone_map_field(schema):
+    """The zone map's source column (StructField) in `schema`: warc_ts,
+    else ts_ms, else None."""
+    return next((schema[c] for c in ("warc_ts", "ts_ms") if c in schema.names), None)
+
+
+def zone_map_aggs(df: DataFrame) -> list:
+    """[ts_min, ts_max] aggregate Columns over the zone map's source
+    column ([] without one). TimestampType bounds come out as epoch
+    MICROS: toPandas renders timestamps as naive wall times in the
+    session time zone, which the driver writer's timestamp("us",
+    tz="UTC") type would re-read as UTC — shifting the zone map by the
+    UTC offset on a non-UTC session. Integer micros are the instant
+    Spark stores, whatever the session zone."""
+    field = zone_map_field(df.schema)
+    if field is None:
+        return []
+    lo, hi = F.min(field.name), F.max(field.name)
+    if isinstance(field.dataType, T.TimestampType):
+        lo, hi = F.unix_micros(lo), F.unix_micros(hi)
+    return [lo.alias("ts_min"), hi.alias("ts_max")]
+
+
+def cell_stats(df: DataFrame):
+    """Exact per-(sink_id, seg_id, logtype_id) cells of a sinked frame,
+    collected: rows, n_encoded_vars, raw_bytes [, ts_min, ts_max] — one
+    aggregation that feeds both the analytic route bounds and the
+    driver-side bookkeeping writer."""
+    return (
+        df.groupBy("sink_id", "seg_id", "logtype_id")
+        .agg(
+            F.count("*").alias("rows"),
+            F.sum(F.size("encoded_vars")).alias("n_encoded_vars"),
+            F.sum("raw_bytes").alias("raw_bytes"),
+            *zone_map_aggs(df),
+        )
+        .toPandas()
+    )
+
+
+def var_pairs(df: DataFrame) -> DataFrame:
+    """The distinct (sink_id, seg_id, var_id) pairs of a sinked frame —
+    the var manifest's rows."""
+    return df.select(
+        "sink_id", "seg_id", F.explode("dict_var_ids").alias("var_id")
+    ).distinct()
 
 
 def murmur3_long(value: int, seed: int = 42) -> int:
@@ -190,12 +210,19 @@ def _route_with_bounds(
     same GLT clustering the range sort gave) and hot cells split
     uniformly by the row hash (the sampler's tiebreaker, minus the
     sampler). Placement uses magic key values with
-    pmod(murmur3(m_pid), P) == pid, so file contents and split points
-    are deterministic at ANY parallelism — the sampler's are not.
+    pmod(murmur3(m_pid), P) == pid. Which (sink, seg) directory a row
+    lands in is identical at any width; the file splits are
+    deterministic for a given width (the sampler's are not).
     Counts as float64 are exact to 2^53 rows (>> the 10^12-doc target).
+
+    Width: one wave of write tasks, P = min(cfg.shuffle_partitions, the
+    cluster's default parallelism). The bounds already give every task
+    an equal share of rows, so tasks past one wave only add per-task
+    and per-file cost (a parquet footer per extra file). The route
+    layout therefore follows the core count.
     """
     spark = df.sparkSession
-    p_n = int(cfg.shuffle_partitions)
+    p_n = min(int(cfg.shuffle_partitions), spark.sparkContext.defaultParallelism)
     rpp = max(1, -(-total // p_n))
     b_sdf = spark.createDataFrame(
         bounds_pdf,
@@ -235,20 +262,21 @@ def _route_with_bounds(
 
 def bounds_from_cells(cells) -> tuple:
     """(bounds_pdf, total_rows) from per-(sink_id, seg_id, logtype_id)
-    row counts `n` (duplicate cells are summed): each cell's cumulative
-    start position in the (sink, seg, logtype)-sorted global row order —
-    what RangePartitioner would derive from a sample, but exact."""
+    row counts `rows` (duplicate cells are summed; other columns are
+    ignored): each cell's cumulative start position in the
+    (sink, seg, logtype)-sorted global row order — what RangePartitioner
+    would derive from a sample, but exact."""
     cells = (
-        cells.groupby(["sink_id", "seg_id", "logtype_id"], sort=True)["n"]
+        cells.groupby(["sink_id", "seg_id", "logtype_id"], sort=True)["rows"]
         .sum()
         .reset_index()
     )
-    total = int(cells["n"].sum())
+    total = int(cells["rows"].sum())
     cells["_cum_before"] = (
-        cells["n"].cumsum().shift(1, fill_value=0).astype("float64")
+        cells["rows"].cumsum().shift(1, fill_value=0).astype("float64")
     )
-    cells["_cell_rows"] = cells["n"].astype("float64")
-    return cells.drop(columns=["n"]), total
+    cells["_cell_rows"] = cells["rows"].astype("float64")
+    return cells.drop(columns=["rows"]), total
 
 
 def route_to_sinks(
@@ -264,11 +292,10 @@ def route_to_sinks(
     presinked=True: `encoded` already carries sink_id and seg_id.
 
     bounds=(bounds_pdf, total_rows) from bounds_from_cells: the caller's
-    exact per-(sink, seg, logtype) counts (compress derives them from
-    the dictionary aggregation at zero extra scans). When None — resume
-    after the dictionaries committed, above-cap dictionaries, direct
-    callers — the cells come from one groupBy(...).count() over the
-    sinked frame."""
+    exact per-(sink, seg, logtype) counts (compress takes them from the
+    dictionary pass's cells, or from cell_stats over the sinked frame).
+    When None — direct callers — the cells come from one
+    groupBy(...).count() over the sinked frame."""
     df = (
         encoded
         if presinked
@@ -308,8 +335,10 @@ def route_to_sinks(
         or ["logtype_id"]
     )
     if bounds is None:
-        cells = df.groupBy("sink_id", "seg_id", "logtype_id").count().toPandas()
-        bounds = bounds_from_cells(cells.rename(columns={"count": "n"}))
+        cells = df.groupBy("sink_id", "seg_id", "logtype_id").agg(
+            F.count("*").alias("rows")
+        )
+        bounds = bounds_from_cells(cells.toPandas())
     bounds_pdf, total = bounds
     _route_with_bounds(
         df, out_path, cfg, part_cols, sort_cols, tiebreak, bounds_pdf, total

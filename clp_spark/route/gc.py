@@ -23,10 +23,11 @@ session that GCs and re-queries sees the shrunken archive without
 restarts, even when the GC run died between its deletes and its swap.
 
 With a session, the per-sink metrics table is then rewritten from the
-surviving sinks by compress()'s own metrics code
-(pipeline._write_bookkeeping with only its metrics half), so GC has no
-aggregation of its own and the refreshed table keeps the compress
-schema, `ts_min`/`ts_max` included.
+surviving sinks by compress()'s own metrics code: the frame path's
+cells and var pairs (route.fanout.cell_stats, var_pairs) into the
+metrics half of pipeline._write_bookkeeping, so GC has no aggregation
+of its own and the refreshed table keeps the compress schema,
+`ts_min`/`ts_max` included.
 """
 
 from __future__ import annotations
@@ -320,15 +321,17 @@ def expire_segments(
 
 def _refresh_metrics(spark, out_dir: str, run_id: str) -> None:
     """Recompute per-sink metrics from the surviving sink data with
-    compress()'s own metrics code: the metrics half of
-    pipeline._write_bookkeeping, the path a metrics-only resume of
-    compress() takes (segment summary + var cardinality into the
-    driver-side writer, then a `metrics` commit record). A GC'd
-    archive's metrics therefore keep exactly the compress schema, and
-    a fully expired archive gets the zero-row table."""
+    compress()'s own metrics code — the path a metrics-only resume of
+    compress() takes: one cell aggregation + the distinct var pairs over
+    the sinks, into the driver-side writer, then a `metrics` commit
+    record. A GC'd archive's metrics therefore keep exactly the
+    compress schema, and a fully expired archive gets the zero-row
+    table."""
     import pyspark.sql.functions as F
 
+    from clp_spark.config import PipelineConfig
     from clp_spark.pipeline import _write_bookkeeping
+    from clp_spark.route.fanout import cell_stats, var_pairs, zone_map_field
 
     if not os.path.isdir(os.path.join(out_dir, "metrics")):
         return
@@ -340,6 +343,7 @@ def _refresh_metrics(spark, out_dir: str, run_id: str) -> None:
         if pcol in enc.columns:
             enc = enc.withColumn(pcol, F.col(pcol).cast("long"))
     _write_bookkeeping(
-        enc, out_dir, RunManifest(out_dir), run_id, t0,
+        out_dir, cell_stats(enc), var_pairs(enc), zone_map_field(enc.schema),
+        PipelineConfig().driver_dict_cap, RunManifest(out_dir), run_id, t0,
         need_route=False, need_metrics=True,
     )

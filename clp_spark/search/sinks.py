@@ -156,7 +156,7 @@ class Archive:
         """(rows, unit_cols, ts_src) of the segments manifest, rows being
         (unit, ts_min, ts_max); None when it has no timestamp columns.
         Manifests predating ts_src are warc_ts-sourced (the historical
-        default of segment_summary)."""
+        default of the zone map's source choice)."""
         if not os.path.isdir(os.path.join(self.man_dir, "segments")):
             return None
         seg = self._read("manifest", "segments")

@@ -57,6 +57,14 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df.repartition(min_partitions)
 
 
+def collect_capped(df: DataFrame, cap: int):
+    """`df` as pandas in ONE capped collect (limit(cap + 1)); None when
+    it holds more than `cap` rows — the caller degrades to its
+    distributed path instead of truncating."""
+    pdf = df.limit(cap + 1).toPandas()
+    return None if len(pdf) > cap else pdf
+
+
 def write_driver_table(tbl, dirpath: str, compression: str = "zstd") -> None:
     """Single-file parquet dataset written driver-side with pyarrow —
     the shared bottom half of every driver-side bookkeeping write

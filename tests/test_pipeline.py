@@ -304,19 +304,19 @@ def test_compress_zero_rows_commits_empty_metrics(spark, pages_df, tmp_path_fact
     assert {"sink_id", "rows", "var_cardinality"} <= set(met.columns)
 
 
-def test_resume_after_dicts_matches_clean_run(spark, pages_df, tmp_path_factory):
+def _assert_resume_after_dicts_matches_clean_run(spark, df, cfg, tmp_path_factory):
     """A crash after `parse` and `dicts` committed but before `route`:
-    the resume has no ride-along route counts, so route_to_sinks counts
-    its own cells — the sinks, manifests and metrics must equal a clean
-    run's."""
+    the resume has no dictionary-pass cells, so it takes its cells from
+    one aggregation over the sinked frame and its var pairs from the
+    written sinks (the frame path) — the sinks, manifests and metrics
+    must equal a clean run's (the cells path)."""
     import json as _json
 
-    cfg = PipelineConfig(num_sinks=8, num_checkpoint_buckets=2, shuffle_partitions=8)
     clean = str(tmp_path_factory.mktemp("clean_out"))
-    compress(spark, pages_df, clean, cfg)
+    compress(spark, df, clean, cfg)
 
     out = str(tmp_path_factory.mktemp("resume_route_out"))
-    compress(spark, pages_df, out, cfg)
+    compress(spark, df, out, cfg)
     for sub in ("sinks", "manifest", "metrics"):
         shutil.rmtree(os.path.join(out, sub))
     man_path = os.path.join(out, "_manifest.jsonl")
@@ -327,8 +327,12 @@ def test_resume_after_dicts_matches_clean_run(spark, pages_df, tmp_path_factory)
             if r["phase"] in ("parse", "dicts"):
                 f.write(_json.dumps(r) + "\n")
 
-    compress(spark, pages_df, out, cfg)
+    compress(spark, df, out, cfg)
+    _assert_same_archive(spark, out, clean)
+    return clean
 
+
+def _assert_same_archive(spark, a, b):
     def rows(base, sub):
         df = spark.read.parquet(os.path.join(base, sub))
         return sorted(
@@ -336,4 +340,97 @@ def test_resume_after_dicts_matches_clean_run(spark, pages_df, tmp_path_factory)
         )
 
     for sub in ("sinks", "metrics", "manifest/logtype", "manifest/segments", "manifest/var"):
-        assert rows(out, sub) == rows(clean, sub), sub
+        assert rows(a, sub) == rows(b, sub), sub
+
+
+_RESUME_CFG = PipelineConfig(num_sinks=8, num_checkpoint_buckets=2, shuffle_partitions=8)
+
+
+def test_resume_after_dicts_matches_clean_run(spark, pages_df, tmp_path_factory):
+    """Cells path vs frame path on the warc_ts zone map."""
+    _assert_resume_after_dicts_matches_clean_run(
+        spark, pages_df, _RESUME_CFG, tmp_path_factory
+    )
+
+
+def test_resume_after_dicts_matches_clean_run_ts_ms(spark, pages_pdf, tmp_path_factory):
+    """Cells path vs frame path when the zone map comes from the parsed
+    `ts_ms` (no warc_ts column), with some lines carrying no leading
+    timestamp (null ts_ms)."""
+    import pyarrow.dataset as ds
+
+    pdf = pages_pdf.head(600)
+    rows = [
+        (u, t if i % 9 == 0 else f"{ts:%Y-%m-%d %H:%M:%S} {t}")
+        for i, (u, t, ts) in enumerate(zip(pdf["url"], pdf["text"], pdf["warc_ts"]))
+    ]
+    df = spark.createDataFrame(rows, "url string, text string").repartition(4)
+    cfg = PipelineConfig(
+        num_sinks=8, num_checkpoint_buckets=2, shuffle_partitions=8,
+        parse_timestamps=True,
+    )
+    clean = _assert_resume_after_dicts_matches_clean_run(spark, df, cfg, tmp_path_factory)
+    seg = ds.dataset(os.path.join(clean, "manifest", "segments")).to_table()
+    assert set(seg.column("ts_src").to_pylist()) == {"ts_ms"}
+    assert seg.column("ts_min").null_count < len(seg)
+
+
+def test_resume_after_dicts_matches_clean_run_null_lang(spark, pages_pdf, tmp_path_factory):
+    """Cells path vs frame path with null-lang rows: both must assign
+    the sink Spark's xxhash64 gives a null lang."""
+    pdf = pages_pdf.copy()
+    pdf.loc[pdf.index[::5], "lang"] = None
+    df = spark.createDataFrame(pdf).repartition(4)
+    _assert_resume_after_dicts_matches_clean_run(spark, df, _RESUME_CFG, tmp_path_factory)
+
+
+def test_fresh_compress_spark_jobs(spark, pages_df, tmp_path_factory):
+    """A fresh compress() launches at most 10 Spark jobs, counted over
+    every thread: the dictionary pass submits from pool threads that
+    carry no job group, so the count takes the ungrouped jobs plus the
+    caller's group. The shape: the parse write, one capped collect per
+    dictionary aggregate, the route shuffle + write; the manifests and
+    metrics come from the dictionary pass's cells with no job at all.
+    The same count was 31 when each dictionary ran persist → count →
+    orderBy().toPandas() and the bookkeeping re-read the written sinks
+    (segment summary + distinct var pairs + a range-partitioned var
+    manifest write)."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    groups = {None, sc.getLocalProperty("spark.jobGroup.id")}
+
+    def jobs() -> set:
+        return {j for g in groups for j in st.getJobIdsForGroup(g)}
+
+    pages_df.count()
+    before = jobs()
+    compress(spark, pages_df, str(tmp_path_factory.mktemp("jobs_out")), CFG)
+    assert len(jobs() - before) <= 10
+
+
+def test_template_hash_collision_takes_var_pairs_from_sinks(
+    spark, pages_df, result, tmp_path_factory, monkeypatch
+):
+    """The var cells name their template by xxhash64; when two templates
+    share a hash the dictionary pass drops the var cells and compress
+    takes its var pairs from the written sinks instead — with the same
+    manifests and metrics. Forced by making every template hash alike
+    inside the dictionary pass only."""
+    import types
+
+    import clp_spark.dicts.build as build
+    import clp_spark.pipeline as pl
+
+    same_hash = types.SimpleNamespace(
+        **{n: getattr(F, n) for n in dir(F) if not n.startswith("_")}
+    )
+    same_hash.xxhash64 = lambda *cols: F.lit(7).cast("long")
+    monkeypatch.setattr(build, "F", same_hash)
+    real_var_pairs, calls = pl.var_pairs, []
+    monkeypatch.setattr(
+        pl, "var_pairs", lambda df: calls.append(df) or real_var_pairs(df)
+    )
+    out = str(tmp_path_factory.mktemp("hash_collision_out"))
+    compress(spark, pages_df, out, CFG)
+    assert len(calls) == 1
+    _assert_same_archive(spark, out, os.path.dirname(result["sinks"]))

@@ -89,11 +89,12 @@ def test_bounds_partitions_balanced(spark, pages_df):
     2x the mean row count (the analytic route guarantees this via exact
     counts + hash splitting of hot cells)."""
     from clp_spark.dicts.build import build_dicts_small_pandas, encode_with_maps
-    from clp_spark.pipeline import _route_bounds
+    from clp_spark.pipeline import _sink_cells
     from clp_spark.route.fanout import (
         _route_with_bounds,  # noqa: F401 (exercised through route_to_sinks)
         add_seg_id,
         add_sink_id,
+        bounds_from_cells,
         magic_partition_keys,
         segment_expr,
     )
@@ -106,12 +107,12 @@ def test_bounds_partitions_balanced(spark, pages_df):
     extras = [("lang", F.col("lang"))]
     seg_col, _ = segment_expr(parsed, cfg.num_segments, cfg.segment_window_days)
     extras.append(("_seg", seg_col))
-    lt_pdf, v_pdf, lt_map, v_map, counts = build_dicts_small_pandas(
+    lt_pdf, v_pdf, lt_map, v_map, dict_cells = build_dicts_small_pandas(
         parsed, 1_000_000, route_count_cols=extras
     )
-    bounds = _route_bounds(counts, lt_map, cfg.num_sinks)
-    assert bounds is not None
-    bounds_pdf, total = bounds
+    sink_cells = _sink_cells(dict_cells, cfg.num_sinks)
+    assert sink_cells is not None
+    bounds_pdf, total = bounds_from_cells(sink_cells[0])
     assert total == pages_df.count()
 
     enc = add_seg_id(
@@ -138,3 +139,28 @@ def test_bounds_partitions_balanced(spark, pages_df):
     counts_by_part = [r["count"] for r in sizes]
     mean = total / p_n
     assert max(counts_by_part) <= 2 * mean, counts_by_part
+
+
+def test_route_writes_one_wave(spark, pages_df, tmp_path):
+    """The route shuffle is one wave of write tasks:
+    min(shuffle_partitions, default parallelism). Each task covers a
+    contiguous (sink, seg) range, so the files number at most
+    (#(sink, seg) directories) + P - 1, not one per directory per
+    configured partition."""
+    from clp_spark.pipeline import compress_df
+    from clp_spark.route.fanout import route_to_sinks
+
+    p = spark.sparkContext.defaultParallelism
+    cfg = PipelineConfig(num_sinks=8, shuffle_partitions=32)
+    assert p < cfg.shuffle_partitions
+    enc, _, _ = compress_df(pages_df, cfg)
+    out = str(tmp_path / "sinks")
+    route_to_sinks(enc, out, cfg)
+    dirs, files = set(), 0
+    for root, _dirs, names in os.walk(out):
+        n = sum(1 for f in names if f.endswith(".parquet"))
+        if n:
+            dirs.add(root)
+            files += n
+    assert files <= len(dirs) + p - 1, (files, len(dirs), p)
+    assert spark.read.parquet(out).count() == pages_df.count()
