@@ -11,7 +11,9 @@ Query.hpp:103-121,168-241):
       from exact/wildcard var-dict scans → arrays_overlap, exact int/float
       encodings → array_contains. An infeasible token (dictionary miss)
       ⇒ empty result with no data scan;
-  (4) decode only surviving rows and wildcard-confirm (Grep.cpp:115-132).
+  (4) decode only surviving rows and wildcard-confirm them in the same
+      Arrow pass (Grep.cpp:115-132): the decode kernel runs the confirm
+      as an RE2 regex (wildcard.wildcard_to_re2) and returns only hits.
 
 All prefilters are supersets; the confirm is exact ⇒ results are exact.
 Dictionary matching runs driver-side on the collected dicts (CLP loads
@@ -21,10 +23,11 @@ distributed dict-frame filters (_SparkDictIndex). Any ID set larger
 than `_MAX_ISIN_IDS` degrades that branch to *unconstrained* (never
 truncated) so pruning weakens gracefully while staying a superset.
 
-The collected index and the decode broadcasts live on an `ArchiveDicts`,
-both built from one collect of each dictionary: search_sinks passes the
-one its opened Archive handle keeps across queries, while search() over
-bare frames prepares a fresh one per call.
+The collected index and the decode broadcasts (parsed templates, dense
+var values) live on an `ArchiveDicts`, both built from one collect of
+each dictionary: search_sinks passes the one its opened Archive handle
+keeps across queries, while search() over bare frames prepares a fresh
+one per call.
 """
 
 from __future__ import annotations
@@ -37,8 +40,12 @@ from pyspark.sql import Column, DataFrame
 
 from clp_spark.config import PLACEHOLDER_FLOAT, PLACEHOLDER_INT
 from clp_spark.search.compiler import CompiledQuery, TokenPred, compile_query
-from clp_spark.search.decode import decode_prepared
-from clp_spark.search.wildcard import wildcard_to_java_regex, wildcard_to_regex
+from clp_spark.search.decode import decode_prepared, decode_tables
+from clp_spark.search.wildcard import (
+    wildcard_to_java_regex,
+    wildcard_to_re2,
+    wildcard_to_regex,
+)
 
 # above this many candidate IDs a branch stops constraining (supersets
 # only — never a truncated ID list, which would drop matching rows)
@@ -215,17 +222,29 @@ class ArchiveDicts:
 
     @cached_property
     def decoder(self) -> tuple:
-        """(b_lt, b_v, lt_small) for decode_prepared: both driver maps
-        broadcast, or (None, None, lt_small) for the join path."""
+        """(b_tpl, b_var, lt_small) for decode_prepared: the parsed
+        templates and the dense var values, broadcast once, or
+        (None, None, lt_small) for the join path."""
         lt, v, lt_small = self._rows
         if v is None:
             return None, None, lt_small
         sc = self.logtype_dict.sparkSession.sparkContext
-        return sc.broadcast(dict(lt)), sc.broadcast(dict(v)), True
+        templates, var_text = decode_tables(lt, v)
+        return sc.broadcast(templates), sc.broadcast(var_text), True
 
-    def decode(self, df: DataFrame, out_col: str) -> DataFrame:
+    def decode(
+        self,
+        df: DataFrame,
+        out_col: str,
+        confirm: str | None = None,
+        ignore_case: bool = False,
+    ) -> DataFrame:
+        """`df` with the decoded text as `out_col`. With a `confirm`
+        wildcard, only the rows whose text matches it, confirmed in the
+        decode pass itself."""
+        rx = None if confirm is None else wildcard_to_re2(confirm, ignore_case)
         return decode_prepared(
-            df, self.logtype_dict, self.var_dict, self.decoder, out_col
+            df, self.logtype_dict, self.var_dict, self.decoder, out_col, rx
         )
 
 
@@ -406,10 +425,9 @@ def run_search(
     if not decode:
         return df
 
-    # (4) decode + confirm only survivors
-    decoded = dicts.decode(df, text_col)
-    jrx = wildcard_to_java_regex(cq.confirm_pattern, cq.ignore_case)
-    return decoded.filter(F.col(text_col).rlike("\\A(?:" + jrx + ")\\z"))
+    # (4) decode only survivors and confirm them in the same Arrow pass:
+    # the JVM receives only the hits
+    return dicts.decode(df, text_col, cq.confirm_pattern, cq.ignore_case)
 
 
 def _filter_var_subsequence(df, cq: CompiledQuery, idx: _DictIndex):

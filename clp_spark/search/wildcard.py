@@ -69,6 +69,43 @@ def wildcard_to_java_regex(pattern: str, ignore_case: bool = False) -> str:
     return "".join(out)
 
 
+def wildcard_to_re2(pattern: str, ignore_case: bool = False) -> str:
+    """Same translation as an anchored RE2 pattern (pyarrow.compute's
+    regex engine) that matches exactly the strings the Java regex of
+    wildcard_to_java_regex matches under `rlike`.
+
+    Literals are escaped one character at a time (`\\Q…\\E` would end
+    early on a literal `\\E`). Case folding is spelt out as `[xX]` for
+    ASCII letters only, with no `(?i)`: Java's `(?i)` folds ASCII only,
+    while RE2's also folds e.g. U+212A KELVIN SIGN to `k`.
+    """
+    out = ["(?s)\\A"]
+    i, n = 0, len(pattern)
+    while i < n:
+        c = pattern[i]
+        if c == "\\" and i + 1 < n:
+            out.append(_re2_literal(pattern[i + 1], ignore_case))
+            i += 2
+            continue
+        if c == "*":
+            out.append(".*")
+        elif c == "?":
+            out.append(".")
+        else:
+            out.append(_re2_literal(c, ignore_case))
+        i += 1
+    out.append("\\z")
+    return "".join(out)
+
+
+def _re2_literal(c: str, ignore_case: bool) -> str:
+    if c.isascii() and c.isalnum():
+        if ignore_case and c.isalpha():
+            return f"[{c.lower()}{c.upper()}]"
+        return c
+    return f"\\x{{{ord(c):x}}}"
+
+
 def wildcard_match(pattern: str, text: str, ignore_case: bool = False) -> bool:
     """Whole-string wildcard match (oracle-side helper)."""
     return wildcard_to_regex(pattern, ignore_case).fullmatch(text) is not None

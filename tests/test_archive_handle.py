@@ -63,6 +63,7 @@ def test_archive_dicts_collect_each_dictionary_once(spark, pages_df, tmp_path):
     """The dictionary index and the decode broadcasts of a fresh
     ArchiveDicts come from one collect of each dictionary: 2 Spark jobs
     for both, not 2 each."""
+    from clp_spark.search.decode import parse_template
     from clp_spark.search.executor import ArchiveDicts, _DictIndex, _SparkDictIndex
 
     out = str(tmp_path / "arch")
@@ -73,12 +74,17 @@ def test_archive_dicts_collect_each_dictionary_once(spark, pages_df, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("dict-collect", "index + decoder of a fresh ArchiveDicts")
     try:
-        idx, (b_lt, b_v, lt_small) = dicts.index, dicts.decoder
+        idx, (b_tpl, b_var, lt_small) = dicts.index, dicts.decoder
     finally:
         sc.setJobGroup("dict-collect-done", "")
     assert len(sc.statusTracker().getJobIdsForGroup("dict-collect")) == 2
     assert isinstance(idx, _DictIndex) and lt_small
-    assert b_lt.value == dict(idx.lt_rows) and b_v.value == dict(idx.var_rows)
+    # the broadcasts hold the same dictionaries: parsed templates by
+    # logtype_id, and var values at their var_id
+    assert b_tpl.value == {i: parse_template(t) for i, t in idx.lt_rows}
+    var_text = b_var.value.to_pylist()
+    assert all(var_text[i] == v for i, v in idx.var_rows)
+    assert len(var_text) == len(idx.var_rows)
 
     # only the var dictionary over the cap: distributed index, join
     # decode with the logtype dictionary still broadcast (lt_small)

@@ -162,3 +162,28 @@ class TestCurationPlans:
         plan = _plan(strip_duplicated_spans(docs, span_words=4))
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
+
+
+class TestSearchPlans:
+    def test_warm_search_decodes_and_confirms_in_one_arrow_map(
+        self, spark, tmp_path_factory
+    ):
+        """Stage 4 is one mapInArrow that decodes and confirms: no
+        pandas row map, and no JVM regex over the decoded text."""
+        from clp_spark.config import PipelineConfig
+        from clp_spark.fixtures.pages import generate_pages_pdf
+        from clp_spark.pipeline import compress
+        from clp_spark.search.sinks import search_sinks
+
+        out = str(tmp_path_factory.mktemp("plan_search"))
+        pages = spark.createDataFrame(generate_pages_pdf(0, 200))
+        compress(spark, pages, out, PipelineConfig(num_checkpoint_buckets=1))
+        q = "*request handled status=200*"
+        search_sinks(spark, out, q).count()
+        hits = search_sinks(spark, out, q)
+        assert hits.count() > 0
+        plan = _plan(hits)
+        assert "MapInPandas" not in plan
+        at = plan.find("MapInArrow")
+        assert at >= 0, plan
+        assert "RLIKE" not in plan[:at].upper()
