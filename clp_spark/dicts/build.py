@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from clp_spark.config import VT_DICT
+from clp_spark.util import forget_zip_importers
 
 
 def assign_stable_ids(
@@ -331,6 +332,7 @@ def _encode_batches_arrow(
     import numpy as np
     import pyarrow as pa
 
+    forget_zip_importers()
     lt_ent = _map_index(b_lt) if b_lt is not None else None
     v_ent = _map_index(b_v)
     for rb in batches:

@@ -196,6 +196,9 @@ def tokenize_df(
         import pyarrow as pa
 
         from clp_spark.parse.npscan import parse_block_buf
+        from clp_spark.util import forget_zip_importers
+
+        forget_zip_importers()
 
         def _str_buffers(col):
             """(values uint8, offsets int64) views of an Arrow string

@@ -24,6 +24,9 @@ them as scalars. Input columns pass through as Arrow arrays.
 With a confirm regex (RE2, search.wildcard.wildcard_to_re2) the same
 pass keeps only the rows whose text matches, so the JVM receives only
 hits (Grep.cpp:115-132 decodes and confirms in one loop too).
+The kernel first drops the worker's zip importer cache
+(clp_spark.util.forget_zip_importers), which PySpark's worker would
+otherwise re-read before every task.
 Dictionaries too large to broadcast take the explode → shuffle-join →
 regroup path instead, which hands the same kernel each row's template
 and gathered dict strings, so stage-4 decode never requires a
@@ -43,6 +46,7 @@ from clp_spark.config import (
     PLACEHOLDER_INT,
 )
 from clp_spark.oracle.tokenizer import decode_float
+from clp_spark.util import forget_zip_importers
 
 
 def parse_template(logtype: str):
@@ -176,6 +180,7 @@ def _decode_batches(
     its template in `_tpl` and its dict-var strings in `_dstrs`."""
     import pyarrow.compute as pc
 
+    forget_zip_importers()
     tcache: dict = {}
     for batch in batches:
         text = _decode_text(batch, templates, var_text, tcache)

@@ -35,6 +35,7 @@ from __future__ import annotations
 import operator
 from functools import cached_property, reduce
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -46,6 +47,7 @@ from clp_spark.search.wildcard import (
     wildcard_to_re2,
     wildcard_to_regex,
 )
+from clp_spark.util import forget_zip_importers
 
 # above this many candidate IDs a branch stops constraining (supersets
 # only — never a truncated ID list, which would drop matching rows)
@@ -434,44 +436,61 @@ def _filter_var_subsequence(df, cq: CompiledQuery, idx: _DictIndex):
     """Keep rows whose encoded_vars contain the query's variable
     encodings in query order (non-contiguous subsequence). Each query
     var is a set of acceptable int64s (dict vars may map to several IDs
-    under ignore-case). Arrow-batched pandas pass. Returns None when a
-    dictionary miss makes the query unsatisfiable."""
-    import pandas as pd
-
-    needles: list[frozenset] = []
+    under ignore-case). One mapInArrow kernel (`_var_order_mask`).
+    Returns None when a dictionary miss makes the query unsatisfiable."""
+    needles: list[np.ndarray] = []
     for kind, v in cq.ordered_vars:
         if kind in ("int", "float"):
-            needles.append(frozenset((int(v),)))
+            needles.append(np.array([int(v)], np.int64))
         else:
             ids = idx.var_ids_exact(v, cq.ignore_case)
             if ids is None:
                 continue  # oversized set: skip this needle (stay superset)
             if not ids:
                 return None
-            needles.append(frozenset(int(i) for i in ids))
+            needles.append(np.fromiter(ids, np.int64))
     if not needles:
         return df
 
-    spark = df.sparkSession
-    b_needles = spark.sparkContext.broadcast(needles)
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-    )
+    b_needles = df.sparkSession.sparkContext.broadcast(needles)
 
     def run(batches):
-        nd = b_needles.value
-        k = len(nd)
-        for pdf in batches:
-            mask = []
-            for ev in pdf["encoded_vars"]:
-                j = 0
-                for x in ev:
-                    if j < k and int(x) in nd[j]:
-                        j += 1
-                mask.append(j == k)
-            yield pdf[pd.Series(mask, index=pdf.index)]
+        import pyarrow as pa
 
-    return df.mapInPandas(run, schema=out_schema)
+        forget_zip_importers()
+        nd = b_needles.value
+        for rb in batches:
+            ev = rb.column("encoded_vars")
+            mask = _var_order_mask(
+                ev.offsets.to_numpy(zero_copy_only=False),
+                ev.values.to_numpy(zero_copy_only=False),
+                nd,
+            )
+            if mask.any():
+                yield rb.filter(pa.array(mask))
+
+    return df.mapInArrow(run, schema=df.schema)
+
+
+def _var_order_mask(offsets, flat, needles) -> np.ndarray:
+    """Per row of a list column (`offsets` into `flat`): does the row
+    hold one value of each needle, in needle order? Greedy like a
+    scalar scan: each row's cursor jumps to the first value at or after
+    it that the next needle accepts, and the row keeps iff every jump
+    lands inside the row."""
+    m = len(flat)
+    cur = np.asarray(offsets[:-1], np.int64)
+    end = np.asarray(offsets[1:], np.int64)
+    keep = np.ones(len(cur), bool)
+    pos = np.arange(m + 1, dtype=np.int64)
+    for nd in needles:
+        hit = np.append(np.isin(flat, nd), True)
+        # first accepted index at or after i; m when there is none
+        nxt = np.minimum.accumulate(np.where(hit, pos, m)[::-1])[::-1]
+        found = nxt[cur]
+        keep &= found < end
+        cur = np.minimum(found + 1, m)
+    return keep
 
 
 def _empty_like(df, dicts: ArchiveDicts, decode, text_col):

@@ -7,10 +7,25 @@ how many the cluster has. At production scale (TBs → thousands of
 splits) the guard is a no-op; it only repartitions when the scan
 delivers fewer splits than the cluster has cores, so it never adds a
 shuffle to a job that is already parallel.
+
+`forget_zip_importers` removes a per-task cost of PySpark's Python
+worker. Before every task, `pyspark/worker_util.py::setup_spark_files`
+calls `importlib.invalidate_caches()`, and on CPython 3.11 every
+`zipimporter` in `sys.path_importer_cache` then re-reads its archive's
+whole central directory (`lib/python3.11/zipimport.py:329-333`). A warm
+worker holds a dozen entries into `pyspark.zip` and two into the Spark
+core jar, about 0.24 s of re-reading per task on a reused worker.
+Dropping those entries is safe: the next import that needs the path
+rebuilds its importer through `sys.path_hooks`, and modules already
+loaded keep their own `__loader__`. The hot Arrow kernels call it at the
+start of each invocation, after PySpark's own per-task imports have run,
+so the worker's next `invalidate_caches()` walks only `FileFinder`s.
 """
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame
@@ -38,6 +53,16 @@ class LruCache(OrderedDict):
         self.move_to_end(key)
         while len(self) > self.maxsize:
             self.popitem(last=False)
+
+
+def forget_zip_importers() -> None:
+    """Drop every `zipimporter` from `sys.path_importer_cache` (see the
+    module docstring). Costs microseconds; a no-op where nothing is
+    imported from a zip."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
