@@ -8,7 +8,7 @@ column. Here the index is a tiny parquet file inside the archive
 directory, derived from the already-persisted schema tree, and the
 consumer is `search_archives_kql` — federated KQL over many archive
 dirs with index-based archive pruning (the JSON-side twin of the text
-engine's federated `search_archives`, search/sinks.py:305).
+engine's federated `search/sinks.py::search_archives`).
 
 Pruning is EXISTENCE-based and conservative, hence always exact: an
 archive is skipped only when some field the query REQUIRES (present in

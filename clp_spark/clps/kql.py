@@ -34,11 +34,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from clp_spark.clps.encoder import JsonArchive
-from clp_spark.clps.search import (
-    _has_wildcard as _has_wc,
-    json_predicate,
-    schema_candidates,
-)
+from clp_spark.clps.search import json_predicate, schema_candidates
+from clp_spark.search.wildcard import has_wildcard
 
 _TOKEN_RE = re.compile(
     r"""\s*(?:
@@ -214,7 +211,7 @@ class _Parser:
                         if self.ignore_case
                         else (value, v)
                     )
-                    if _has_wc(val):
+                    if has_wildcard(val):
                         return wildcard_match(val, vv)
                     return vv == val
                 return v == value

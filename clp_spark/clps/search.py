@@ -17,7 +17,10 @@ Float EQ *and* ranges run as long compares on the order-preserving key
 String EQ resolves VarStrings through the var dictionary and ClpStrings
 through logtype+vars equality — encoding is injective, so no
 decode-confirm stage is needed for exact matches. A wildcard string
-value scans the dictionaries (imprecise-var analog) for VarStrings.
+value scans the dictionaries (imprecise-var analog) for VarStrings; for
+ClpStrings it compiles like a text query and goes through the same
+branch algebra (CompiledQuery.fold via executor.id_condition), spelled
+as SQL over one jvals element.
 """
 
 from __future__ import annotations
@@ -39,7 +42,8 @@ from clp_spark.clps.encoder import (
 )
 from clp_spark.config import VT_DICT
 from clp_spark.parse.tokenizer import parse_one
-from clp_spark.search.wildcard import wildcard_to_regex
+from clp_spark.search.executor import IdConds, id_condition
+from clp_spark.search.wildcard import has_wildcard, wildcard_to_regex
 
 _CMP = {"lt": "<", "gt": ">", "lte": "<=", "gte": ">=", "eq": "="}
 
@@ -70,7 +74,7 @@ def _path_matcher(pattern: str):
 
 
 def _nodes_for_path(archive: JsonArchive, path: str, tags=None) -> list[int]:
-    wild = path == "*" or _has_wildcard(path)
+    wild = path == "*" or has_wildcard(path)
     if archive.node_map is not None:
         if not wild:
             return sorted(
@@ -270,18 +274,6 @@ def _has_path_pred(archive: JsonArchive, path: str) -> Column:
     )
 
 
-def _has_wildcard(s: str) -> bool:
-    i = 0
-    while i < len(s):
-        if s[i] == "\\":
-            i += 2
-            continue
-        if s[i] in ("*", "?"):
-            return True
-        i += 1
-    return False
-
-
 # above this many '['-prefixed dictionary values, the array dictionary
 # is not collected to the driver: evaluation distributes over the dict
 # frame instead (slow-but-exact, never silent misses — the var dict is
@@ -336,7 +328,7 @@ def _eval_array_value(v, toks, i, op, value, ignore_case) -> bool:
         if op != "eq" or not isinstance(value, str):
             return False
         a, b = (value.lower(), v.lower()) if ignore_case else (value, v)
-        return wildcard_match(a, b) if _has_wildcard(a) else a == b
+        return wildcard_match(a, b) if has_wildcard(a) else a == b
     if v is None:
         return op == "eq" and value is None
     return False
@@ -449,7 +441,7 @@ def _array_preds(
     QueryRunner.cpp:541-565). Only exact (non-wildcard) paths."""
     preds: list[Column] = []
     all_nodes: list[int] = []
-    if path == "*" or _has_wildcard(path):
+    if path == "*" or has_wildcard(path):
         return preds, all_nodes
     parts = path.split(".")
     for cut in range(1, len(parts) + 1):
@@ -466,69 +458,22 @@ def _array_preds(
     return preds, all_nodes
 
 
-def _clps_token_cond(tp, idx, ignore_case: bool):
-    """One compiled query token → SQL condition over a jvals element
-    `x` (ClpString layout: x.enc = logtype id, x.vars = per-slot dict
-    var ids / encoded values). Mirrors executor._token_pred's branch
-    algebra: None ⇒ unconstrained, False ⇒ infeasible. Slot positions
-    are not pinned (arrays_overlap/array_contains) — a sound superset;
-    the decode-confirm stage restores exactness."""
-    from clp_spark.config import PLACEHOLDER_FLOAT, PLACEHOLDER_INT
-    from clp_spark.search.executor import _MAX_ISIN_IDS
-
-    lt_ids: set = set()
-    conds: list[str] = []
-    for br in tp.branches:
-        k = br.kind
-        if k == "any":
-            return None
-        if k == "logtype":
-            ids = idx.logtype_ids(br.pattern, ignore_case)
-            if ids is None:
-                return None
-            lt_ids |= ids
-        elif k in ("enc_int", "enc_float"):
-            ids = idx.lt_with_placeholder(
-                PLACEHOLDER_INT if k == "enc_int" else PLACEHOLDER_FLOAT
-            )
-            if ids is None:
-                return None
-            lt_ids |= ids
-        elif k == "enc":
-            conds.append(f"array_contains(x.vars, {int(br.value)}L)")
-        elif k == "dictvar":
-            if _has_wildcard(br.pattern):
-                ids = idx.var_ids(br.pattern, ignore_case)
-            else:
-                ids = idx.var_ids_exact(br.pattern, ignore_case)
-            if ids is None:
-                return None
-            if ids:
-                body = ",".join(f"{int(i)}L" for i in sorted(ids))
-                conds.append(f"arrays_overlap(x.vars, array({body}))")
-        elif k == "split":
-            sub: list[str] = []
-            dead = False
-            for part in br.parts:
-                c = _clps_token_cond(part, idx, ignore_case)
-                if c is False:
-                    dead = True
-                    break
-                if c is not None:
-                    sub.append(c)
-            if dead:
-                continue  # this split interpretation is impossible
-            if not sub:
-                return None
-            conds.append(" AND ".join(f"({c})" for c in sub))
-    if lt_ids:
-        if len(lt_ids) > _MAX_ISIN_IDS:
-            return None
-        body = ",".join(str(int(i)) for i in sorted(lt_ids))
-        conds.append(f"x.enc IN ({body})")
-    if not conds:
-        return False
-    return " OR ".join(f"({c})" for c in conds)
+# the ClpString filter's spelling of the compiled query: SQL over one
+# jvals element `x` (x.enc = logtype id, x.vars = per-slot dict var ids /
+# encoded values). Slot positions are not pinned (arrays_overlap /
+# array_contains) — a sound superset; the decode-confirm stage restores
+# exactness.
+_JVAL_CONDS = IdConds(
+    enc=lambda v: f"array_contains(x.vars, {int(v)}L)",
+    var_in=lambda ids: "arrays_overlap(x.vars, array({}))".format(
+        ",".join(f"{int(i)}L" for i in sorted(ids))
+    ),
+    lt_in=lambda ids: "x.enc IN ({})".format(
+        ",".join(str(int(i)) for i in sorted(ids))
+    ),
+    any_of=lambda cs: " OR ".join(f"({c})" for c in cs),
+    all_of=lambda cs: " AND ".join(f"({c})" for c in cs),
+)
 
 
 def _clpstr_wildcard_pred(
@@ -552,15 +497,9 @@ def _clpstr_wildcard_pred(
     if cq.match_all:
         return _exists_pred(cnodes, None)
 
-    idx = archive.dict_index
-    elem_conds: list[str] = []
-    for tp in cq.tokens:
-        c = _clps_token_cond(tp, idx, ignore_case)
-        if c is False:
-            return F.lit(False)  # some token has no feasible encoding
-        if c is not None:
-            elem_conds.append(c)
-    value_pred = " AND ".join(f"({c})" for c in elem_conds) or None
+    value_pred = id_condition(cq, archive.dict_index, _JVAL_CONDS)
+    if value_pred is False:
+        return F.lit(False)  # some token has no feasible encoding
 
     # decode-confirm: per-archive dictionaries are CLP-small by design;
     # above the cap, per-archive federation bounds each dict (the same
@@ -695,7 +634,7 @@ def json_predicate(
     elif isinstance(value, str):
         if op != "eq":
             raise NotImplementedError("string range comparisons: v1 scope")
-        if _has_wildcard(value):
+        if has_wildcard(value):
             # imprecise var: wildcard scan of the var dictionary
             # (DictionaryReader.hpp:274-290 analog for VarStrings)
             rx = wildcard_to_regex(value, ignore_case)

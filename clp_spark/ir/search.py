@@ -28,8 +28,8 @@ range-index filters are archive-only and raise here.
 from __future__ import annotations
 
 from clp_spark.clps.kql import _Parser, _tokenize
-from clp_spark.clps.search import _eval_array_value, _has_wildcard
-from clp_spark.search.wildcard import wildcard_match, wildcard_to_regex
+from clp_spark.clps.search import _eval_array_value
+from clp_spark.search.wildcard import has_wildcard, wildcard_match, wildcard_to_regex
 
 _MISSING = object()
 
@@ -85,7 +85,7 @@ def _match_scalar(v, op: str, value, ignore_case: bool) -> bool:
         if op != "eq" or not isinstance(value, str):
             return False
         a, b = (value.lower(), v.lower()) if ignore_case else (value, v)
-        return wildcard_match(a, b) if _has_wildcard(a) else a == b
+        return wildcard_match(a, b) if has_wildcard(a) else a == b
     return False  # dict (empty-object leaf) matches nothing but exists
 
 
@@ -112,7 +112,7 @@ def compile_condition(path: str, op: str, value, ignore_case: bool):
         return star
 
     toks = path.split(".")
-    wild = _has_wildcard(path)
+    wild = has_wildcard(path)
     # path tokens match case-SENSITIVELY even under -i, like the
     # archive's _path_matcher (only value comparisons fold case)
     rxs = [wildcard_to_regex(t) for t in toks] if wild else None

@@ -85,8 +85,8 @@ def _rewrite_filtered(man_dir: str, keep_mask_fn) -> None:
 def _rewrite_filtered_spark(spark, man_dir: str, dead: set) -> None:
     """Distributed manifest rewrite: anti-join against the (tiny) dead
     (sink_id, seg_id) set, preserve the var_id range-partitioned sort
-    and its parquet bloom (the pruning layout sink_manifests documents,
-    pipeline.py _w_var)."""
+    and its parquet bloom (the pruning layout of
+    pipeline.write_var_manifest)."""
     import pyspark.sql.functions as F
 
     df = spark.read.parquet(man_dir)
@@ -306,8 +306,8 @@ def expire_segments(
         # segments + logtype manifests are CLP-small by design (driver-
         # written at compress time); the VAR manifest is the one that can
         # outgrow the driver at 100 TB (same reason search has the
-        # semi-join fallback, search/sinks.py:35) — rewrite it with a
-        # distributed filter when a session is available
+        # semi-join fallback, sinks._prune_units_distributed) — rewrite
+        # it with a distributed filter when a session is available
         if name == "var" and spark is not None:
             _rewrite_filtered_spark(spark, man, dead)
         else:

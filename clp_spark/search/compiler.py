@@ -34,11 +34,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from clp_spark.config import (
-    PLACEHOLDER_DICT,
-    PLACEHOLDER_FLOAT,
-    PLACEHOLDER_INT,
-)
 from clp_spark.oracle.tokenizer import encode_float, encode_int, is_delim
 from clp_spark.parse.tokenizer import _ESC_TRANS  # same escaping as compression
 
@@ -96,6 +91,48 @@ class CompiledQuery:
     ordered_vars: list[tuple] = field(default_factory=list)
     # full wildcard pattern for the final confirm on decoded text
     confirm_pattern: str = "*"
+
+    def fold(self, leaf, any_of, all_of):
+        """Evaluate the AND-of-ORs: the one reading of the compiled tree
+        that the row prefilter, segment pruning, archive planning and
+        the clp_s ClpString filter share.
+
+        `leaf(branch)` maps a branch that is neither 'any' nor 'split'
+        to a value, None (unconstrained) or False (infeasible).
+        `any_of(values)` combines a token's live branches, `all_of(values)`
+        a split's parts or the query's tokens; each gets a non-empty
+        list in query order and may itself return None. The rules:
+          - an 'any' or None branch makes its token None;
+          - False branches drop out; a token with nothing left is False;
+          - a False part or token makes its AND False;
+          - None parts drop out; an AND with nothing left is None.
+        A token stops at its first None branch and an AND at its first
+        False part, so no leaf is asked what the result cannot use.
+        Returns None for a match-all query (no tokens)."""
+
+        def token(tp: TokenPred):
+            live = []
+            for br in tp.branches:
+                if br.kind == "any":
+                    return None
+                v = conj(br.parts) if br.kind == "split" else leaf(br)
+                if v is None:
+                    return None
+                if v is not False:
+                    live.append(v)
+            return any_of(live) if live else False
+
+        def conj(tps):
+            vals = []
+            for tp in tps:
+                v = token(tp)
+                if v is False:
+                    return False
+                if v is not None:
+                    vals.append(v)
+            return all_of(vals) if vals else None
+
+        return conj(self.tokens)
 
 
 def _scan(query: str):
@@ -330,10 +367,3 @@ def _escape_for_pattern(text: str) -> str:
     placeholder bytes and backslashes: ir/parsing.inc)."""
     return _wc_escape(text.translate(_ESC_TRANS))
 
-
-# placeholder byte exports for the executor's imprecise-var branches
-PLACEHOLDERS = {
-    "enc_int": PLACEHOLDER_INT,
-    "enc_float": PLACEHOLDER_FLOAT,
-    "dict": PLACEHOLDER_DICT,
-}

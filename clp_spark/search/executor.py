@@ -10,7 +10,10 @@ Query.hpp:103-121,168-241):
       the logtype dictionary (DictionaryReader.hpp:274-290), var-ID sets
       from exact/wildcard var-dict scans → arrays_overlap, exact int/float
       encodings → array_contains. An infeasible token (dictionary miss)
-      ⇒ empty result with no data scan;
+      ⇒ empty result with no data scan. The branch algebra (what
+      'any', 'split' and an infeasible branch mean) lives once, in
+      CompiledQuery.fold; `id_condition` supplies its leaves and
+      combiners, and the clp_s ClpString filter reuses it;
   (4) decode only surviving rows and wildcard-confirm them in the same
       Arrow pass (Grep.cpp:115-132): the decode kernel runs the confirm
       as an RE2 regex (wildcard.wildcard_to_re2) and returns only hits.
@@ -34,15 +37,17 @@ from __future__ import annotations
 
 import operator
 from functools import cached_property, reduce
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from clp_spark.config import PLACEHOLDER_FLOAT, PLACEHOLDER_INT
-from clp_spark.search.compiler import CompiledQuery, TokenPred, compile_query
+from clp_spark.search.compiler import CompiledQuery, compile_query
 from clp_spark.search.decode import decode_prepared, decode_tables
 from clp_spark.search.wildcard import (
+    has_wildcard,
     wildcard_to_java_regex,
     wildcard_to_re2,
     wildcard_to_regex,
@@ -112,64 +117,75 @@ class _SparkDictIndex:
     process to hold them (DictionaryReader.hpp:241-290), and SURVEY
     §2.3 prescribes the fallback shape: filter the dict FRAME
     (`var_dict.filter(value rlike ...)`) and prune on the surviving
-    IDs. Each pattern here becomes exactly that — a column-pruned scan
-    over the dict parquet executed once and memoized; the bounded
-    matching-ID set (≤ _MAX_ISIN_IDS, else unconstrained — the same
-    degrade rule as the driver index) then feeds the same
-    IN/arrays_overlap predicates, so stages 2–3 keep pruning above
-    _MAX_DRIVER_DICT_ROWS instead of silently falling back to
-    decode-everything + confirm. Duck-type-compatible with _DictIndex.
-    """
+    IDs. Each question here becomes exactly that (`_dict_cond`) — a
+    column-pruned scan over the dict parquet executed once and
+    memoized; the bounded matching-ID set (≤ _MAX_ISIN_IDS, else
+    unconstrained — the same degrade rule as the driver index) then
+    feeds the same IN/arrays_overlap predicates, so stages 2–3 keep
+    pruning above _MAX_DRIVER_DICT_ROWS instead of silently falling
+    back to decode-everything + confirm. Duck-type-compatible with
+    _DictIndex. lt_with_placeholder is capped too: a truncated set
+    would let the segment pruner drop units that match via an
+    uncollected template."""
 
     def __init__(self, lt_df: DataFrame, var_df: DataFrame):
-        self.lt_df = lt_df
-        self.var_df = var_df
+        self.frames = {"logtype_id": lt_df, "var_id": var_df}
         self._cache: dict = {}
 
-    def _ids(self, key, df, id_col: str, cond: Column):
+    def _ids(self, key):
         if key not in self._cache:
+            id_col, cond = _dict_cond(key)
             rows = (
-                df.filter(cond).select(id_col).limit(_MAX_ISIN_IDS + 1).collect()
+                self.frames[id_col].filter(cond).select(id_col)
+                .limit(_MAX_ISIN_IDS + 1).collect()
             )
             ids = {r[id_col] for r in rows}
             self._cache[key] = None if len(ids) > _MAX_ISIN_IDS else ids
         return self._cache[key]
 
-    def _rlike(self, col: str, pattern: str, ignore_case: bool) -> Column:
-        jrx = wildcard_to_java_regex(pattern, ignore_case)
-        return F.col(col).rlike("\\A(?:" + jrx + ")\\z")
-
     def logtype_ids(self, pattern: str, ignore_case: bool):
-        return self._ids(
-            ("lt", pattern, ignore_case),
-            self.lt_df,
-            "logtype_id",
-            self._rlike("logtype", pattern, ignore_case),
-        )
+        return self._ids(("lt", pattern, ignore_case))
 
     def var_ids_exact(self, text: str, ignore_case: bool):
-        cond = (
-            F.lower(F.col("value")) == F.lit(text.lower())
-            if ignore_case
-            else F.col("value") == F.lit(text)
-        )
-        return self._ids(("vx", text, ignore_case), self.var_df, "var_id", cond)
+        return self._ids(("vx", text, ignore_case))
 
     def var_ids(self, pattern: str, ignore_case: bool):
-        return self._ids(
-            ("vw", pattern, ignore_case),
-            self.var_df,
-            "var_id",
-            self._rlike("value", pattern, ignore_case),
-        )
+        return self._ids(("vw", pattern, ignore_case))
 
     def lt_with_placeholder(self, ph: str):
-        """None when over the ID cap (the caller degrades that branch to
-        unconstrained) — a truncated set would let the segment pruner
-        drop units that match via an uncollected template."""
-        return self._ids(
-            ("ph", ph), self.lt_df, "logtype_id", F.col("logtype").contains(ph)
-        )
+        return self._ids(("ph", ph))
+
+
+class _DictProbes(_SparkDictIndex):
+    """A dictionary index that records each question instead of
+    answering it: the key stands in for the ID set, and `probes` maps
+    every key asked, in order, to its (ID column, condition). The
+    archive planner (sinks.plan_archives) scans all archives'
+    dictionaries once with one hit column per probe."""
+
+    def __init__(self):
+        self.probes: dict = {}
+
+    def _ids(self, key):
+        if key not in self.probes:
+            self.probes[key] = _dict_cond(key)
+        return key
+
+
+def _dict_cond(key) -> tuple[str, Column]:
+    """(ID column, Column over that dictionary frame's rows) for one
+    dictionary question, keyed as _SparkDictIndex asks it."""
+    kind = key[0]
+    if kind == "ph":
+        return "logtype_id", F.col("logtype").contains(key[1])
+    text, ignore_case = key[1], key[2]
+    if kind == "vx":
+        if ignore_case:
+            return "var_id", F.lower(F.col("value")) == F.lit(text.lower())
+        return "var_id", F.col("value") == F.lit(text)
+    id_col, col = ("logtype_id", "logtype") if kind == "lt" else ("var_id", "value")
+    jrx = wildcard_to_java_regex(text, ignore_case)
+    return id_col, F.col(col).rlike("\\A(?:" + jrx + ")\\z")
 
 
 def _collect_capped(df: DataFrame, id_col: str, text_col: str, cap: int):
@@ -250,19 +266,6 @@ class ArchiveDicts:
         )
 
 
-def _has_meta(pattern: str) -> bool:
-    i, n = 0, len(pattern)
-    while i < n:
-        c = pattern[i]
-        if c == "\\" and i + 1 < n:
-            i += 2
-            continue
-        if c in ("*", "?"):
-            return True
-        i += 1
-    return False
-
-
 def _id_set_pred(col: str, ids, overlap: bool) -> Column:
     """Membership predicate for an int ID set, built as ONE SQL string.
 
@@ -289,7 +292,7 @@ def _branch_ids(br, idx: _DictIndex, ignore_case: bool) -> tuple[str, set] | Non
         ph = PLACEHOLDER_INT if k == "enc_int" else PLACEHOLDER_FLOAT
         return _ids_or_none("logtype_id", idx.lt_with_placeholder(ph))
     if k == "dictvar":
-        match = idx.var_ids if _has_meta(br.pattern) else idx.var_ids_exact
+        match = idx.var_ids if has_wildcard(br.pattern) else idx.var_ids_exact
         return _ids_or_none("var_id", match(br.pattern, ignore_case))
     return None
 
@@ -298,47 +301,56 @@ def _ids_or_none(col: str, ids) -> tuple[str, set] | None:
     return None if ids is None else (col, ids)
 
 
-def _token_pred(tp: TokenPred, idx: _DictIndex, ignore_case: bool):
-    """One token's OR-of-branches → Column | None (unconstrained) |
-    False (infeasible ⇒ whole query is empty)."""
-    lt_ids: set = set()
-    conds: list[Column] = []
-    for br in tp.branches:
-        k = br.kind
-        if k == "any":
+class IdConds(NamedTuple):
+    """How a condition over a message's encoded IDs is spelled: the row
+    prefilter builds Columns over the sink table (_ROW_CONDS), the clp_s
+    ClpString filter SQL strings over one jvals element."""
+
+    enc: Callable      # exact int/float encoding → "vars hold it"
+    var_in: Callable   # var-ID set → "vars overlap it"
+    lt_in: Callable    # logtype-ID set → "template is one of them"
+    any_of: Callable   # [cond, ...] → OR
+    all_of: Callable   # [cond, ...] → AND
+
+
+_ROW_CONDS = IdConds(
+    enc=lambda v: F.array_contains("encoded_vars", F.lit(int(v))),
+    var_in=lambda ids: _id_set_pred("dict_var_ids", ids, overlap=True),
+    lt_in=lambda ids: _id_set_pred("logtype_id", ids, overlap=False),
+    any_of=lambda cs: reduce(operator.or_, cs),
+    all_of=lambda cs: reduce(operator.and_, cs),
+)
+
+
+def id_condition(cq: CompiledQuery, idx: _DictIndex, conds: IdConds):
+    """The compiled query as one condition over encoded IDs (stages
+    2+3), or None (unconstrained) or False (infeasible ⇒ no row can
+    match). Leaves: an exact encoding must be in the vars, a dictvar's
+    candidate var IDs must overlap them; a token's candidate logtype
+    IDs merge into one membership test after its other conditions, and
+    a merged set over _MAX_ISIN_IDS leaves the token unconstrained."""
+
+    def leaf(br):
+        if br.kind == "enc":
+            return conds.enc(br.value)
+        r = _branch_ids(br, idx, cq.ignore_case)
+        if r is None:
             return None
-        if k == "enc":
-            conds.append(F.array_contains("encoded_vars", F.lit(int(br.value))))
-        elif k == "split":
-            sub: list[Column] = []
-            dead = False
-            for part in br.parts:
-                p = _token_pred(part, idx, ignore_case)
-                if p is False:
-                    dead = True
-                    break
-                if p is not None:
-                    sub.append(p)
-            if dead:
-                continue  # this split interpretation is impossible
-            if not sub:
-                return None  # split interpretation is unconstrained
-            conds.append(reduce(operator.and_, sub))
-        else:
-            r = _branch_ids(br, idx, ignore_case)
-            if r is None:
+        col, ids = r
+        if not ids:
+            return False
+        return ids if col == "logtype_id" else conds.var_in(ids)
+
+    def any_of(vals):
+        lt = set().union(*(v for v in vals if isinstance(v, set)))
+        out = [v for v in vals if not isinstance(v, set)]
+        if lt:
+            if len(lt) > _MAX_ISIN_IDS:
                 return None
-            if r[0] == "logtype_id":
-                lt_ids |= r[1]
-            elif r[1]:
-                conds.append(_id_set_pred("dict_var_ids", r[1], overlap=True))
-    if lt_ids:
-        if len(lt_ids) > _MAX_ISIN_IDS:
-            return None
-        conds.append(_id_set_pred("logtype_id", lt_ids, overlap=False))
-    if not conds:
-        return False
-    return reduce(operator.or_, conds)
+            out.append(conds.lt_in(lt))
+        return conds.any_of(out)
+
+    return cq.fold(leaf, any_of, conds.all_of)
 
 
 def search(
@@ -403,18 +415,14 @@ def run_search(
     if cq.match_all:
         return dicts.decode(df, text_col) if decode else df
 
-    # (2+3) dictionary pushdown: one Catalyst predicate per token, ANDed
-    # into one filter (one plan analysis per query, not one per token)
+    # (2+3) dictionary pushdown: the token predicates ANDed into one
+    # filter (one plan analysis per query, not one per token)
     idx = dicts.index
-    preds: list[Column] = []
-    for tp in cq.tokens:
-        p = _token_pred(tp, idx, cq.ignore_case)
-        if p is False:
-            return _empty_like(df, dicts, decode, text_col)
-        if p is not None:
-            preds.append(p)
-    if preds:
-        df = df.filter(reduce(operator.and_, preds))
+    pred = id_condition(cq, idx, _ROW_CONDS)
+    if pred is False:
+        return _empty_like(df, dicts, decode, text_col)
+    if pred is not None:
+        df = df.filter(pred)
 
     # (3b) optional refinement: query vars must appear IN ORDER as a
     # subsequence of the message's encoded vars (Query.hpp:245-270).

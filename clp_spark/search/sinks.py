@@ -13,14 +13,17 @@ var_id) — plus a segment zone map (sink_id, seg_id, rows
 evaluated per segment: a segment survives a token iff some branch
 could hold there — its candidate logtype IDs or var IDs appear in the
 segment's manifest, or the branch is un-indexable (exact int/float
-encodings, 'any'). A timestamp range additionally drops segments whose
-zone-map [ts_min, ts_max] doesn't overlap it. Segments failing any
-stage are dropped with a partition predicate over (sink_id, seg_id),
-which prunes whole partition directories from the parquet scan before
-a single data row is read. Pruning is a superset (never drops a
-matching segment); the row-level prefilter + decode-confirm stages
-then run as usual. Manifests from older archives without seg_id
-degrade gracefully to sink-level pruning.
+encodings, 'any'). The branch algebra is CompiledQuery.fold
+(search/compiler.py): here its leaves are unit sets (or manifest
+frames above the driver cap), and plan_archives folds booleans per
+archive over one batched dictionary scan. A timestamp range
+additionally drops segments whose zone-map [ts_min, ts_max] doesn't
+overlap it. Segments failing any stage are dropped with a partition
+predicate over (sink_id, seg_id), which prunes whole partition
+directories from the parquet scan before a single data row is read.
+Pruning is a superset (never drops a matching segment); the row-level
+prefilter + decode-confirm stages then run as usual. Manifests from
+older archives without seg_id degrade gracefully to sink-level pruning.
 
 An archive is opened once (`open_archive`), as CLP loads an archive's
 dictionaries and segment indexes once and answers every later query
@@ -40,17 +43,16 @@ from __future__ import annotations
 
 import datetime
 import os
-from functools import cached_property
+from functools import cached_property, reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from clp_spark.config import PLACEHOLDER_FLOAT, PLACEHOLDER_INT
-from clp_spark.search.compiler import CompiledQuery, TokenPred, compile_query
+from clp_spark.search.compiler import CompiledQuery, compile_query
 from clp_spark.search.executor import (
     ArchiveDicts,
     _branch_ids,
     _DictIndex,
-    _has_meta,
+    _DictProbes,
     run_search,
 )
 from clp_spark.util import LruCache
@@ -242,33 +244,21 @@ def _collect_pairs(df: DataFrame, key: str) -> tuple[dict, set] | None:
     return out, all_units
 
 
-def _token_units(
-    tp: TokenPred, idx: _DictIndex, ignore_case: bool,
-    lt_units: dict, var_units: dict | None,
-) -> set | None:
-    """Prune units where this token could match; None = all units."""
-    out: set = set()
-    for br in tp.branches:
-        if br.kind == "split":
-            # split = AND of parts → intersection; part None ⇒ no info
-            acc: set | None = None
-            for part in br.parts:
-                s = _token_units(part, idx, ignore_case, lt_units, var_units)
-                if s is None:
-                    continue
-                acc = s if acc is None else (acc & s)
-            if acc is None:
-                return None
-            out |= acc
-            continue
-        # 'any' / 'enc': encoded int/float values are not segment-indexed
-        r = _branch_ids(br, idx, ignore_case)
-        units = lt_units if r and r[0] == "logtype_id" else var_units
-        if r is None or units is None:
+def _unit_leaf(cq: CompiledQuery, idx: _DictIndex, manifests: dict, units_of):
+    """Segment-pruning leaf: the prune units that hold a candidate ID of
+    the branch, `units_of(manifest, id_col, ids)` over the manifest of
+    its dictionary ("logtype_id" | "var_id" → manifest, None = absent).
+    None when the branch is not indexable (exact int/float encodings
+    are not segment-indexed) or its manifest is absent."""
+
+    def leaf(br):
+        r = _branch_ids(br, idx, cq.ignore_case)
+        man = None if r is None else manifests[r[0]]
+        if man is None:
             return None
-        for i in r[1]:
-            out |= units.get(i, set())
-    return out
+        return units_of(man, r[0], r[1]) if r[1] else False
+
+    return leaf
 
 
 def _prune_from_pairs(
@@ -279,65 +269,17 @@ def _prune_from_pairs(
     unit_cols: list[str],
 ) -> tuple[list, list[str]] | None:
     """(surviving prune units, unit column names) from already-collected
-    manifest maps; None = cannot prune."""
+    manifest maps; None = cannot prune. A token's branches union their
+    units, splits and tokens intersect them."""
     if cq.match_all or idx is None or lt is None:
         return None
-    lt_units, _ = lt
-    var_units = var[0] if var is not None else None
-    surviving: set | None = None
-    for tp in cq.tokens:
-        s = _token_units(tp, idx, cq.ignore_case, lt_units, var_units)
-        if s is None:
-            continue
-        surviving = s if surviving is None else (surviving & s)
-    return None if surviving is None else (sorted(surviving), unit_cols)
-
-
-def _ids_filter(df: DataFrame, col: str, ids) -> DataFrame:
-    """df rows whose `col` is in the (driver-side, capped at
-    _MAX_ISIN_IDS by the dict index) candidate ID set — one SQL IN."""
-    if not ids:
-        return df.limit(0)
-    return df.filter(f"{col} IN ({_int_list(ids)})")
-
-
-def _token_units_df(
-    tp: TokenPred,
-    idx: _DictIndex,
-    ignore_case: bool,
-    lt_man: DataFrame,
-    var_man: DataFrame | None,
-    unit_cols: list[str],
-) -> DataFrame | None:
-    """Distributed twin of _token_units: a DataFrame of prune units where
-    this token could match; None = unconstrained. Candidate dictionary
-    IDs still come from the driver-side dict index (CLP's model — dicts
-    are small by design), but the manifest membership runs as filters +
-    semi-joins, so the manifests never have to fit on the driver."""
-    parts: list[DataFrame] = []
-    for br in tp.branches:
-        if br.kind == "split":
-            acc: DataFrame | None = None
-            for part in br.parts:
-                s = _token_units_df(part, idx, ignore_case, lt_man, var_man, unit_cols)
-                if s is None:
-                    continue
-                acc = s if acc is None else acc.join(s, unit_cols, "left_semi")
-            if acc is None:
-                return None
-            parts.append(acc)
-            continue
-        r = _branch_ids(br, idx, ignore_case)
-        man = lt_man if r and r[0] == "logtype_id" else var_man
-        if r is None or man is None:
-            return None
-        parts.append(_ids_filter(man, r[0], r[1]).select(*unit_cols))
-    if not parts:
-        return lt_man.select(*unit_cols).limit(0)  # token infeasible
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct()
+    manifests = {"logtype_id": lt[0], "var_id": None if var is None else var[0]}
+    leaf = _unit_leaf(
+        cq, idx, manifests,
+        lambda m, _col, ids: set().union(*(m.get(i, ()) for i in ids)),
+    )
+    s = cq.fold(leaf, lambda ss: set().union(*ss), lambda ss: set.intersection(*ss))
+    return None if s is None else (sorted(s or ()), unit_cols)
 
 
 def _prune_units_distributed(
@@ -347,19 +289,24 @@ def _prune_units_distributed(
     var_man: DataFrame | None,
     unit_cols: list[str],
 ) -> DataFrame | None:
-    """Distributed twin of _prune_from_pairs: intersect the per-token
-    surviving-unit frames with semi-joins. None = cannot prune."""
+    """Distributed twin of _prune_from_pairs: a DataFrame of surviving
+    prune units; None = cannot prune. Candidate dictionary IDs still
+    come from the driver-side dict index (CLP's model — dicts are small
+    by design), but manifest membership runs as one SQL IN per leaf,
+    branches union and splits/tokens semi-join, so the manifests never
+    have to fit on the driver."""
     if cq.match_all or idx is None:
         return None
-    surviving: DataFrame | None = None
-    for tp in cq.tokens:
-        s = _token_units_df(tp, idx, cq.ignore_case, lt_man, var_man, unit_cols)
-        if s is None:
-            continue
-        surviving = s if surviving is None else surviving.join(
-            s, unit_cols, "left_semi"
-        )
-    return surviving
+    leaf = _unit_leaf(
+        cq, idx, {"logtype_id": lt_man, "var_id": var_man},
+        lambda m, col, ids: m.filter(f"{col} IN ({_int_list(ids)})").select(*unit_cols),
+    )
+    out = cq.fold(
+        leaf,
+        lambda dfs: reduce(DataFrame.unionByName, dfs).distinct(),
+        lambda dfs: reduce(lambda a, b: a.join(b, unit_cols, "left_semi"), dfs),
+    )
+    return lt_man.select(*unit_cols).limit(0) if out is False else out
 
 
 def unit_filter(units: list, unit_cols: list[str]) -> str:
@@ -457,100 +404,6 @@ def surviving_unit_filter(
     return unit_filter(sorted(units), unit_cols), not units
 
 
-def _plan_probes(cq: CompiledQuery):
-    """Compile the query's tokens into archive-level existence probes.
-
-    Returns (lt_conds, var_conds, tokens_req) where lt_conds/var_conds
-    are Columns over the logtype/var dict schemas (probe i hits an
-    archive iff any dict row satisfies cond i) and tokens_req is, per
-    token, the list of branch requirement trees:
-      None                -> branch unconstrained (token can't prune)
-      ("lt"|"var", pid)   -> branch needs that probe to hit
-      ("and", [trees])    -> split: every constrained part must hit
-    """
-    from clp_spark.search.wildcard import wildcard_to_java_regex
-
-    lt_conds: list = []
-    var_conds: list = []
-    lt_ids: dict = {}
-    var_ids: dict = {}
-
-    def lt_probe(key, cond):
-        if key not in lt_ids:
-            lt_ids[key] = len(lt_conds)
-            lt_conds.append(cond)
-        return ("lt", lt_ids[key])
-
-    def var_probe(key, cond):
-        if key not in var_ids:
-            var_ids[key] = len(var_conds)
-            var_conds.append(cond)
-        return ("var", var_ids[key])
-
-    def branch_tree(br):
-        k = br.kind
-        if k in ("any", "enc"):
-            return None  # not archive-indexable: cannot prune via dicts
-        if k == "logtype":
-            jrx = wildcard_to_java_regex(br.pattern, cq.ignore_case)
-            return lt_probe(
-                ("lt", br.pattern),
-                F.col("logtype").rlike("\\A(?:" + jrx + ")\\z"),
-            )
-        if k in ("enc_int", "enc_float"):
-            ph = PLACEHOLDER_INT if k == "enc_int" else PLACEHOLDER_FLOAT
-            return lt_probe(("ph", ph), F.col("logtype").contains(ph))
-        if k == "dictvar":
-            if _has_meta(br.pattern):
-                jrx = wildcard_to_java_regex(br.pattern, cq.ignore_case)
-                cond = F.col("value").rlike("\\A(?:" + jrx + ")\\z")
-            elif cq.ignore_case:
-                cond = F.lower(F.col("value")) == F.lit(br.pattern.lower())
-            else:
-                cond = F.col("value") == F.lit(br.pattern)
-            return var_probe(("var", br.pattern), cond)
-        if k == "split":
-            parts = [t for p in br.parts for t in _token_trees(p)]
-            constrained = [t for t in parts if t is not None]
-            if not constrained:
-                return None
-            return ("and", constrained)
-        return None
-
-    def _token_trees(tp):
-        # a token part inside a split is itself a TokenPred (OR of
-        # branches); at archive level OR-of-branches collapses to: the
-        # part is satisfied if ANY branch tree is satisfiable. For the
-        # AND above we conservatively require only parts whose EVERY
-        # branch is constrained (else the part can't prune).
-        trees = [branch_tree(b) for b in tp.branches]
-        if any(t is None for t in trees):
-            return [None]
-        if len(trees) == 1:
-            return trees
-        return [("or", trees)]
-
-    tokens_req = []
-    for tp in cq.tokens:
-        tokens_req.append([branch_tree(br) for br in tp.branches])
-    return lt_conds, var_conds, tokens_req
-
-
-def _eval_tree(tree, lt_hits: set, var_hits: set) -> bool:
-    if tree is None:
-        return True
-    op = tree[0]
-    if op == "lt":
-        return tree[1] in lt_hits
-    if op == "var":
-        return tree[1] in var_hits
-    if op == "and":
-        return all(_eval_tree(t, lt_hits, var_hits) for t in tree[1])
-    if op == "or":
-        return any(_eval_tree(t, lt_hits, var_hits) for t in tree[1])
-    return True
-
-
 def _norm_file_uri(p: str) -> str:
     from urllib.parse import unquote, urlparse
 
@@ -583,29 +436,38 @@ def plan_archives(
     if cq.match_all and ts_range is None:
         return list(out_dirs)
 
-    lt_conds, var_conds, tokens_req = (
-        _plan_probes(cq) if not cq.match_all else ([], [], [])
-    )
+    # each dictionary question a verdict can ask becomes one hit column
+    # (the fold asks the same questions per archive, and never more)
+    dict_probes = _DictProbes()
 
-    def _agg_hits(sub: str, conds: list, tag: str):
+    def probe(br):
+        r = _branch_ids(br, dict_probes, cq.ignore_case)
+        return None if r is None else r[1]
+
+    cq.fold(probe, any, all)
+    probes = list(dict_probes.probes.items())
+
+    def _agg_hits(sub: str, id_col: str):
         paths = [
             os.path.join(d, "dicts", sub)
             for d in out_dirs
             if os.path.isdir(os.path.join(d, "dicts", sub))
         ]
-        if not conds or not paths:
+        aggs = [
+            F.max(cond.cast("int")).alias(f"h{i}")
+            for i, (_key, (col, cond)) in enumerate(probes)
+            if col == id_col
+        ]
+        if not aggs or not paths:
             return None
         df = spark.read.parquet(*paths).withColumn(
             "_arch",
             F.regexp_extract(F.input_file_name(), f"(.*)/dicts/{sub}/[^/]+$", 1),
         )
-        aggs = [
-            F.max(c.cast("int")).alias(f"{tag}{i}") for i, c in enumerate(conds)
-        ]
         return df.groupBy("_arch").agg(*aggs)
 
-    lt_agg = _agg_hits("logtype", lt_conds, "l")
-    var_agg = _agg_hits("var", var_conds, "v")
+    lt_agg = _agg_hits("logtype", "logtype_id")
+    var_agg = _agg_hits("var", "var_id")
 
     ts_agg = None
     if ts_range is not None:
@@ -664,17 +526,15 @@ def plan_archives(
             survivors.append(d)  # nothing readable to prune on: keep
             continue
         rd = r.asDict()
-        lt_hits = {
-            i for i in range(len(lt_conds)) if (rd.get(f"l{i}") or 0) >= 1
+        hits = {
+            key for i, (key, _) in enumerate(probes) if (rd.get(f"h{i}") or 0) >= 1
         }
-        var_hits = {
-            i for i in range(len(var_conds)) if (rd.get(f"v{i}") or 0) >= 1
-        }
-        alive = True
-        for trees in tokens_req:
-            if not any(_eval_tree(t, lt_hits, var_hits) for t in trees):
-                alive = False
-                break
+
+        def hit(br):
+            key = probe(br)
+            return None if key is None else key in hits
+
+        alive = cq.fold(hit, any, all) is not False
         if alive and ts_agg is not None and (rd.get("_prunable") or 0) >= 1:
             alive = (rd.get("_alive") or 0) >= 1
         if alive:

@@ -109,3 +109,17 @@ def _re2_literal(c: str, ignore_case: bool) -> str:
 def wildcard_match(pattern: str, text: str, ignore_case: bool = False) -> bool:
     """Whole-string wildcard match (oracle-side helper)."""
     return wildcard_to_regex(pattern, ignore_case).fullmatch(text) is not None
+
+
+def has_wildcard(pattern: str) -> bool:
+    """Does the pattern hold an unescaped `*` or `?`?"""
+    i, n = 0, len(pattern)
+    while i < n:
+        c = pattern[i]
+        if c == "\\":
+            i += 2
+            continue
+        if c in ("*", "?"):
+            return True
+        i += 1
+    return False

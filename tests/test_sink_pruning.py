@@ -481,3 +481,50 @@ def test_null_ts_bounds_segment_survives_zone_map(spark, tmp_path):
     units = set(r[0])
     # the known-range segment is pruned; the NULL-bounds one survives
     assert (0, 0) not in units and (0, 1) in units
+
+
+@pytest.mark.parametrize("ignore_case", [False, True])
+def test_pruning_over_fuzz_corpus(spark, compressed, pages_pdf, ignore_case):
+    """Every query shape the compiler emits — `?`-splits, case flips,
+    numeric pieces, cut tokens — through segment pruning and archive
+    planning: the collected and distributed pruners keep the same
+    units, every unit holding a raw-text hit survives, and an archive
+    plan_archives drops has no hits."""
+    from test_search_fuzz import _gen_queries
+
+    from clp_spark.search import sinks as S
+
+    out, res = compressed
+    arch = open_archive(spark, out)
+    idx = arch.dicts.index
+    lt_man = spark.read.parquet(res["sink_manifest"] + "/logtype")
+    var_man = spark.read.parquet(res["sink_manifest"] + "/var")
+    unit_of = {
+        r["url"]: (r["sink_id"], r["seg_id"])
+        for r in spark.read.parquet(res["sinks"])
+        .select("url", "sink_id", "seg_id").collect()
+    }
+    texts = dict(zip(pages_pdf["url"], pages_pdf["text"]))
+    bad = []
+    for q in _gen_queries(texts, n=30):
+        cq = compile_query(q, ignore_case=ignore_case)
+        units, _units_df, _cols = _surviving_units(arch, cq, None, "warc_ts")
+        dist_df = S._prune_units_distributed(
+            cq, idx, lt_man, var_man, ["sink_id", "seg_id"]
+        )
+        dist = None if dist_df is None else {
+            (r["sink_id"], r["seg_id"]) for r in dist_df.collect()
+        }
+        if units != dist:
+            bad.append((q, "collected != distributed"))
+        hit_units = {
+            unit_of[u]
+            for u, t in texts.items()
+            if wildcard_match("*" + q + "*", t, ignore_case)
+        }
+        if units is not None and not hit_units <= units:
+            bad.append((q, "hit unit pruned", sorted(hit_units - units)[:3]))
+        if not S.plan_archives(spark, [out], q, ignore_case=ignore_case):
+            if search_sinks(spark, out, q, ignore_case=ignore_case).count():
+                bad.append((q, "dropped archive has hits"))
+    assert not bad, bad
